@@ -146,6 +146,12 @@ def test_unranked_probe_is_bare_candidates_no_python(
     got = {(r.query_id, r.neighbor_id) for r in cand.collect()}
     ref = {(r.query_id, r.neighbor_id) for r in ranked.collect()}
     assert got == ref and got
+    # an empty request batch keeps the same schema as a full one
+    for ranked_, full in ((False, cand), (True, ranked)):
+        empty = ivf_pq_index_topk(
+            spark, path, q.filter(F.lit(False)), ranked=ranked_
+        )
+        assert empty.dtypes == full.dtypes and empty.count() == 0
 
 
 def test_collect_query_batch_guard(spark):
@@ -161,6 +167,35 @@ def test_collect_query_batch_guard(spark):
         raise AssertionError("guard did not fire")
     except ValueError as err:
         assert "max_rows" in str(err)
+
+
+def test_precollected_q_rows_are_size_guarded(spark, tmp_path_factory):
+    """A caller-collected ``q_rows`` batch goes through the same
+    MAX_QUERY_BATCH_ROWS guard as the internal collect."""
+    import pytest
+
+    from trisk_datawrangle_spark.llm.similarity import (
+        MAX_QUERY_BATCH_ROWS,
+        ivf_topk,
+        rescore_topk,
+    )
+
+    path = str(tmp_path_factory.mktemp("pqidx_guard")) + "/idx"
+    e = _embs(spark)
+    q = e.filter(F.col("vec_id") < 3)
+    write_ivf_pq_index(e, path, n_cells=8, m=8)
+    cand = ivf_pq_index_topk(spark, path, q, ranked=False)
+    too_many = q.collect()[:1] * (MAX_QUERY_BATCH_ROWS + 1)
+    for probe in (
+        lambda: ivf_pq_index_topk(spark, path, q, q_rows=too_many),
+        lambda: rescore_topk(cand, e, q, q_rows=too_many),
+        lambda: ivf_topk(
+            e, q, centroids=load_ivf_pq_model(spark, path)[0],
+            q_rows=too_many,
+        ),
+    ):
+        with pytest.raises(ValueError, match="max_rows"):
+            probe()
 
 
 def test_model_memo_arrays_are_frozen(spark, tmp_path_factory):

@@ -202,6 +202,23 @@ def test_full_workflow(spark, staged_dirs):
     assert_fk(abcd, scen, {"ald_business_unit": "ald_business_unit"})
 
 
+def test_workflow_without_carbon(spark, staged_dirs, tmp_path, capsys):
+    """Every stage but ``carbon``: ngfs_carbon_price is an optional
+    read, so trisk_v2 assembles without carbon prices and verify_fk
+    skips that one audit instead of failing on the missing table."""
+    inp, _ = staged_dirs
+    out = str(tmp_path / "no_carbon")
+    for stage in ALL_STAGES:
+        if stage != "carbon":
+            run_stage(spark, stage, inp, out, start_year=2022, time_horizon=3)
+
+    scen_data = spark.read.parquet(f"{out}/scenarios_data.parquet")
+    assert "carbon_tax" not in scen_data.columns and scen_data.count() > 0
+    err = capsys.readouterr().err
+    assert "[verify_fk] scen -> ngfs_carbon_price: skipped" in err
+    assert "[verify_fk] scen.year -> price_data_long.year" in err
+
+
 def test_cli_arg_validation():
     from trisk_datawrangle_spark.run_workflow import main
 

@@ -217,8 +217,8 @@ def ivf_pq_index_topk(
     mid-call. ``q_rows`` (r13): a caller chaining this probe with an
     exact rescore can pass the already-collected request batch so the
     serving pipeline pays ONE query-collect job, not one per stage;
-    when omitted the collect is size-guarded (advice item) so a
-    corpus-sized frame fails loudly instead of OOMing the driver."""
+    either way the batch is size-guarded so a corpus-sized batch
+    fails loudly instead of OOMing the driver."""
     import numpy as np
 
     from trisk_datawrangle_spark.llm.similarity import collect_query_batch
@@ -226,18 +226,17 @@ def ivf_pq_index_topk(
     path = resolve_index_path(spark, path)
     cent, books = load_ivf_pq_model(spark, path)
     n_probe = min(n_probe, len(cent))
-    qrows = (
-        collect_query_batch(
-            queries, id_col, vec_col, caller="ivf_pq_index_topk"
-        )
-        if q_rows is None
-        else q_rows
+    qrows = collect_query_batch(
+        queries, id_col, vec_col, caller="ivf_pq_index_topk", rows=q_rows
     )
     if not qrows:
-        # empty request batch: typed empty result, no index read (the
-        # numpy probe below would die on a zero-row matrix)
+        # empty request batch: typed empty result of the same schema
+        # as a non-empty one, no index read (the numpy probe below
+        # would die on a zero-row matrix)
         return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
+            [],
+            "query_id long, neighbor_id long"
+            + (", cosine double, rank int" if ranked else ""),
         )
     qmat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
     qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)

@@ -213,6 +213,7 @@ def collect_query_batch(
     vec_col: str,
     max_rows: int = MAX_QUERY_BATCH_ROWS,
     caller: str = "collect_query_batch",
+    rows: list | None = None,
 ) -> list:
     """Collect a request-sized query batch ``(id, vec)`` with a size
     guard — ONE plain collect job (a ``limit`` would route through
@@ -222,8 +223,10 @@ def collect_query_batch(
     after the collect, and the catastrophic case (a frame several GB
     over the cap) is already aborted cleanly by
     ``spark.driver.maxResultSize`` (1 GB default) before the driver
-    can OOM, with an error naming that knob."""
-    rows = queries.select(id_col, vec_col).collect()
+    can OOM, with an error naming that knob. ``rows``: a batch the
+    caller already collected — checked, not collected again."""
+    if rows is None:
+        rows = queries.select(id_col, vec_col).collect()
     if len(rows) > max_rows:
         raise ValueError(
             f"{caller}: query batch exceeds max_rows={max_rows}; this "
@@ -496,12 +499,11 @@ def ivf_topk(
     sc = corpus.sparkSession.sparkContext
     cent = np.asarray(centroids, dtype=np.float64)
 
-    if q_rows is None:
-        # size-guarded collect (r13, advice item): a corpus-sized
-        # query frame must fail loudly, not OOM the driver
-        q_rows = collect_query_batch(
-            queries, id_col, vec_col, caller="ivf_topk"
-        )
+    # size-guarded: a corpus-sized query frame or precollected batch
+    # must fail loudly, not OOM the driver
+    q_rows = collect_query_batch(
+        queries, id_col, vec_col, caller="ivf_topk", rows=q_rows
+    )
     if not q_rows:
         # empty request batch: typed empty result (the numpy probe
         # below would die on a zero-row matrix; the old join-based
@@ -969,14 +971,13 @@ def rescore_topk(
     import numpy as np
     import pandas as pd
 
-    if q_rows is None:
-        # size-guarded collect (r13, advice item): callers that
-        # already collected the request batch (the persisted-index
-        # serving path probes with the same rows) pass it through —
-        # one collect job per probe, not one per stage
-        q_rows = collect_query_batch(
-            queries, id_col, vec_col, caller="rescore_topk"
-        )
+    # size-guarded collect: callers that already collected the
+    # request batch (the persisted-index serving path probes with the
+    # same rows) pass it through — one collect job per probe, not one
+    # per stage — and it is guarded all the same
+    q_rows = collect_query_batch(
+        queries, id_col, vec_col, caller="rescore_topk", rows=q_rows
+    )
     if not q_rows:
         # inner-join semantics vs an empty query batch: empty result
         return corpus.sparkSession.createDataFrame(

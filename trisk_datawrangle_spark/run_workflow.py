@@ -11,56 +11,209 @@ Usage (also via ``python -m trisk_datawrangle_spark``)::
         --output-dir /data/canonical \
         --stages scenarios,capacity_factors,prices,carbon,abcd,financial,trisk_v2
 
-Expected inputs (parquet, FIXTURES.md shapes) per stage:
-
-==================  ===============================================
-stage               reads (from --input-dir unless noted)
-==================  ===============================================
-scenarios           scenario_analysis_input, sector_tech_lookup,
-                    scenario_types
-capacity_factors    capacity_factors_raw
-prices              price_raw
-carbon              ngfs_carbon_price_raw
-abcd                company_activities, company_emissions
-financial           eikon_data, ownership_tree,
-                    + abcd output (companies)
-trisk_v2            all prior outputs
-==================  ===============================================
-
-Outputs are written partitioned where downstream reads prune
-(scenario for pathway-shaped tables — SURVEY.md §4).
+Each stage is one row of :data:`_STAGES`: the tables it reads from
+``--input-dir`` (FIXTURES.md shapes) or from earlier stages'
+``--output-dir``, its build function, and the tables it writes —
+partitioned where downstream reads prune (scenario for pathway-shaped
+tables — SURVEY.md §4).
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+import typing
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from trisk_datawrangle_spark import plans
+from trisk_datawrangle_spark.operators.quality import assert_fk, fk_orphans
 from trisk_datawrangle_spark.session import get_spark
 
-ALL_STAGES = (
-    "scenarios",
-    "capacity_factors",
-    "prices",
-    "carbon",
-    "abcd",
-    "financial",
-    "trisk_v2",
-    "verify_fk",
-)
+
+class _Read(typing.NamedTuple):
+    """A table a stage reads, from ``dir`` "input" (--input-dir) or
+    "output" (an earlier stage's table in --output-dir). An
+    ``optional`` table that was never written reads as None."""
+
+    table: str
+    dir: str = "input"
+    optional: bool = False
 
 
-def _read(spark: SparkSession, base: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{base}/{name}.parquet")
+def _out(table: str, optional: bool = False) -> _Read:
+    return _Read(table, "output", optional)
 
 
-def _write(df: DataFrame, base: str, name: str, partition_by=None) -> None:
-    from trisk_datawrangle_spark.sources.readers import write_output
+class _Stage(typing.NamedTuple):
+    #: build keyword -> table read, in read order
+    reads: dict[str, _Read]
+    #: (**frames, start_year, time_horizon) -> {table: DataFrame}
+    build: typing.Callable[..., dict[str, DataFrame]]
+    #: table written -> partition_by, in write order
+    writes: dict[str, list[str] | None]
+    #: orphan-count audits run after the writes, one stderr line per
+    #: ref: (child read, parent read, [(child col, parent col)])
+    audits: tuple = ()
 
-    write_output(df, f"{base}/{name}.parquet", partition_by=partition_by)
+
+def _scenarios(raw, lookup, types, start_year, **_):
+    kinds = types.select("scenario", "scenario_type").collect()
+    baseline, shock = (
+        [r["scenario"] for r in kinds if r["scenario_type"] == kind]
+        for kind in ("baseline", "shock")
+    )
+    out = plans.prepare_scenarios_analysis_input(
+        {"all": raw}, lookup, baseline, shock, start_year=start_year
+    )
+    out = plans.scenarios.assert_all_classified(out)
+    return {"Scenarios_AnalysisInput": out}
+
+
+def _capacity_factors(raw, **_):
+    cf = plans.capacity_factors
+    out = cf.validate(
+        cf.clone_missing_technologies(cf.prepare_capacity_factors(raw))
+    )
+    return {"prewrangled_capacity_factors": out}
+
+
+def _prices(raw, start_year, time_horizon):
+    out = plans.prepare_price_data_long(
+        raw, horizon_end=start_year + max(time_horizon, 30)
+    )
+    return {"price_data_long": out}
+
+
+def _carbon(raw, **_):
+    return {"ngfs_carbon_price": plans.prepare_ngfs_carbon_price(raw)}
+
+
+def _abcd(activities, emissions, start_year, time_horizon):
+    out = plans.prepare_abcd_data(
+        activities, emissions, start_year=start_year, time_horizon=time_horizon
+    )
+    keys = ["company_id", "ald_business_unit", "ald_production_unit"]
+    return {"abcd_stress_test_input": plans.first_year_positive(out, keys)}
+
+
+def _financial(eikon, tree, abcd, **_):
+    companies = abcd.select("company_id", "ald_sector")
+    out = plans.prepare_financial_data(eikon, companies, tree)
+    return {"prewrangled_financial_data_stress_test": out}
+
+
+def _trisk_v2(scen, prices, cf, abcd, fin, carbon, **_):
+    if carbon is None:
+        print(
+            "ngfs_carbon_price not found — assembling without "
+            "carbon prices",
+            file=sys.stderr,
+        )
+    scen, prices, cf = plans.align_to_common_scenarios(scen, prices, cf)
+    return {
+        "assets_data": plans.assemble_assets_data(abcd, fin),
+        "scenarios_data": plans.assemble_scenarios_data(
+            scen, cf, prices, carbon
+        ),
+    }
+
+
+def _verify_fk(scen, abcd, fin, **_):
+    # The referential-integrity gate the reference's dbml declares
+    # but never runs (data-raw/outputs_structure.dbml:69-107).
+    # HARD gates (raise) on the join-safety invariants the assembly
+    # relies on; the row's AUDITS (orphan counts to stderr) cover the
+    # lookup-coverage Refs, which legitimately report gaps when a
+    # source ships partial coverage.
+    assert_fk(abcd, fin, ["company_id"])
+    for ccol, pcol in (
+        ("year", "year"),
+        ("ald_sector", "ald_sector"),
+        ("ald_business_unit", "ald_business_unit"),
+    ):
+        assert_fk(abcd, scen, {ccol: pcol})
+    return {}
+
+
+_STAGES: dict[str, _Stage] = {
+    "scenarios": _Stage(
+        {"raw": _Read("scenario_analysis_input"),
+         "lookup": _Read("sector_tech_lookup"),
+         "types": _Read("scenario_types")},
+        _scenarios, {"Scenarios_AnalysisInput": ["scenario"]},
+    ),
+    "capacity_factors": _Stage(
+        {"raw": _Read("capacity_factors_raw")}, _capacity_factors,
+        {"prewrangled_capacity_factors": ["scenario"]},
+    ),
+    "prices": _Stage(
+        {"raw": _Read("price_raw")}, _prices,
+        {"price_data_long": ["scenario"]},
+    ),
+    "carbon": _Stage(
+        {"raw": _Read("ngfs_carbon_price_raw")}, _carbon,
+        {"ngfs_carbon_price": None},
+    ),
+    "abcd": _Stage(
+        {"activities": _Read("company_activities"),
+         "emissions": _Read("company_emissions")},
+        _abcd, {"abcd_stress_test_input": None},
+    ),
+    "financial": _Stage(
+        {"eikon": _Read("eikon_data"), "tree": _Read("ownership_tree"),
+         "abcd": _out("abcd_stress_test_input")},
+        _financial, {"prewrangled_financial_data_stress_test": None},
+    ),
+    "trisk_v2": _Stage(
+        {"scen": _out("Scenarios_AnalysisInput"),
+         "prices": _out("price_data_long"),
+         "cf": _out("prewrangled_capacity_factors"),
+         "abcd": _out("abcd_stress_test_input"),
+         "fin": _out("prewrangled_financial_data_stress_test"),
+         "carbon": _out("ngfs_carbon_price", optional=True)},
+        _trisk_v2, {"assets_data": None, "scenarios_data": ["scenario"]},
+    ),
+    "verify_fk": _Stage(
+        {"scen": _out("Scenarios_AnalysisInput"),
+         "abcd": _out("abcd_stress_test_input"),
+         "fin": _out("prewrangled_financial_data_stress_test"),
+         "price_data_long": _out("price_data_long"),
+         "ngfs_carbon_price": _out("ngfs_carbon_price", optional=True),
+         "prewrangled_capacity_factors": _out("prewrangled_capacity_factors")},
+        _verify_fk, {},
+        audits=(
+            ("abcd", "scen",
+             [("ald_production_unit", "units"),
+              ("scenario_geography", "scenario_geography")]),
+            ("scen", "price_data_long",
+             [("year", "year"), ("scenario", "scenario"),
+              ("scenario_geography", "scenario_geography"),
+              ("ald_sector", "sector"), ("units", "unit")]),
+            ("scen", "ngfs_carbon_price",
+             [("year", "year"), ("scenario", "scenario"),
+              ("scenario_geography", "scenario_geography")]),
+            ("scen", "prewrangled_capacity_factors",
+             [("year", "year"), ("scenario", "scenario"),
+              ("scenario_geography", "scenario_geography"),
+              ("ald_business_unit", "ald_business_unit")]),
+        ),
+    ),
+}
+
+ALL_STAGES = tuple(_STAGES)
+
+
+def _read(spark: SparkSession, base: str, read: _Read) -> DataFrame | None:
+    try:
+        return spark.read.parquet(f"{base}/{read.table}.parquet")
+    except AnalysisException as ex:
+        # only "never written" may degrade to None; a corrupt or
+        # unreadable table must fail loudly, not silently drop out
+        if read.optional and "PATH_NOT_FOUND" in str(ex):
+            return None
+        raise
 
 
 def run_stage(
@@ -71,196 +224,40 @@ def run_stage(
     start_year: int,
     time_horizon: int,
 ) -> None:
-    if stage == "scenarios":
-        from trisk_datawrangle_spark.plans.scenarios import (
-            assert_all_classified,
-            prepare_scenarios_analysis_input,
-        )
+    if stage not in _STAGES:
+        raise ValueError(f"unknown stage {stage!r}")
+    # looked up at call time, so a wrapped write_output is honoured
+    from trisk_datawrangle_spark.sources import readers
 
-        raw = _read(spark, input_dir, "scenario_analysis_input")
-        lookup = _read(spark, input_dir, "sector_tech_lookup")
-        types = _read(spark, input_dir, "scenario_types")
-        baseline = [
-            r["scenario"]
-            for r in types.filter(F.col("scenario_type") == "baseline").collect()
-        ]
-        shock = [
-            r["scenario"]
-            for r in types.filter(F.col("scenario_type") == "shock").collect()
-        ]
-        out = prepare_scenarios_analysis_input(
-            {"all": raw}, lookup, baseline, shock, start_year=start_year
+    row = _STAGES[stage]
+    dirs = {"input": input_dir, "output": output_dir}
+    frames = {
+        key: _read(spark, dirs[r.dir], r) for key, r in row.reads.items()
+    }
+    built = row.build(
+        **frames, start_year=start_year, time_horizon=time_horizon
+    )
+    for table, partition_by in row.writes.items():
+        readers.write_output(
+            built[table],
+            f"{output_dir}/{table}.parquet",
+            partition_by=partition_by,
         )
-        _write(
-            assert_all_classified(out),
-            output_dir,
-            "Scenarios_AnalysisInput",
-            partition_by=["scenario"],
-        )
-    elif stage == "capacity_factors":
-        from trisk_datawrangle_spark.plans.capacity_factors import (
-            clone_missing_technologies,
-            prepare_capacity_factors,
-            validate,
-        )
-
-        raw = _read(spark, input_dir, "capacity_factors_raw")
-        out = validate(
-            clone_missing_technologies(prepare_capacity_factors(raw))
-        )
-        _write(
-            out,
-            output_dir,
-            "prewrangled_capacity_factors",
-            partition_by=["scenario"],
-        )
-    elif stage == "prices":
-        from trisk_datawrangle_spark.plans.prices import (
-            prepare_price_data_long,
-        )
-
-        raw = _read(spark, input_dir, "price_raw")
-        out = prepare_price_data_long(
-            raw, horizon_end=start_year + max(time_horizon, 30)
-        )
-        _write(out, output_dir, "price_data_long", partition_by=["scenario"])
-    elif stage == "carbon":
-        from trisk_datawrangle_spark.plans.prices import (
-            prepare_ngfs_carbon_price,
-        )
-
-        raw = _read(spark, input_dir, "ngfs_carbon_price_raw")
-        _write(
-            prepare_ngfs_carbon_price(raw), output_dir, "ngfs_carbon_price"
-        )
-    elif stage == "abcd":
-        from trisk_datawrangle_spark.plans.abcd import (
-            first_year_positive,
-            prepare_abcd_data,
-        )
-
-        activities = _read(spark, input_dir, "company_activities")
-        emissions = _read(spark, input_dir, "company_emissions")
-        out = first_year_positive(
-            prepare_abcd_data(
-                activities,
-                emissions,
-                start_year=start_year,
-                time_horizon=time_horizon,
-            ),
-            ["company_id", "ald_business_unit", "ald_production_unit"],
-        )
-        _write(out, output_dir, "abcd_stress_test_input")
-    elif stage == "financial":
-        from trisk_datawrangle_spark.plans.financial import (
-            prepare_financial_data,
-        )
-
-        eikon = _read(spark, input_dir, "eikon_data")
-        tree = _read(spark, input_dir, "ownership_tree")
-        companies = _read(spark, output_dir, "abcd_stress_test_input").select(
-            "company_id", "ald_sector"
-        )
-        _write(
-            prepare_financial_data(eikon, companies, tree),
-            output_dir,
-            "prewrangled_financial_data_stress_test",
-        )
-    elif stage == "trisk_v2":
-        from trisk_datawrangle_spark.plans.trisk_v2 import (
-            align_to_common_scenarios,
-            assemble_assets_data,
-            assemble_scenarios_data,
-        )
-
-        scen = _read(spark, output_dir, "Scenarios_AnalysisInput")
-        prices = _read(spark, output_dir, "price_data_long")
-        cf = _read(spark, output_dir, "prewrangled_capacity_factors")
-        abcd = _read(spark, output_dir, "abcd_stress_test_input")
-        fin = _read(
-            spark, output_dir, "prewrangled_financial_data_stress_test"
-        )
-        # only "the carbon stage was never run" may degrade to None;
-        # a corrupt/unreadable table must fail loudly, not silently
-        # drop carbon prices from the assembled output
-        from pyspark.errors import AnalysisException
-
-        try:
-            carbon = _read(spark, output_dir, "ngfs_carbon_price")
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
+    for child, parent, refs in row.audits:
+        if frames[parent] is None:
             print(
-                "ngfs_carbon_price not found — assembling without "
-                "carbon prices",
+                f"[{stage}] {child} -> {parent}: skipped, "
+                f"{row.reads[parent].table} not found",
                 file=sys.stderr,
             )
-            carbon = None
-        scen, prices, cf = align_to_common_scenarios(scen, prices, cf)
-        _write(
-            assemble_assets_data(abcd, fin), output_dir, "assets_data"
-        )
-        _write(
-            assemble_scenarios_data(scen, cf, prices, carbon),
-            output_dir,
-            "scenarios_data",
-            partition_by=["scenario"],
-        )
-    elif stage == "verify_fk":
-        # The referential-integrity gate the reference's dbml declares
-        # but never runs (data-raw/outputs_structure.dbml:69-107).
-        # HARD gates (raise) on the join-safety invariants the
-        # assembly relies on; AUDIT lines (orphan counts to stderr)
-        # for the lookup-coverage Refs, which legitimately report
-        # gaps when a source ships partial coverage.
-        from trisk_datawrangle_spark.operators.quality import (
-            assert_fk,
-            fk_orphans,
-        )
-
-        scen = _read(spark, output_dir, "Scenarios_AnalysisInput")
-        abcd = _read(spark, output_dir, "abcd_stress_test_input")
-        fin = _read(
-            spark, output_dir, "prewrangled_financial_data_stress_test"
-        )
-        prices = _read(spark, output_dir, "price_data_long")
-        carbon = _read(spark, output_dir, "ngfs_carbon_price")
-        cf = _read(spark, output_dir, "prewrangled_capacity_factors")
-
-        assert_fk(abcd, fin, ["company_id"])
-        for ccol, pcol in (
-            ("year", "year"),
-            ("ald_sector", "ald_sector"),
-            ("ald_business_unit", "ald_business_unit"),
-        ):
-            assert_fk(abcd, scen, {ccol: pcol})
-
-        audits = [
-            ("abcd", abcd, "scen", scen,
-             [("ald_production_unit", "units"),
-              ("scenario_geography", "scenario_geography")]),
-            ("scen", scen, "price_data_long", prices,
-             [("year", "year"), ("scenario", "scenario"),
-              ("scenario_geography", "scenario_geography"),
-              ("ald_sector", "sector"), ("units", "unit")]),
-            ("scen", scen, "ngfs_carbon_price", carbon,
-             [("year", "year"), ("scenario", "scenario"),
-              ("scenario_geography", "scenario_geography")]),
-            ("scen", scen, "prewrangled_capacity_factors", cf,
-             [("year", "year"), ("scenario", "scenario"),
-              ("scenario_geography", "scenario_geography"),
-              ("ald_business_unit", "ald_business_unit")]),
-        ]
-        for cname, child, pname, parent, refs in audits:
-            for ccol, pcol in refs:
-                n = fk_orphans(child, parent, {ccol: pcol}).count()
-                print(
-                    f"[verify_fk] {cname}.{ccol} -> {pname}.{pcol}: "
-                    f"{n} orphan keys",
-                    file=sys.stderr,
-                )
-    else:
-        raise ValueError(f"unknown stage {stage!r}")
+            continue
+        for ccol, pcol in refs:
+            n = fk_orphans(frames[child], frames[parent], {ccol: pcol}).count()
+            print(
+                f"[{stage}] {child}.{ccol} -> {parent}.{pcol}: "
+                f"{n} orphan keys",
+                file=sys.stderr,
+            )
 
 
 def main(argv: list[str] | None = None) -> int:
