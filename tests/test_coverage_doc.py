@@ -14,8 +14,6 @@ callables.
 
 import os
 
-import pytest
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -48,19 +46,34 @@ def test_every_catalog_entry_named_in_survey_or_coverage():
     assert not missing, f"entries unnamed in any audit doc: {missing}"
 
 
-def test_bench_headline_entries_exist():
-    """bench.py's HEADLINE list must name real catalog entries — a
-    renamed entry would otherwise surface only as a per-query bench
-    error at round end."""
-    import importlib.util
+def _readme_section(text, heading):
+    """The body of README.md's ``## heading`` section."""
+    start = text.index(f"## {heading}\n")
+    end = text.find("\n## ", start + 1)
+    return text[start : end if end != -1 else len(text)]
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(REPO, "bench.py")
+
+def test_readme_names_only_existing_files():
+    """Every path in the first column of README.md's Layout table and
+    every ``python <file>`` in its Running block must exist — a
+    deleted harness would otherwise keep being advertised."""
+    import re
+
+    with open(os.path.join(REPO, "README.md")) as fh:
+        text = fh.read()
+
+    layout = _readme_section(text, "Layout")
+    named = [
+        p
+        for row in layout.splitlines()
+        if row.startswith("| `")
+        for p in re.findall(r"`([^`]+)`", row.split("|")[1])
+    ]
+    running = _readme_section(text, "Running")
+    named += re.findall(r"\bpython3?\s+(?!-)(\S+)", running)
+
+    assert named
+    missing = sorted(
+        p for p in named if not os.path.exists(os.path.join(REPO, p))
     )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    from trisk_datawrangle_spark.catalog import QUERIES
-
-    unknown = sorted(n for n in bench.HEADLINE if n not in QUERIES)
-    assert not unknown, f"bench HEADLINE names unknown entries: {unknown}"
+    assert not missing, f"README.md names files that do not exist: {missing}"

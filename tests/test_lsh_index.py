@@ -236,3 +236,28 @@ def test_relation_memo_identity_and_invalidation(spark, tmp_path_factory):
     _invalidate_index_relations(base)
     c = _read_index_table(spark, base, "bands")
     assert c is not a
+
+
+def test_relation_memo_evicts_least_recently_used(monkeypatch):
+    """A handle read again stays in the bounded memo while 63 newer
+    keys arrive; the handles nobody touched are evicted first. No
+    SparkSession: a stub stands in for ``spark.read.parquet``."""
+    from types import SimpleNamespace
+
+    from trisk_datawrangle_spark.llm import lsh_index
+
+    monkeypatch.setattr(lsh_index, "_RELATION_MEMO", {})
+    stub = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app"),
+        read=SimpleNamespace(parquet=lambda p: object()),
+    )
+    hot = lsh_index._read_index_table(stub, "/idx/hot", "bands")
+    for i in range(63):  # the memo is now full: 64 entries
+        lsh_index._read_index_table(stub, f"/idx/old{i}", "bands")
+    assert lsh_index._read_index_table(stub, "/idx/hot", "bands") is hot
+    for i in range(63):
+        lsh_index._read_index_table(stub, f"/idx/new{i}", "bands")
+    memo = lsh_index._RELATION_MEMO
+    assert len(memo) == 64
+    assert ("app", "/idx/hot/bands") in memo
+    assert not any(k[1].startswith("/idx/old") for k in memo)

@@ -1,7 +1,7 @@
 """llm/politeness.py — the sharded politeness scheduler: small-host
 invariance, mega-host shard spreading, delay-default semantics. The
-sf10-scale straggler measurement lives in
-scripts/bench_politeness_skew.py (BENCH_SKEW_r11)."""
+15M-row straggler measurement is round 11's, in git history (table in
+BASELINE.md)."""
 
 from __future__ import annotations
 

@@ -219,6 +219,23 @@ def test_workflow_without_carbon(spark, staged_dirs, tmp_path, capsys):
     assert "[verify_fk] scen.year -> price_data_long.year" in err
 
 
+def test_missing_required_read_names_stage_table_and_writer(
+    spark, staged_dirs, tmp_path
+):
+    """A stage run without the stage that writes one of its required
+    reads fails naming the running stage, the table and its writer."""
+    inp, _ = staged_dirs
+    with pytest.raises(FileNotFoundError) as ei:
+        run_stage(
+            spark, "financial", inp, str(tmp_path / "empty"),
+            start_year=2022, time_horizon=3,
+        )
+    msg = str(ei.value)
+    assert "'financial'" in msg
+    assert "abcd_stress_test_input" in msg
+    assert "'abcd'" in msg
+
+
 def test_cli_arg_validation():
     from trisk_datawrangle_spark.run_workflow import main
 

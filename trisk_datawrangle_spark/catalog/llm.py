@@ -3863,8 +3863,8 @@ def d13(spark, sf_dir):
 # calls it), so a SECOND process finds the published version instead
 # of rebuilding into a private tmpdir, and the serving entries
 # exercise the versioned-pointer read path end-to-end on every run.
-# In bench.py the cold pass absorbs the one-time build and every
-# warm pass measures the partition-pruned probe alone. Same hard
+# In a timed loop the cold pass absorbs the one-time build and
+# every warm pass measures the partition-pruned probe alone. Same hard
 # oracles as the lifecycle entries — the probe against a published
 # index must reproduce the inline derivation bit-for-bit, so a
 # stale/corrupt version can never pass silently.
@@ -8758,7 +8758,11 @@ def w5(spark, sf_dir):
     # 325 tasks per pass); the checkpoint truncates the plan to the
     # tiny frontier RDD. The '' drop lands HERE, where the predicate
     # has no lineage left to push into (see the note at the canon
-    # stage).
+    # stage). Being after the union, it also drops a sitemap
+    # discovery whose canonical URL is '' — the old pre-union filter
+    # kept such a row as a '' frontier entry. The fixture's robots
+    # Sitemap URLs all canonicalize non-empty, so the output (and the
+    # oracle hash) is unchanged.
     frontier = frontier.localCheckpoint(eager=True).where(
         F.col("canon") != ""
     )
@@ -8851,9 +8855,8 @@ def x57(spark, sf_dir):
     mega-host by path prefix before this window, which composes (the
     window key just gains the shard column) — factored as
     llm/politeness.py politeness_schedule(big_hosts=..., n_shards=..)
-    and MEASURED at 15M rows/50% hot-share in
-    scripts/bench_politeness_skew.py (BENCH_SKEW_r11, flat-vs-skew
-    table in BASELINE.md)."""
+    and MEASURED at 15M rows/50% hot-share in round 11 (skew bench
+    in git history; flat-vs-skew table in BASELINE.md)."""
     base = w5(spark, sf_dir).where(F.col("allowed"))
     h = F.regexp_extract(
         F.col("canon"), "^[a-z]+://host([0-9]+)", 1
@@ -8934,7 +8937,7 @@ def x58(spark, sf_dir):
     order flips the hash. Scale shape: one window over the deduped
     frontier partitioned by (h, shard) — measured at 15M rows /
     50% hot-share: flat pays 4.62x under skew, 16 shards recover to
-    1.49x, uniform corpora pay ~nothing (BENCH_SKEW_r11.json,
+    1.49x, uniform corpora pay ~nothing (round 11, in git history;
     BASELINE.md r11)."""
     from trisk_datawrangle_spark.llm.politeness import (
         politeness_schedule,

@@ -123,7 +123,10 @@ def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
     # series back onto a spine built from its own bounds aggregate —
     # without the cache each use duplicates the scan+join+agg subtree
     # (Spark's cache manager dedups by analyzed plan, so all catalog
-    # entries share one materialization per sf_dir)
+    # entries share one materialization per sf_dir). An eager
+    # localCheckpoint instead was measured and rejected in round 13
+    # (w8 0.85 → 1.48 s, w9 0.92 → 1.45 s): the chain is cheap to
+    # re-plan, so eager materialization costs more than truncation.
     return yearly_revenue_series(t["orders"], t["customer"]).cache()
 
 

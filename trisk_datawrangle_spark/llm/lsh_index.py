@@ -136,16 +136,17 @@ _RELATION_MEMO: dict = {}
 
 def _read_index_table(spark: SparkSession, path: str, table: str):
     key = (spark.sparkContext.applicationId, f"{path}/{table}")
-    df = _RELATION_MEMO.get(key)
+    df = _RELATION_MEMO.pop(key, None)
     if df is None:
         df = spark.read.parquet(f"{path}/{table}")
         # bound the memo (r13, advice item): a long-lived process
         # probing many distinct index paths must not grow it without
-        # limit — evict oldest-first (metadata handles, cheap to
-        # rebuild on a later re-probe)
+        # limit — evict least-recently-used first (metadata handles,
+        # cheap to rebuild on a later re-probe)
         while len(_RELATION_MEMO) >= 64:
             del _RELATION_MEMO[next(iter(_RELATION_MEMO))]
-        _RELATION_MEMO[key] = df
+    # (re-)set last: dict order is the recency order
+    _RELATION_MEMO[key] = df
     return df
 
 
@@ -309,12 +310,6 @@ def lsh_index_append(
         _invalidate_index_relations(path)
 
 
-#: r13 marker: the probe no longer pays a separate driver barrier to
-#: build the bands-read pruning predicate (scripts/explain_d13_jobs.py
-#: keys its barrier labels off this).
-_PROBE_FUSED = True
-
-
 def _pruned_bands_read(
     spark: SparkSession, path: str, probe_banded: DataFrame
 ) -> DataFrame:
@@ -381,6 +376,13 @@ def minhash_lsh_index_pairs(
     2. read index shingles pruned to that ishard set, semi-joined to
        candidate ids, exact-verify each side against its own array
        table (existing ids vs batch ids are disjoint, so no union).
+
+    The one collect is deliberate: a zero-collect variant that
+    DPP-prunes the shingles read too (one action, value-identical,
+    120/120 pairs) measured SLOWER in round 13 (3.05/3.11/3.62 vs
+    2.72/2.74/3.04 s sf0.1, alternating) — without the ishard-collect
+    barrier the candidate cache materializes under contention from
+    four consumer subtrees inside one action.
 
     The returned frame is locally checkpointed (self-contained), so
     the per-call caches are unpersisted before returning — a

@@ -10,7 +10,9 @@ a hash-partitioned window on the host key is the minimal plan. Its
 failure mode at crawl scale is the mega-host: real frontiers are
 zipfian (one host can own half the URLs), and a single window
 partition then serializes half the corpus through one task — the
-classic skew straggler, measured in scripts/bench_politeness_skew.py.
+classic skew straggler, measured in round 11 at 15M rows / 50%
+hot-share: the flat plan pays 4.62x under skew, 16 shards recover to
+1.49x (skew bench in git history; table in BASELINE.md).
 
 The composition: hosts KNOWN to be large (schedulers know their big
 hosts — budget tables are how per-host fetch capacity is assigned in
@@ -23,7 +25,7 @@ each individually honoring the crawl delay (that is what a
 proportional budget for a huge host MEANS; a host big enough to
 shard is big enough to absorb one connection per shard). Small hosts
 keep shard 0 and their schedule is IDENTICAL to the unsharded plan
-— the invariant the bench's correctness gate checks, not assumes.
+— the invariant tests/test_politeness.py checks, not assumes.
 """
 
 from __future__ import annotations

@@ -160,8 +160,9 @@ def load_ivf_pq_model(spark: SparkSession, path: str):
 
     path = resolve_index_path(spark, path)
     key = (spark.sparkContext.applicationId, path)
-    hit = _MODEL_MEMO.get(key)
+    hit = _MODEL_MEMO.pop(key, None)
     if hit is not None:
+        _MODEL_MEMO[key] = hit  # re-set: most recently used goes last
         return hit
     meta = read_index_meta(spark, path)
     # the two model tables are independent KB-sized reads; submit
@@ -186,7 +187,7 @@ def load_ivf_pq_model(spark: SparkSession, path: str):
     # the memo hands the SAME ndarrays to every caller — freeze them
     # so an in-place mutation cannot silently poison the process-wide
     # cache (r13, advice item); bound the memo (stale versions of
-    # long-lived processes evict oldest-first)
+    # long-lived processes evict least-recently-used first)
     cent.setflags(write=False)
     books.setflags(write=False)
     while len(_MODEL_MEMO) >= 64:

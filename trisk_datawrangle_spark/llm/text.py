@@ -652,7 +652,7 @@ def bpe_train(
     run is a pure function of the data, replayed by the catalog
     oracle as unrolled SQL CTEs (x30's k-means idiom).
 
-    Merge-count bound (measured, scripts/probe_bpe_merges.py): on a
+    Merge-count bound (measured in round 9, probe in git history): on a
     50k-distinct-word corpus the loop sustains 200 genuine merges at
     a FLAT ~400 ms/merge on local[32] — the 200-deep replace chain
     survives codegen (Spark auto-splits oversized methods) and

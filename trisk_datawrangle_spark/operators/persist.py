@@ -6,7 +6,7 @@ under the covers, but the storage is owned by the *internal* RDD —
 NOT free it (measured: the persistent-RDD count stays put). The blocks
 are released only when the JVM garbage-collects the last reference and
 the ContextCleaner notices — which, in a long single-JVM sweep that
-checkpoints per entry (stress.py, bench.py) or per iteration
+checkpoints per catalog entry or per iteration
 (connected components) or per micro-batch (stream ingest), is far too
 late: the sf10 components probe OOMed an 8 GiB heap on storage pinned
 by checkpoints of *earlier, already-finished* catalog entries.
@@ -47,7 +47,12 @@ def tracked_local_checkpoint(
     """Eagerly localCheckpoint ``df`` and return ``(checkpointed,
     created_rdd_ids)``; pass the ids to :func:`unpersist_ids` once the
     frame is no longer needed. After that the frame is unusable
-    (checkpoints truncate lineage — the blocks are the only copy)."""
+    (checkpoints truncate lineage — the blocks are the only copy).
+    For the same reason a local checkpoint is not safe against
+    executor loss on a cluster: the blocks are unreplicated, so a
+    lost executor fails the job instead of recomputing. Local mode
+    cannot lose one; a cluster deployment wants a replicated
+    ``storage_level`` (e.g. ``DISK_ONLY_2``)."""
     spark = df.sparkSession
     before = _persistent_ids(spark)
     out = df.localCheckpoint(eager=True, storageLevel=storage_level)

@@ -31,6 +31,15 @@ def yearly_revenue_series(
 
     The customer dimension is broadcast; revenue uses the exact
     integer-cents sum so results are identical on any partitioning.
+
+    Measured and rejected in round 12 (git history): ``fan_out_scan``
+    on the orders scan (w8 warm 0.77–0.84 → 1.00–1.07 s — year() plus
+    one cents sum is too light to repay a 150k-row exchange), and
+    broadcast opt-ins on the spine/OLS joins downstream (exchanges
+    9 → 6 on flagship, but w8 0.89/0.91 → 1.01/1.07 s: the exchanges
+    removed carry the dimension-bounded aggregated series, while each
+    BroadcastExchange adds a driver-side build that AQE's runtime
+    SMJ→BHJ switch avoids).
     """
     from pyspark.sql import Window
 

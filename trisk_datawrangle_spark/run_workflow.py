@@ -205,15 +205,26 @@ _STAGES: dict[str, _Stage] = {
 ALL_STAGES = tuple(_STAGES)
 
 
-def _read(spark: SparkSession, base: str, read: _Read) -> DataFrame | None:
+def _read(
+    spark: SparkSession, base: str, read: _Read, stage: str
+) -> DataFrame | None:
     try:
         return spark.read.parquet(f"{base}/{read.table}.parquet")
     except AnalysisException as ex:
-        # only "never written" may degrade to None; a corrupt or
-        # unreadable table must fail loudly, not silently drop out
-        if read.optional and "PATH_NOT_FOUND" in str(ex):
+        # only "never written" may degrade to None or be explained; a
+        # corrupt or unreadable table must fail loudly as it is
+        if "PATH_NOT_FOUND" not in str(ex):
+            raise
+        if read.optional:
             return None
-        raise
+        if read.dir != "output":
+            raise
+        writer = next(n for n, s in _STAGES.items() if read.table in s.writes)
+        raise FileNotFoundError(
+            f"stage {stage!r} reads {read.table}, which stage {writer!r} "
+            f"writes, but {base} has no {read.table}.parquet: run "
+            f"{writer!r} first"
+        ) from ex
 
 
 def run_stage(
@@ -232,7 +243,8 @@ def run_stage(
     row = _STAGES[stage]
     dirs = {"input": input_dir, "output": output_dir}
     frames = {
-        key: _read(spark, dirs[r.dir], r) for key, r in row.reads.items()
+        key: _read(spark, dirs[r.dir], r, stage)
+        for key, r in row.reads.items()
     }
     built = row.build(
         **frames, start_year=start_year, time_horizon=time_horizon

@@ -2,11 +2,11 @@
 
 Defaults are chosen for the scale story, not just local tests:
 AQE on (runtime re-planning, skew-join splitting, partition
-coalescing), Arrow on (vectorized Python interchange for the few
-Pandas-UDF operators), UTC session timezone (deterministic calendar
-arithmetic against naive parquet timestamps), and a shuffle-partition
-count that callers override per deployment (32 locally; thousands on
-a real cluster).
+coalescing — Spark's own default, so not set here), Arrow on
+(vectorized Python interchange for the few Pandas-UDF operators), UTC
+session timezone (deterministic calendar arithmetic against naive
+parquet timestamps), and a shuffle-partition count that callers
+override per deployment (32 locally; thousands on a real cluster).
 """
 
 from __future__ import annotations
@@ -46,11 +46,6 @@ def get_spark(
         # launch (harmless no-op on an existing session / real cluster
         # where spark-submit owns sizing)
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        # Runtime re-optimization: partition coalescing, skew-join
-        # splitting, dynamic join-strategy switching.
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
         # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
         # stays at its default (false) — MEASURED both ways in r12:
         # true exposes cached-stage partitioning to consumers and
