@@ -5,7 +5,9 @@ and check the canonical outputs land with the dbml-contract schemas.
 
 from __future__ import annotations
 
+import os
 import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -241,3 +243,79 @@ def test_cli_arg_validation():
 
     with pytest.raises(SystemExit):
         main(["--input-dir", "/x", "--output-dir", "/y", "--stages", "nope"])
+
+
+def test_cli_checks_stages_before_spark(monkeypatch, tmp_path, capsys):
+    """A --stages subset whose required read neither an earlier
+    selected stage writes nor --output-dir holds exits before Spark
+    starts, naming the stage, the table and its writer."""
+    from trisk_datawrangle_spark import run_workflow
+
+    def no_spark(**_):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(run_workflow, "get_spark", no_spark)
+    args = ["--input-dir", str(tmp_path / "in"),
+            "--output-dir", str(tmp_path / "empty"), "--stages"]
+    with pytest.raises(SystemExit):
+        run_workflow.main([*args, "financial"])
+    err = capsys.readouterr().err
+    assert "'financial'" in err
+    assert "abcd_stress_test_input" in err
+    assert "'abcd'" in err
+    # written by an earlier selected stage: the check passes
+    with pytest.raises(AssertionError, match="Spark started"):
+        run_workflow.main([*args, "abcd,financial"])
+
+
+def test_manifests_are_what_reads_return(spark, staged_dirs, tmp_path):
+    """Every table the workflow publishes carries a manifest whose
+    schema is the schema a plain parquet read returns and whose row
+    count is the table's; no staging directory is left behind."""
+    from pyspark.sql.types import StructType
+
+    from trisk_datawrangle_spark.run_workflow import _STAGES
+    from trisk_datawrangle_spark.sources.readers import read_manifest
+
+    inp, _ = staged_dirs
+    out = str(tmp_path / "manifests")
+    for stage in ALL_STAGES:
+        run_stage(spark, stage, inp, out, start_year=2022, time_horizon=3)
+    tables = [t for row in _STAGES.values() for t in row.writes]
+    assert sorted(os.listdir(out)) == sorted(f"{t}.parquet" for t in tables)
+    for table in tables:
+        path = f"{out}/{table}.parquet"
+        manifest = read_manifest(spark, path)
+        read = spark.read.parquet(path)
+        assert StructType.fromJson(manifest["schema"]) == read.schema, table
+        assert manifest["rows"] == read.count(), table
+
+
+def test_failed_gate_keeps_published_table(spark, staged_dirs, tmp_path):
+    """A scenario that scenario_types does not classify fails the
+    scenarios gate during the write: the error names the stage, the
+    table, the gate and the count, and the table published before
+    keeps its rows."""
+    from trisk_datawrangle_spark.operators.quality import DataQualityError
+
+    inp, _ = staged_dirs
+    bad = str(tmp_path / "bad_in")
+    shutil.copytree(inp, bad)
+    shutil.rmtree(f"{bad}/scenario_types.parquet")
+    spark.createDataFrame(
+        [("WEO_STEPS", "baseline")], "scenario string, scenario_type string"
+    ).write.parquet(f"{bad}/scenario_types.parquet")
+    out = str(tmp_path / "gate_out")
+    run_stage(spark, "scenarios", inp, out, start_year=2022, time_horizon=3)
+    path = f"{out}/Scenarios_AnalysisInput.parquet"
+    before = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    n_nze = sum(r[-1] == "WEO_NZE" for r in before)
+
+    with pytest.raises(DataQualityError) as ei:
+        run_stage(spark, "scenarios", bad, out, start_year=2022, time_horizon=3)
+    msg = str(ei.value)
+    assert "stage 'scenarios', table Scenarios_AnalysisInput" in msg
+    assert f"gate 'scenario_type is NULL' failed on {n_nze} rows" in msg
+    after = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert after == before
+    assert [n for n in os.listdir(out) if n.startswith(".")] == []

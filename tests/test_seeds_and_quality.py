@@ -103,6 +103,59 @@ def test_fk_orphans_match_simple_semantics(spark):
     # clean child passes through unchanged
     clean = child.filter(F.col("k1") != "zz")
     assert assert_fk(clean, parent, {"k1": "p1", "k2": "p2"}) is clean
+    # an int child key against a long parent key compares as long, as
+    # the per-reference join does (as int, 2**40 + 2 would wrap to 2);
+    # the orphans keep the child's type
+    longs = spark.createDataFrame([(1,), (2**40 + 2,)], "p2 bigint")
+    got = fk_orphans(child, longs, {"k2": "p2"})
+    assert dict(got.dtypes)["k2"] == "int"
+    assert sorted((r.k2, r.orphan_rows) for r in got.collect()) == [
+        (2, 1), (9, 2)
+    ]
+
+
+def test_fk_audit_is_the_per_reference_join(spark):
+    """fk_audit: many references of mixed arity and key types in one
+    call give, per reference, what the single-reference operator
+    gives: orphan keys, orphan rows, and the worst tuples first."""
+    from trisk_datawrangle_spark.operators.quality import fk_audit, fk_orphans
+
+    child = spark.createDataFrame(
+        [("a", 1, 1), ("b", 2, 2), ("b", 2, 2), ("c", 3, None),
+         ("d", None, 4), ("d", 4, 4)],
+        "s string, i int, j int",
+    )
+    parent = spark.createDataFrame(
+        [("a", 1, 10), ("c", 3, 2), (None, None, 4)],
+        "s string, i int, l bigint",
+    )
+    refs = [
+        (child, parent, ["s", "i"]),
+        (child, parent, {"j": "l"}),
+        (child, parent, {"i": "i", "s": "s"}),
+        (parent, child, {"l": "j"}),
+        (child, parent, {"s": "s"}),
+    ]
+    found = fk_audit(refs, top=2)
+    assert [a.pairs for a in found] == [
+        [("s", "s"), ("i", "i")], [("j", "l")], [("i", "i"), ("s", "s")],
+        [("l", "j")], [("s", "s")],
+    ]
+    for (c, p, keys), a in zip(refs, found):
+        one = fk_orphans(c, p, keys)
+        rows = sorted(
+            (tuple(r) for r in one.collect()),
+            key=lambda t: (-t[-1], t[:-1]),
+        )
+        assert a.orphan_keys == len(rows)
+        assert a.orphan_rows == sum(t[-1] for t in rows)
+        assert list(a.top) == rows[:2]
+    assert [(a.orphan_keys, a.orphan_rows) for a in found] == [
+        (2, 3), (1, 1), (2, 3), (1, 1), (2, 4)
+    ]
+    assert found[0].top == (("b", 2, 2), ("d", 4, 1))
+    assert found[4].top == (("b", 2), ("d", 2))
+    assert fk_audit([]) == []
 
 
 def test_fk_orphans_shared_names_and_empty_child(spark):

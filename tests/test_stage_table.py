@@ -24,6 +24,18 @@ def test_rows_are_wired():
             assert {child, parent} <= set(row.reads), stage
 
 
+def test_checks_name_their_own_rows_tables():
+    """Each FK gate and audit joins two reads of its own row; each
+    observed gate belongs to a table its row writes."""
+    for stage, row in _STAGES.items():
+        for child, parent, pairs in row.fk_gates + row.audits:
+            assert {child, parent} <= set(row.reads), stage
+            assert pairs and all(len(p) == 2 for p in pairs), stage
+        assert set(row.gates) <= set(row.writes), stage
+        for gates in row.gates.values():
+            assert gates and all(callable(g) for g in gates.values()), stage
+
+
 def test_required_output_reads_are_written_earlier():
     written: set[str] = set()
     for stage, row in _STAGES.items():

@@ -2081,7 +2081,7 @@ WHERE NOT EXISTS (SELECT 1 FROM {pcte} p WHERE p.{pcol} = c.v)"""
 def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity gate across the workflow outputs: every
     dbml-declared FK (outputs_structure.dbml:69-95) audited with
-    :func:`~trisk_datawrangle_spark.operators.quality.fk_orphans` on
+    :func:`~trisk_datawrangle_spark.operators.quality.fk_audit` on
     the SAME stage frames w0 hash-gates, reported as one row per Ref
     line (orphan key count + orphan row count). On these fixtures the
     units ref (scen 'GW' vs price 'usd/tonne') and the carbon
@@ -2089,45 +2089,34 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely violated, so the audit's non-zero path is hash-gated
     too, not just the all-clear.
 
-    Scale shape per audit: child pre-aggregated to distinct values
-    (map-side combine), parent column-pruned + distinct, one
-    broadcast-sized anti-join — never a fact-table shuffle."""
-    from trisk_datawrangle_spark.operators.quality import fk_orphans
+    Scale shape: all 12 audits are one tagged anti-join, one job:
+    each table scanned once, the child pre-aggregated to its distinct
+    (audit, value) tuples (map-side combine), the parents' tuples
+    distinct — never a fact-table shuffle."""
+    from trisk_datawrangle_spark.operators.quality import fk_audit
 
-    # 12 audit subtrees share the four stage frames; the shared
-    # materializer (r13) eagerly localCheckpoints them from a thread
-    # pool — each interpolation/share chain computes exactly once and
-    # the plans the audits see are truncated to the tiny RDDs (plain
-    # .cache() still planned 12 copies of the chain into the single
-    # union job).
+    # the shared materializer (r13) eagerly localCheckpoints the four
+    # stage frames from a thread pool, so each interpolation/share
+    # chain computes exactly once and the audit's plan is truncated to
+    # the tiny RDDs
     fr = _w0_stage_frames_materialized(spark, sf_dir)
     parents = {
         "price_data_long": fr["prices"],
         "ngfs_carbon_price": fr["carbon"],
         "prewrangled_capacity_factors": fr["cf"],
     }
-    scen = fr["scen"]
-    reports = []
-    for ccol, ptbl, _, pcol in _Q9_REFS:
-        orphans = fk_orphans(scen, parents[ptbl], {ccol: pcol})
-        reports.append(
-            orphans.agg(
-                F.count(F.lit(1)).alias("orphan_keys"),
-                F.coalesce(F.sum("orphan_rows"), F.lit(0))
-                .cast("long")
-                .alias("orphan_rows"),
-            ).select(
-                F.lit(ccol).alias("child_column"),
-                F.lit(ptbl).alias("parent_table"),
-                F.lit(pcol).alias("parent_column"),
-                "orphan_keys",
-                "orphan_rows",
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out
+    found = fk_audit(
+        [(fr["scen"], parents[ptbl], {ccol: pcol})
+         for ccol, ptbl, _, pcol in _Q9_REFS]
+    )
+    return spark.createDataFrame(
+        [
+            (ccol, ptbl, pcol, a.orphan_keys, a.orphan_rows)
+            for (ccol, ptbl, _, pcol), a in zip(_Q9_REFS, found)
+        ],
+        "child_column string, parent_table string, parent_column string, "
+        "orphan_keys long, orphan_rows long",
+    )
 
 
 # ------------------------------------------------------------------ #

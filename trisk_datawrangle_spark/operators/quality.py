@@ -1,18 +1,28 @@
 """Data-quality / assertion operators (SURVEY.md §2.10).
 
 The reference runs ``assertr::verify`` / ``stopifnot`` checks inline;
-here each check is either an *assertion* (raises ``DataQualityError``,
-forcing one action) or a *report* (returns a small DataFrame for
-logging). Assertions that need a count run it as a single lightweight
-job; at scale, call them at stage boundaries, not per-operator.
+here each check is either a *gate* (a Column condition that a bad row
+satisfies), an *assertion* (raises ``DataQualityError``) or a *report*
+(returns a small DataFrame for logging).
+
+The workflow's gates are observed during the write that publishes
+their table (``sources.readers.write_output``): they cost no job of
+their own, and a table that fails one is never published. The eager
+asserts below run the same gate as a count job of their own and stay
+for ad-hoc use. FK references are checked many at once by
+:func:`fk_audit`, one job for any number of them.
 """
 
 from __future__ import annotations
 
+import operator
+import typing
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StringType
 
 from trisk_datawrangle_spark.functions.scalars import any_null
 
@@ -38,14 +48,33 @@ def assert_row_count(df: DataFrame, expected: int) -> DataFrame:
     return df
 
 
+def null_rows(cols: Sequence[str]) -> Column:
+    """Gate: a row with a NULL in any of ``cols`` (Q3)."""
+    return any_null(list(cols))
+
+
+def out_of_bounds(col: str, lo: float | None = None, hi: float | None = None) -> Column:
+    """Gate: a row whose ``col`` lies outside [lo, hi] (Q4)."""
+    cond = F.lit(False)
+    if lo is not None:
+        cond = cond | (F.col(col) < lo)
+    if hi is not None:
+        cond = cond | (F.col(col) > hi)
+    return cond
+
+
+def _assert_none(df: DataFrame, bad: Column, what: str) -> DataFrame:
+    n = df.filter(bad).count()
+    if n:
+        raise DataQualityError(f"{n} rows {what}")
+    return df
+
+
 def assert_no_null(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """No-NULL assert (Q3,
     prepare_prewrangled_financial_data_stress_test.R:600-603)."""
     cols = list(cols) if cols else df.columns
-    bad = df.filter(any_null(cols)).count()
-    if bad:
-        raise DataQualityError(f"{bad} rows contain NULL in {cols}")
-    return df
+    return _assert_none(df, null_rows(cols), f"contain NULL in {cols}")
 
 
 def assert_bounds(
@@ -53,15 +82,9 @@ def assert_bounds(
 ) -> DataFrame:
     """Bounds assert (Q4, capacity_factor ∈ [0,1] at
     prepare_prewrangled_capacity_factors.R:182-193)."""
-    cond = F.lit(False)
-    if lo is not None:
-        cond = cond | (F.col(col) < lo)
-    if hi is not None:
-        cond = cond | (F.col(col) > hi)
-    bad = df.filter(cond).count()
-    if bad:
-        raise DataQualityError(f"{bad} rows of {col} outside [{lo}, {hi}]")
-    return df
+    return _assert_none(
+        df, out_of_bounds(col, lo, hi), f"of {col} outside [{lo}, {hi}]"
+    )
 
 
 def missings_report(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
@@ -147,6 +170,91 @@ def _fk_pairs(keys) -> list[tuple[str, str]]:
     return out
 
 
+def _key_type(spark: SparkSession, child: DataType, parent: DataType) -> DataType:
+    """The type an equi-join of a ``child`` key with a ``parent`` key
+    compares in: the common type, except that without ANSI a string
+    is cast to the other side's type."""
+    if child == parent:
+        return child
+    ansi = spark.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
+    if not ansi and isinstance(child, StringType) != isinstance(parent, StringType):
+        return parent if isinstance(child, StringType) else child
+    pair = (F.lit(None).cast(child), F.lit(None).cast(parent))
+    return spark.range(0).select(F.coalesce(*pair)).schema[0].dataType
+
+
+def _tagged_orphans(refs) -> tuple[DataFrame, list[list[tuple[str, str]]]]:
+    """The one anti-join behind :func:`fk_orphans` and :func:`fk_audit`.
+
+    ``refs`` is a list of (child, parent, keys). Both sides of a
+    reference are cast to the type the per-reference join compares
+    in, and each key tuple is tagged with its reference's index.
+    A key of position ``i`` and type ``T`` goes to the slot column
+    ``__k<j>`` of (i, T); the slots a reference does not use are NULL
+    on both sides and match null-safely. Each distinct child and
+    parent DataFrame is scanned once: one projection emits the tagged
+    tuples of every reference it takes part in.
+
+    Returns the orphans (``__ref``, the slots by key position,
+    ``orphan_rows``) and, per reference, its (slot, child column)
+    pairs in key order."""
+    spark = refs[0][0].sparkSession
+    slot_of: dict[tuple[int, str], tuple[str, DataType]] = {}
+    per_ref = []
+    for child, parent, keys in refs:
+        used = []
+        for i, (c, p) in enumerate(_fk_pairs(keys)):
+            t = _key_type(spark, child.schema[c].dataType, parent.schema[p].dataType)
+            name, _ = slot_of.setdefault(
+                (i, t.simpleString()), (f"__k{len(slot_of)}", t)
+            )
+            used.append((name, c, p, t))
+        per_ref.append(used)
+    # position-major, so sorting by the slots sorts each reference by
+    # its own key order (its other slots are constant NULL)
+    slots = [slot_of[k] for k in sorted(slot_of, key=lambda k: k[0])]
+
+    def side(k: int, prefix: str) -> DataFrame:
+        tags: list[tuple[DataFrame, list[Column]]] = []
+        for r, (ref, used) in enumerate(zip(refs, per_ref)):
+            df = ref[k]
+            cols = {name: F.col((c, p)[k]).cast(t) for name, c, p, t in used}
+            tag = F.struct(
+                F.lit(r).alias("__ref"),
+                *[cols.get(n, F.lit(None).cast(t)).alias(n) for n, t in slots],
+            )
+            # SQL MATCH SIMPLE: a child tuple with a NULL references
+            # nothing, and a parent one matches nothing
+            not_null = reduce(
+                operator.and_, [F.col((c, p)[k]).isNotNull() for _, c, p, _ in used]
+            )
+            same = [ts for d, ts in tags if d is df]
+            if same:
+                same[0].append(F.when(not_null, tag))
+            else:
+                tags.append((df, [F.when(not_null, tag)]))
+        names = ["__ref", *[n for n, _ in slots]]
+        frames = [
+            df.select(F.explode(F.array(*ts)).alias("__t"))
+            .where(F.col("__t").isNotNull())
+            .select(*[F.col(f"__t.{n}").alias(prefix + n) for n in names])
+            for df, ts in tags
+        ]
+        return reduce(DataFrame.union, frames)
+
+    # the child side is pre-aggregated to its distinct tuples, so the
+    # shuffle carries key-cardinality rows
+    child_keys = side(0, "").groupBy("__ref", *[n for n, _ in slots]).agg(
+        F.count(F.lit(1)).alias("orphan_rows")
+    )
+    parent_keys = side(1, "p").distinct()
+    on = [F.col("__ref") == F.col("p__ref")] + [
+        F.col(n).eqNullSafe(F.col("p" + n)) for n, _ in slots
+    ]
+    orphans = child_keys.join(parent_keys, on, "left_anti")
+    return orphans, [[(name, c) for name, c, *_ in used] for used in per_ref]
+
+
 def fk_orphans(child: DataFrame, parent: DataFrame, keys) -> DataFrame:
     """Referential-integrity audit (Q9): distinct child FK tuples
     with no matching parent row, plus how many child rows carry each
@@ -161,41 +269,74 @@ def fk_orphans(child: DataFrame, parent: DataFrame, keys) -> DataFrame:
     shuffle carries key-cardinality rows, never the fact table), the
     parent side is column-pruned to its distinct keys, and the
     left-anti join is the only cross-table exchange; AQE broadcasts
-    the parent side when it is dimension-sized.
+    the parent side when it is dimension-sized. Many references at
+    once: :func:`fk_audit`.
 
     Output: one row per orphan key tuple — the child columns plus
     ``orphan_rows`` (child rows carrying that tuple).
     """
-    pairs = _fk_pairs(keys)
-    ccols = [c for c, _ in pairs]
-    not_null = F.lit(True)
-    for c in ccols:
-        not_null = not_null & F.col(c).isNotNull()
-    child_keys = (
-        child.select(*ccols)
-        .filter(not_null)
-        .groupBy(*ccols)
-        .agg(F.count(F.lit(1)).alias("orphan_rows"))
+    orphans, (used,) = _tagged_orphans([(child, parent, keys)])
+    return orphans.select(
+        *[F.col(n).cast(child.schema[c].dataType).alias(c) for n, c in used],
+        "orphan_rows",
     )
-    parent_keys = parent.select(
-        *[F.col(p).alias(c) for c, p in pairs]
-    ).distinct()
-    return child_keys.join(parent_keys, ccols, "left_anti")
+
+
+class FkAudit(typing.NamedTuple):
+    """One reference's result from :func:`fk_audit`."""
+
+    pairs: list[tuple[str, str]]
+    orphan_keys: int = 0
+    orphan_rows: int = 0
+    #: the worst orphan tuples, most child rows first: key values, then
+    #: the rows carrying them
+    top: tuple = ()
+
+    def check(self) -> None:
+        """Raise :class:`DataQualityError` naming the worst orphan
+        tuples when any child key has no parent."""
+        if self.orphan_keys:
+            raise DataQualityError(
+                f"FK violation on {self.pairs}: orphan keys (top by rows) = "
+                + ", ".join(str(t) for t in self.top)
+            )
+
+
+def fk_audit(refs, top: int = 5) -> list[FkAudit]:
+    """:func:`fk_orphans` for many references in one job: ``refs`` is
+    a list of (child, parent, keys). Returns, per reference in order,
+    its orphan-key count, orphan-row count and the ``top`` (>= 1)
+    orphan tuples by child rows, ties by key."""
+    if not refs:
+        return []
+    orphans, used = _tagged_orphans(refs)
+    slots = [c for c in orphans.columns if c.startswith("__k")]
+    by_ref = Window.partitionBy("__ref")
+    rank = F.row_number().over(
+        by_ref.orderBy(F.col("orphan_rows").desc(), *slots)
+    )
+    ranked = orphans.select(
+        "*",
+        rank.alias("__rank"),
+        F.count(F.lit(1)).over(by_ref).alias("__keys"),
+        F.sum("orphan_rows").over(by_ref).alias("__rows"),
+    ).where(F.col("__rank") <= top)
+    out = [FkAudit(_fk_pairs(keys)) for _, _, keys in refs]
+    for r in sorted(ranked.collect(), key=lambda r: (r["__ref"], r["__rank"])):
+        i = r["__ref"]
+        worst = (*[r[n] for n, _ in used[i]], r["orphan_rows"])
+        out[i] = out[i]._replace(
+            orphan_keys=r["__keys"], orphan_rows=r["__rows"],
+            top=(*out[i].top, worst),
+        )
+    return out
 
 
 def assert_fk(child: DataFrame, parent: DataFrame, keys) -> DataFrame:
     """FK assert: raises :class:`DataQualityError` naming the worst
     orphan tuples when any child key has no parent; returns ``child``
     unchanged otherwise (chainable like the other Q asserts)."""
-    pairs = _fk_pairs(keys)
-    sample = fk_orphans(child, parent, keys).orderBy(
-        F.col("orphan_rows").desc(), *[c for c, _ in pairs]
-    ).take(5)
-    if sample:
-        raise DataQualityError(
-            f"FK violation on {pairs}: orphan keys (top by rows) = "
-            + ", ".join(str(tuple(r)) for r in sample)
-        )
+    fk_audit([(child, parent, keys)])[0].check()
     return child
 
 

@@ -13,14 +13,19 @@ Usage (also via ``python -m trisk_datawrangle_spark``)::
 
 Each stage is one row of :data:`_STAGES`: the tables it reads from
 ``--input-dir`` (FIXTURES.md shapes) or from earlier stages'
-``--output-dir``, its build function, and the tables it writes —
+``--output-dir``, its build function, the tables it writes —
 partitioned where downstream reads prune (scenario for pathway-shaped
-tables — SURVEY.md §4).
+tables — SURVEY.md §4) — and its checks. A written table's gates are
+observed in the job that writes it, and the table is published only
+if they all pass (``sources.readers.write_output``); its manifest
+gives later stages its schema. A stage's FK gates and audits run
+together as one job after its writes.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import typing
 
@@ -28,8 +33,14 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from trisk_datawrangle_spark import plans
-from trisk_datawrangle_spark.operators.quality import assert_fk, fk_orphans
+from trisk_datawrangle_spark.operators.quality import (
+    DataQualityError,
+    fk_audit,
+    null_rows,
+    out_of_bounds,
+)
 from trisk_datawrangle_spark.session import get_spark
+from trisk_datawrangle_spark.sources import readers
 
 
 class _Read(typing.NamedTuple):
@@ -53,8 +64,14 @@ class _Stage(typing.NamedTuple):
     build: typing.Callable[..., dict[str, DataFrame]]
     #: table written -> partition_by, in write order
     writes: dict[str, list[str] | None]
-    #: orphan-count audits run after the writes, one stderr line per
-    #: ref: (child read, parent read, [(child col, parent col)])
+    #: table written -> {gate name: () -> condition a bad row
+    #: satisfies}, observed during the table's write
+    gates: dict = {}
+    #: FK gates, checked after the writes; each (child col, parent
+    #: col) pair is one reference: (child read, parent read, [pairs])
+    fk_gates: tuple = ()
+    #: orphan-count audits, evaluated in the same job as ``fk_gates``,
+    #: one stderr line per pair; same shape
     audits: tuple = ()
 
 
@@ -67,15 +84,12 @@ def _scenarios(raw, lookup, types, start_year, **_):
     out = plans.prepare_scenarios_analysis_input(
         {"all": raw}, lookup, baseline, shock, start_year=start_year
     )
-    out = plans.scenarios.assert_all_classified(out)
     return {"Scenarios_AnalysisInput": out}
 
 
 def _capacity_factors(raw, **_):
     cf = plans.capacity_factors
-    out = cf.validate(
-        cf.clone_missing_technologies(cf.prepare_capacity_factors(raw))
-    )
+    out = cf.clone_missing_technologies(cf.prepare_capacity_factors(raw))
     return {"prewrangled_capacity_factors": out}
 
 
@@ -120,20 +134,13 @@ def _trisk_v2(scen, prices, cf, abcd, fin, carbon, **_):
     }
 
 
-def _verify_fk(scen, abcd, fin, **_):
+def _verify_fk(**_):
     # The referential-integrity gate the reference's dbml declares
-    # but never runs (data-raw/outputs_structure.dbml:69-107).
-    # HARD gates (raise) on the join-safety invariants the assembly
-    # relies on; the row's AUDITS (orphan counts to stderr) cover the
-    # lookup-coverage Refs, which legitimately report gaps when a
+    # but never runs (data-raw/outputs_structure.dbml:69-107). The
+    # row's FK GATES (raise) hold the join-safety invariants the
+    # assembly relies on; its AUDITS (orphan counts to stderr) cover
+    # the lookup-coverage Refs, which legitimately report gaps when a
     # source ships partial coverage.
-    assert_fk(abcd, fin, ["company_id"])
-    for ccol, pcol in (
-        ("year", "year"),
-        ("ald_sector", "ald_sector"),
-        ("ald_business_unit", "ald_business_unit"),
-    ):
-        assert_fk(abcd, scen, {ccol: pcol})
     return {}
 
 
@@ -143,10 +150,19 @@ _STAGES: dict[str, _Stage] = {
          "lookup": _Read("sector_tech_lookup"),
          "types": _Read("scenario_types")},
         _scenarios, {"Scenarios_AnalysisInput": ["scenario"]},
+        # Q3 guard (run_prepare_Scenarios_AnalysisInput.R:288-371)
+        gates={"Scenarios_AnalysisInput": {
+            "scenario_type is NULL": lambda: null_rows(["scenario_type"]),
+        }},
     ),
     "capacity_factors": _Stage(
         {"raw": _Read("capacity_factors_raw")}, _capacity_factors,
         {"prewrangled_capacity_factors": ["scenario"]},
+        # Q4 bounds (R/prepare_prewrangled_capacity_factors.R:182-193)
+        gates={"prewrangled_capacity_factors": {
+            "capacity_factor outside [0.0, 1.0]":
+                lambda: out_of_bounds("capacity_factor", 0.0, 1.0),
+        }},
     ),
     "prices": _Stage(
         {"raw": _Read("price_raw")}, _prices,
@@ -183,6 +199,12 @@ _STAGES: dict[str, _Stage] = {
          "ngfs_carbon_price": _out("ngfs_carbon_price", optional=True),
          "prewrangled_capacity_factors": _out("prewrangled_capacity_factors")},
         _verify_fk, {},
+        fk_gates=(
+            ("abcd", "fin", [("company_id", "company_id")]),
+            ("abcd", "scen",
+             [("year", "year"), ("ald_sector", "ald_sector"),
+              ("ald_business_unit", "ald_business_unit")]),
+        ),
         audits=(
             ("abcd", "scen",
              [("ald_production_unit", "units"),
@@ -205,11 +227,20 @@ _STAGES: dict[str, _Stage] = {
 ALL_STAGES = tuple(_STAGES)
 
 
+def _not_written(stage: str, table: str, base: str) -> str:
+    writer = next(n for n, s in _STAGES.items() if table in s.writes)
+    return (
+        f"stage {stage!r} reads {table}, which stage {writer!r} "
+        f"writes, but {base} has no {table}.parquet: run "
+        f"{writer!r} first"
+    )
+
+
 def _read(
     spark: SparkSession, base: str, read: _Read, stage: str
 ) -> DataFrame | None:
     try:
-        return spark.read.parquet(f"{base}/{read.table}.parquet")
+        return readers.read_table(spark, f"{base}/{read.table}.parquet")
     except AnalysisException as ex:
         # only "never written" may degrade to None or be explained; a
         # corrupt or unreadable table must fail loudly as it is
@@ -219,12 +250,38 @@ def _read(
             return None
         if read.dir != "output":
             raise
-        writer = next(n for n, s in _STAGES.items() if read.table in s.writes)
-        raise FileNotFoundError(
-            f"stage {stage!r} reads {read.table}, which stage {writer!r} "
-            f"writes, but {base} has no {read.table}.parquet: run "
-            f"{writer!r} first"
-        ) from ex
+        raise FileNotFoundError(_not_written(stage, read.table, base)) from ex
+
+
+def _check_fks(stage: str, row: _Stage, frames: dict) -> None:
+    """The row's FK gates and audits as one job: raise on the first
+    failing gate, in table order, else print one line per audit."""
+    refs = [
+        (gate, child, parent, pair)
+        for gate, group in ((True, row.fk_gates), (False, row.audits))
+        for child, parent, pairs in group
+        if frames[parent] is not None
+        for pair in pairs
+    ]
+    found = fk_audit([(frames[c], frames[p], [pair]) for _, c, p, pair in refs])
+    for (gate, *_), audit in zip(refs, found):
+        if gate:
+            audit.check()
+    orphans = {ref[1:]: a.orphan_keys for ref, a in zip(refs, found)}
+    for child, parent, pairs in row.audits:
+        if frames[parent] is None:
+            print(
+                f"[{stage}] {child} -> {parent}: skipped, "
+                f"{row.reads[parent].table} not found",
+                file=sys.stderr,
+            )
+            continue
+        for ccol, pcol in pairs:
+            print(
+                f"[{stage}] {child}.{ccol} -> {parent}.{pcol}: "
+                f"{orphans[child, parent, (ccol, pcol)]} orphan keys",
+                file=sys.stderr,
+            )
 
 
 def run_stage(
@@ -237,9 +294,6 @@ def run_stage(
 ) -> None:
     if stage not in _STAGES:
         raise ValueError(f"unknown stage {stage!r}")
-    # looked up at call time, so a wrapped write_output is honoured
-    from trisk_datawrangle_spark.sources import readers
-
     row = _STAGES[stage]
     dirs = {"input": input_dir, "output": output_dir}
     frames = {
@@ -250,26 +304,20 @@ def run_stage(
         **frames, start_year=start_year, time_horizon=time_horizon
     )
     for table, partition_by in row.writes.items():
-        readers.write_output(
-            built[table],
-            f"{output_dir}/{table}.parquet",
-            partition_by=partition_by,
-        )
-    for child, parent, refs in row.audits:
-        if frames[parent] is None:
-            print(
-                f"[{stage}] {child} -> {parent}: skipped, "
-                f"{row.reads[parent].table} not found",
-                file=sys.stderr,
+        gates = {n: gate() for n, gate in row.gates.get(table, {}).items()}
+        try:
+            # looked up at call time, so a wrapped write_output is honoured
+            readers.write_output(
+                built[table],
+                f"{output_dir}/{table}.parquet",
+                partition_by=partition_by,
+                gates=gates,
             )
-            continue
-        for ccol, pcol in refs:
-            n = fk_orphans(frames[child], frames[parent], {ccol: pcol}).count()
-            print(
-                f"[{stage}] {child}.{ccol} -> {parent}.{pcol}: "
-                f"{n} orphan keys",
-                file=sys.stderr,
-            )
+        except DataQualityError as ex:
+            raise DataQualityError(
+                f"stage {stage!r}, table {table}: {ex}"
+            ) from ex
+    _check_fks(stage, row, frames)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -290,6 +338,22 @@ def main(argv: list[str] | None = None) -> int:
     if unknown:
         ap.error(f"unknown stages: {sorted(unknown)}")
     ordered = [s for s in ALL_STAGES if s in wanted]
+    # every required output-dir read is written by an earlier selected
+    # stage or already there; only a local --output-dir can be checked
+    # before Spark starts (the others fail in _read)
+    local = "://" not in args.output_dir
+    written: set[str] = set()
+    for stage in ordered:
+        for read in _STAGES[stage].reads.values():
+            if (
+                local and read.dir == "output" and not read.optional
+                and read.table not in written
+                and not os.path.exists(
+                    f"{args.output_dir}/{read.table}.parquet"
+                )
+            ):
+                ap.error(_not_written(stage, read.table, args.output_dir))
+        written |= set(_STAGES[stage].writes)
 
     spark = get_spark(app_name="trisk-workflow", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")

@@ -11,7 +11,9 @@ mtime survive), and swap so that a crash at ANY point never loses a
 row.
 
 Swap protocol per partition — whole-directory renames, each atomic
-on local/HDFS filesystems, with a decidable recovery rule:
+on local/HDFS filesystems, with a decidable recovery rule
+(``readers.write_output`` publishes whole tables by the same protocol,
+:func:`staging_path` and :func:`swap_in`, with the table as the leaf):
 
 1. write the compacted files to a SIBLING dir
    ``<parent>/.compact-tmp-<leafname>`` (dot-prefixed: invisible to
@@ -52,20 +54,42 @@ from trisk_datawrangle_spark.sources.incremental import (
 )
 
 
-def _sibling(jvm, leaf_str: str, prefix: str):
-    parent, name = leaf_str.rstrip("/").rsplit("/", 1)
-    return jvm.org.apache.hadoop.fs.Path(f"{parent}/{prefix}{name}")
+def _swap_paths(spark: SparkSession, leaf_str: str):
+    """(fs, leaf, tmp, trash) for ``leaf_str``, qualified, so a
+    relative leaf still has a parent directory to hold its siblings."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs = Path(leaf_str).getFileSystem(hconf)
+    leaf = fs.makeQualified(Path(leaf_str))
+    parent, name = leaf.getParent(), leaf.getName()
+    return (
+        fs,
+        leaf,
+        Path(parent, f".compact-tmp-{name}"),
+        Path(parent, f".compact-trash-{name}"),
+    )
+
+
+def staging_path(spark: SparkSession, leaf_str: str) -> str:
+    """Step 1's target: the dot-prefixed tmp sibling of ``leaf_str``."""
+    return _swap_paths(spark, leaf_str)[2].toString()
+
+
+def swap_in(spark: SparkSession, leaf_str: str) -> None:
+    """Steps 2-4: replace ``leaf_str`` (if it exists) by its complete
+    tmp sibling. A leaf that never existed is simply promoted."""
+    fs, leaf, tmp, trash = _swap_paths(spark, leaf_str)
+    if fs.exists(leaf) and not fs.rename(leaf, trash):
+        raise OSError(f"could not move {leaf} to {trash}")
+    if not fs.rename(tmp, leaf):
+        raise OSError(f"could not promote {tmp} to {leaf}")
+    fs.delete(trash, True)
 
 
 def recover_partition(spark: SparkSession, leaf_str: str) -> str | None:
     """Apply the module-docstring recovery rule for one leaf. Returns
     the action taken (None if there was nothing to recover)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    leaf = jvm.org.apache.hadoop.fs.Path(leaf_str)
-    fs = leaf.getFileSystem(hconf)
-    tmp = _sibling(jvm, leaf_str, ".compact-tmp-")
-    trash = _sibling(jvm, leaf_str, ".compact-trash-")
+    fs, leaf, tmp, trash = _swap_paths(spark, leaf_str)
     if fs.exists(trash):
         if fs.exists(leaf):
             fs.delete(trash, True)  # promotion completed, janitor died
@@ -172,28 +196,21 @@ def compact_partitions(
         if s["n_files"] <= max_files:
             report["files_after"] += s["n_files"]
             continue
-        leaf = jvm.org.apache.hadoop.fs.Path(s["leaf"])
-        tmp = _sibling(jvm, s["leaf"], ".compact-tmp-")
-        trash = _sibling(jvm, s["leaf"], ".compact-trash-")
+        tmp = staging_path(spark, s["leaf"])
         n_out = max(1, math.ceil(s["bytes"] / float(target_bytes)))
         # partition-column values live in the directory name, not the
         # files — read the leaf dir directly (no partition discovery)
         df = spark.read.parquet(s["leaf"])
-        df.coalesce(n_out).write.mode("overwrite").parquet(
-            tmp.toString()
-        )
+        df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
         n_new = len(
             [
                 st
-                for st in fs.listStatus(tmp)
+                for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp))
                 if st.isFile()
                 and not st.getPath().getName().startswith((".", "_"))
             ]
         )
-        # atomic swap: leaf -> trash, tmp -> leaf, drop trash
-        fs.rename(leaf, trash)
-        fs.rename(tmp, leaf)
-        fs.delete(trash, True)
+        swap_in(spark, s["leaf"])
         report["compacted"] += 1
         report["files_after"] += n_new
     return report

@@ -10,10 +10,19 @@ pushdown then reach the scan for free (check ``PushedFilters`` /
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from trisk_datawrangle_spark.operators.quality import DataQualityError
+from trisk_datawrangle_spark.sources.compaction import (
+    recover_partition,
+    staging_path,
+    swap_in,
+)
 
 TABLES = (
     "region",
@@ -131,7 +140,6 @@ def _normalize_timestamps(spark: SparkSession, df: DataFrame) -> DataFrame:
     instant including both DST boundaries (micros preserved via
     ``extract(second)``'s fractional seconds).
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
     ntz = [f.name for f in df.schema.fields
@@ -293,19 +301,119 @@ def register_views(
     return tables
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path``, so the manifest goes wherever
+    the table goes (local, HDFS, object store)."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def read_manifest(spark: SparkSession, path: str) -> dict | None:
+    """The ``_manifest.json`` :func:`write_output` published with the
+    table at ``path``; None for a table written without one."""
+    fs, p = _hadoop_path(spark, f"{path}/_manifest.json")
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode())
+    finally:
+        stream.close()
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet read of a table; one written by :func:`write_output`
+    is read with its manifest's schema, which spares the
+    schema-inference job."""
+    manifest = read_manifest(spark, path)
+    if manifest is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(path)
+
+
 def write_output(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
     partition_by: Sequence[str] | None = None,
     single_file: bool = False,
-) -> None:
-    """S6 sink. Canonical tables are written partitioned (scenario /
-    year) so downstream reads prune partitions (SURVEY.md §4);
-    ``single_file`` reproduces the reference's one-CSV handoff for
-    small outputs only."""
-    out = df.coalesce(1) if single_file else df
+    gates: dict[str, Column] | None = None,
+) -> dict:
+    """S6 sink: check and publish one table in the job that writes it.
+    Canonical tables are written partitioned (scenario / year) so
+    downstream reads prune partitions (SURVEY.md §4); ``single_file``
+    reproduces the reference's one-CSV handoff for small outputs only.
+
+    - ``gates`` maps a check's name to a condition that a bad row
+      satisfies. They are counted with ``DataFrame.observe`` during
+      the write, together with the row count, so they cost no job.
+    - The write goes to a dot-prefixed staging sibling of ``path``
+      (``sources.compaction.staging_path``), which readers ignore.
+      Only when every gate counted 0 is it swapped in by the
+      crash-safe directory swap of ``sources/compaction.py``; a
+      staging or trash sibling left by an interrupted publish is
+      repaired first. A failed write or gate leaves the previous
+      table at ``path`` as it was and no staging directory; a failed
+      gate raises :class:`DataQualityError` with up to 5 offending
+      rows, read back from the staged files.
+    - ``_manifest.json`` goes into the table before the swap: the
+      schema a read of the table returns (see :func:`read_table`),
+      ``rows``, part ``files``, their ``bytes``, and each gate's
+      observed count. It is also the return value.
+    """
+    spark = df.sparkSession
+    gates = gates or {}
+    parts = list(partition_by or [])
+    recover_partition(spark, path)
+    tmp = staging_path(spark, path)
+    seen = Observation()
+    out = df.observe(
+        seen,
+        F.count(F.lit(1)).alias("rows"),
+        *[F.count(F.when(bad, 1)).alias(name) for name, bad in gates.items()],
+    )
+    out = out.coalesce(1) if single_file else out
     writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.format(fmt).option("header", True).save(path)
+    if parts:
+        writer = writer.partitionBy(*parts)
+    fs, staged = _hadoop_path(spark, tmp)
+    try:
+        writer.format(fmt).option("header", True).save(tmp)
+        counts = seen.get
+        # data columns as written, then the partition columns as
+        # discovery types them; the explicit schema spares the
+        # inference job
+        read = spark.read.schema(
+            StructType([f for f in df.schema if f.name not in parts])
+        ).format(fmt).option("header", True)
+        schema = read.load(tmp).schema
+        # an empty partitioned write leaves no directory to discover
+        for f in df.schema:
+            if f.name in parts and f.name not in schema.names:
+                schema.add(f.name, f.dataType)
+        for name, bad in gates.items():
+            if counts[name]:
+                rows = read.schema(schema).load(tmp).filter(bad).limit(5).collect()
+                raise DataQualityError(
+                    f"gate {name!r} failed on {counts[name]} rows; first "
+                    f"rows: {[tuple(r) for r in rows]}"
+                )
+        pattern = "/".join([tmp, *["*"] * len(parts), "part-*"])
+        files = list(fs.globStatus(_hadoop_path(spark, pattern)[1]) or [])
+        manifest = {
+            "schema": json.loads(schema.json()),
+            "rows": counts["rows"],
+            "files": len(files),
+            "bytes": sum(st.getLen() for st in files),
+            "gates": {name: counts[name] for name in gates},
+        }
+        stream = fs.create(_hadoop_path(spark, f"{tmp}/_manifest.json")[1], True)
+        try:
+            stream.write(bytearray(json.dumps(manifest, indent=1).encode()))
+        finally:
+            stream.close()
+    except BaseException:
+        fs.delete(staged, True)
+        raise
+    swap_in(spark, path)
+    return manifest
