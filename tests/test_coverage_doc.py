@@ -77,3 +77,65 @@ def test_readme_names_only_existing_files():
         p for p in named if not os.path.exists(os.path.join(REPO, p))
     )
     assert not missing, f"README.md names files that do not exist: {missing}"
+
+
+def _package_imports():
+    """``{module: set of package modules it imports}`` from an AST
+    scan of ``trisk_datawrangle_spark/``, function-local imports
+    included. Importing ``a.b.c`` also runs ``a/__init__`` and
+    ``a/b/__init__``, so parent packages count as imported."""
+    import ast
+
+    pkg = "trisk_datawrangle_spark"
+    files = {}
+    for d, _, fs in os.walk(os.path.join(REPO, pkg)):
+        for f in fs:
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(d, f), REPO)[:-3]
+                mod = rel.replace(os.sep, ".").removesuffix(".__init__")
+                files[mod] = os.path.join(d, f)
+
+    def with_parents(mod):
+        parts = mod.split(".")
+        return {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+
+    graph = {}
+    for mod, path in files.items():
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        deps = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                targets = [node.module] + [
+                    f"{node.module}.{a.name}" for a in node.names
+                ]
+            else:
+                continue
+            for t in targets:
+                if t.startswith(pkg):
+                    deps |= {m for m in with_parents(t) if m in files}
+        graph[mod] = deps
+    return graph
+
+
+def test_every_module_reachable_from_an_entry_point():
+    """Every package module must be imported, directly or through
+    others, by ``run_workflow``, the catalog or the package
+    ``__init__``. A module that outlives its last caller (its catalog
+    entries deleted, nothing else importing it) fails here."""
+    graph = _package_imports()
+    roots = [
+        "trisk_datawrangle_spark",
+        "trisk_datawrangle_spark.run_workflow",
+        "trisk_datawrangle_spark.catalog",
+    ]
+    seen, todo = set(), list(roots)
+    while todo:
+        mod = todo.pop()
+        if mod not in seen:
+            seen.add(mod)
+            todo.extend(graph[mod])
+    orphans = sorted(set(graph) - seen - {"trisk_datawrangle_spark.__main__"})
+    assert not orphans, f"modules no entry point imports: {orphans}"

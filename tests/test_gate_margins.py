@@ -142,32 +142,3 @@ def test_asof_oracle_right_side_keys_are_unique(spark, sf):
         f"DuckDB ASOF oracle tie pick is unspecified; either dedup "
         f"the right side in the entries or drop the hash gate"
     )
-
-
-@pytest.mark.parametrize("sf", _SCAN_DIRS)
-def test_cms_deviation_far_inside_gate(spark, sf):
-    """x12 flags estimates within eps·N of exact. CMS overcount is
-    probabilistic (collisions), so assert the corpus sits at ≤ 1/4 of
-    the gate — a regenerated corpus that drifts toward the bound
-    fails here with the measured deviation, not as a driver hash
-    mismatch."""
-    from trisk_datawrangle_spark.llm.text import token_topk, tokenize
-    from trisk_datawrangle_spark.operators.sketches import (
-        cms_estimate,
-        cms_sketch,
-        cms_total,
-    )
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    toks = docs.select(F.explode(tokenize("text")).alias("token"))
-    top = token_topk(docs, "text", k=50).collect()
-    sk = cms_sketch(toks, "token", eps=1e-4, confidence=0.999, seed=42)
-    est = cms_estimate(spark, sk, [r["token"] for r in top])
-    bound = max(1.0, 1e-4 * cms_total(spark, sk))
-    dev = max(est[r["token"]] - r["n"] for r in top)
-    under = min(est[r["token"]] - r["n"] for r in top)
-    assert under >= 0, "CMS undercounted — sketch/estimate disagree on hashing"
-    assert dev <= bound / 4, (
-        f"{sf}: max CMS deviation {dev} is inside {bound} but past the "
-        f"safety margin — x12's within_eps gate is at risk"
-    )

@@ -76,48 +76,6 @@ def test_merge_empty_batch_is_noop(spark, tmp_path_factory):
     assert spark.read.parquet(path).count() == 1
 
 
-def test_stream_upsert_resumes_from_checkpoint(spark, tmp_path_factory):
-    """Two availableNow runs against the same checkpoint: the second
-    merges only files added after the first — streaming ingestion
-    maintaining a keyed table."""
-    from trisk_datawrangle_spark.sources.incremental import stream_upsert
-
-    root = str(tmp_path_factory.mktemp("sinc"))
-    src, table, ckpt = f"{root}/src", f"{root}/table", f"{root}/ckpt"
-    schema = "id long, day string, v double"
-
-    spark.createDataFrame(
-        [(1, "d1", 1.0), (2, "d2", 2.0)], schema
-    ).write.mode("append").parquet(src)
-    q = stream_upsert(
-        spark.readStream.schema(schema).parquet(src),
-        table, keys=["id"], partition_by=["day"], checkpoint=ckpt,
-    )
-    q.awaitTermination(120)
-    first = {
-        (r.id, r.day, r.v)
-        for r in spark.read.parquet(table).select("id", "day", "v").collect()
-    }
-    assert first == {(1, "d1", 1.0), (2, "d2", 2.0)}
-    d2_files_before = _files(table, "d2")
-
-    # second batch: update id=1, add id=3 — d2 untouched
-    spark.createDataFrame([(1, "d1", 9.0), (3, "d3", 3.0)], schema).write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_upsert(
-        spark.readStream.schema(schema).parquet(src),
-        table, keys=["id"], partition_by=["day"], checkpoint=ckpt,
-    )
-    q.awaitTermination(120)
-    second = {
-        (r.id, r.day, r.v)
-        for r in spark.read.parquet(table).select("id", "day", "v").collect()
-    }
-    assert second == {(1, "d1", 9.0), (2, "d2", 2.0), (3, "d3", 3.0)}
-    assert _files(table, "d2") == d2_files_before
-
-
 def test_merge_handles_null_partition_values(spark, tmp_path_factory):
     """Rows already in a NULL partition must survive a merge into it
     (== lit(None) is NULL, not a match — the filter needs eqNullSafe)."""

@@ -30,5 +30,5 @@ def test_every_query_has_oracle():
     # since round 4 the full catalog is oracle-gated: hash-seeded ops
     # compose with exact verification (d3/d4/c2), deterministic
     # hashing is replayed in SQL (s2 planes, m3 sha features), and
-    # approximate sketches are gated against ground truth (e6)
+    # approximate sketches are gated against ground truth (a13)
     assert set(QUERIES) == set(ORACLES)

@@ -240,21 +240,6 @@ def test_filter_countries_coverage_modes(spark):
         filter_countries_coverage(ar, None, ["AA"], True, False)
 
 
-def test_session_window_single_shuffle(spark, sf_dir):
-    """Batch session windows are one hash shuffle on the group key —
-    no extra exchange, no join machinery."""
-    from trisk_datawrangle_spark.catalog import QUERIES
-
-    plan = (
-        QUERIES["e8_session_window"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange") == 1, plan
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-
-
 def test_asof_directions_single_shuffle(spark, sf_dir):
     """forward keeps the backward plan shape (one exchange, reversed
     sort); nearest evaluates both windows on the SAME exchange — the
@@ -372,22 +357,6 @@ def test_lm_score_model_joins_are_hash_joins(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1, plan
     assert plan.count("BroadcastHashJoin") == 2, plan
-
-
-def test_stream_static_join_broadcasts_dim(spark, sf_dir):
-    """e10: the customer→nation dimension broadcasts onto the events
-    scan — the stream side takes zero join-induced exchange (its only
-    shuffle is the windowed aggregate itself)."""
-    from trisk_datawrangle_spark.catalog import QUERIES
-
-    plan = (
-        QUERIES["e10_stream_static_join"](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_incremental_dedup_no_cartesian(spark, sf_dir):

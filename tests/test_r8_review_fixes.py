@@ -7,8 +7,6 @@ from __future__ import annotations
 import os
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 
 def test_x48_tokenless_doc_matches_oracle(spark, tmp_path):
@@ -62,84 +60,6 @@ def test_semantic_dedup_exact_tier_custom_columns(spark):
         ).collect()
     }
     assert out == {(1, True), (2, False), (3, True)}
-
-
-def test_serving_roots_distinct_for_same_basename(
-    spark, tmp_path, monkeypatch
-):
-    """Two corpora sharing a directory BASENAME must not share a
-    published serving index (the root carries a full-path hash)."""
-    import trisk_datawrangle_spark.catalog.llm as cat
-
-    monkeypatch.setenv("SPARK_GRAFT_SERVING_DIR", str(tmp_path / "srv"))
-    monkeypatch.setattr(cat, "_SERVING_INDEX_CACHE", {})
-    a = tmp_path / "corpusA" / "sf0.1"
-    b = tmp_path / "corpusB" / "sf0.1"
-    a.mkdir(parents=True)
-    b.mkdir(parents=True)
-
-    built = []
-
-    def build(staged):
-        built.append(staged)
-        os.makedirs(staged, exist_ok=True)
-        with open(os.path.join(staged, "meta.json"), "w") as fh:
-            fh.write("{}")
-
-    ra = cat._served_index_path(spark, "lsh", str(a), build)
-    rb = cat._served_index_path(spark, "lsh", str(b), build)
-    assert ra != rb
-    assert len(built) == 2  # each corpus built its own index
-
-
-def test_serving_memo_survives_external_wipe(spark, tmp_path, monkeypatch):
-    """An externally deleted serving root must rebuild transparently
-    on the next call, not fail on the stale memo."""
-    import shutil
-
-    import trisk_datawrangle_spark.catalog.llm as cat
-
-    monkeypatch.setenv("SPARK_GRAFT_SERVING_DIR", str(tmp_path / "srv"))
-    monkeypatch.setattr(cat, "_SERVING_INDEX_CACHE", {})
-    corpus = tmp_path / "c" / "sfX"
-    corpus.mkdir(parents=True)
-    built = []
-
-    def build(staged):
-        built.append(staged)
-        os.makedirs(staged, exist_ok=True)
-        with open(os.path.join(staged, "meta.json"), "w") as fh:
-            fh.write("{}")
-
-    root = cat._served_index_path(spark, "lsh", str(corpus), build)
-    assert len(built) == 1
-    shutil.rmtree(root)
-    root2 = cat._served_index_path(spark, "lsh", str(corpus), build)
-    assert root2 == root and len(built) == 2
-
-
-def test_write_bucketed_recovers_orphaned_location(spark):
-    """A leftover warehouse directory with no catalog entry must be
-    cleared and rewritten, not crash with LOCATION_ALREADY_EXISTS."""
-    from trisk_datawrangle_spark.sources.bucketed import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS r8rev")
-    spark.sql("DROP TABLE IF EXISTS r8rev.orphan_b")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(wh, "r8rev.db", "orphan_b")
-    os.makedirs(loc, exist_ok=True)
-    with open(os.path.join(loc, "stale.parquet"), "wb") as fh:
-        fh.write(b"junk")
-    df = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    write_bucketed(df, "r8rev.orphan_b", ["k"], 4)
-    assert read_bucketed(spark, "r8rev.orphan_b").count() == 100
-    spark.sql("DROP TABLE r8rev.orphan_b")
-    spark.sql("DROP DATABASE r8rev")
 
 
 def test_http_body_chunked_spellings_refused():

@@ -269,3 +269,35 @@ def test_empty_query_batch_returns_typed_empty(spark):
     out2 = rescore_topk(cand, e, none, k=5)
     assert out2.columns == ["query_id", "neighbor_id", "cosine", "rank"]
     assert out2.count() == 0
+
+
+def test_collect_query_batch_guard(spark):
+    import pytest
+
+    from trisk_datawrangle_spark.llm.similarity import collect_query_batch
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    rows = collect_query_batch(
+        e.filter(F.col("vec_id") < 10), "vec_id", "embedding", max_rows=10
+    )
+    assert len(rows) == 10
+    with pytest.raises(ValueError, match="max_rows"):
+        collect_query_batch(e, "vec_id", "embedding", max_rows=10)
+
+
+def test_unranked_ivf_pq_is_bare_candidates(spark):
+    """ranked=False (r13): the full-candidate refine shape gets the
+    candidate PAIR SET with no ADC scoring — the same pairs as the
+    ranked probe."""
+    from trisk_datawrangle_spark.llm.similarity import ivf_pq_topk
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    q = e.filter(F.col("vec_id") < 5)
+    kw = dict(k=2_000_000_000, n_cells=16, n_probe=16, m=8)
+    cand = ivf_pq_topk(e, q, ranked=False, **kw)
+    assert cand.columns == ["query_id", "neighbor_id"]
+    ranked = ivf_pq_topk(e, q, ranked=True, **kw)
+    got = _pairs(cand.collect())
+    assert got == _pairs(ranked.collect()) and got

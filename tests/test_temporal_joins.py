@@ -1,14 +1,10 @@
 """Temporal join semantics: the shuffle-friendly implementations
 (union+LOCF as-of, bucketed interval equi-join) must agree with the
-naive inequality-join definitions they replace, and the stream-stream
-band join must produce identical rows under Structured Streaming and
-batch.
+naive inequality-join definitions they replace.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -16,7 +12,6 @@ from pyspark.sql import functions as F
 from trisk_datawrangle_spark.operators.temporal import (
     interval_join,
     join_asof,
-    stream_interval_join,
 )
 
 
@@ -143,53 +138,6 @@ def test_interval_join_matches_naive_and_handles_edges(spark):
     # intervals longer than the bucket span multiple buckets; each
     # point still matches exactly once per covering interval
     assert got == {(1, 10), (2, 10), (2, 11), (3, 10), (5, 12)}
-
-
-def test_stream_interval_join_matches_batch(spark, sf_dir):
-    from trisk_datawrangle_spark.sources.readers import load_tables
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id",
-        F.col("ts").alias("click_ts"),
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        F.col("user_id").alias("user_id"),
-        F.col("ts").alias("err_ts"),
-    )
-    batch = {
-        (r.click_id, r.err_id)
-        for r in stream_interval_join(
-            clicks, errors, ["user_id"], "click_ts", "err_ts",
-            lower_seconds=1800, upper_seconds=0,
-        ).collect()
-    }
-
-    d = tempfile.mkdtemp(prefix="trisk_ssj_")
-    try:
-        clicks.write.mode("overwrite").parquet(f"{d}/clicks")
-        errors.write.mode("overwrite").parquet(f"{d}/errors")
-        sc = spark.readStream.schema(clicks.schema).parquet(f"{d}/clicks")
-        se = spark.readStream.schema(errors.schema).parquet(f"{d}/errors")
-        joined = stream_interval_join(
-            sc, se, ["user_id"], "click_ts", "err_ts",
-            lower_seconds=1800, upper_seconds=0, watermark="2 hours",
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("t_ssj")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        streamed = {
-            (r.click_id, r.err_id) for r in spark.table("t_ssj").collect()
-        }
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    assert streamed == batch and len(batch) > 0
 
 
 def test_asof_rejects_colliding_left_columns(spark):

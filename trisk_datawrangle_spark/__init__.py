@@ -15,11 +15,17 @@ Layout
                  interpolation, windows, joins, reshape, set ops,
                  data-quality assertions, geography regrouping
                  (SURVEY.md §2.1-§2.11).
-- ``sources``    typed readers/writers (SURVEY.md §2.1).
+- ``sources``    typed readers/writers, the checked sink, incremental
+                 key-merge and compaction (SURVEY.md §2.1).
 - ``plans``      pipeline compositions mirroring the reference's
                  run_workflow stages (SURVEY.md §3).
-- ``llm``        large-scale training-data operators: dedup, similarity
-                 search, text analysis, multimodal column plumbing.
+- ``run_workflow`` the eight-stage batch runner over ``plans``.
+- ``llm``        training-data operators: dedup, similarity search,
+                 text analysis, multimodal column plumbing.
+- ``catalog``    every operator as a (Spark query, DuckDB oracle) pair.
+
+Everything is batch: the reference has no streaming surface
+(SURVEY.md §2.12).
 """
 
 __version__ = "0.1.0"

@@ -782,46 +782,6 @@ def a6a7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- #
-# e3: sliding window with oracle                                    #
-# ---------------------------------------------------------------- #
-
-
-@q(
-    "e9_sliding_window",
-    """
-SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-       event_type, COUNT(*) AS n
-FROM (
-    SELECT e.event_type,
-        date_trunc('hour', e.ts) - INTERVAL (o.k) HOUR AS ws
-    FROM events e
-    CROSS JOIN (SELECT unnest([0, 1]) AS k) o
-)
-GROUP BY 1, 2
-""",
-)
-def e3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window aggregation (2h window, 1h slide) in batch —
-    the same expression tree runs under readStream (verified in
-    tests/test_streaming_and_skew.py). Oracle: each event lands in
-    the two windows starting at trunc(ts) and trunc(ts)-1h."""
-    from trisk_datawrangle_spark.streaming.windows import sliding_agg
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    res = sliding_agg(
-        ev, "ts", "2 hours", "1 hour", ["event_type"],
-        [F.count(F.lit(1)).alias("n")],
-    )
-    return res.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "window_start"
-        ),
-        "event_type",
-        "n",
-    )
-
-
-# ---------------------------------------------------------------- #
 # w3 — datalake prep composite (data-raw/prep_datalake.R)           #
 # ---------------------------------------------------------------- #
 
@@ -973,39 +933,6 @@ def w3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "debt_equity_ratio",
         "parent_company_id",
         "linking_stake",
-    )
-
-
-# ---------------------------------------------------------------- #
-# st1 — custom stateful op, batch fixpoint                          #
-# ---------------------------------------------------------------- #
-
-
-@q(
-    "st1_stateful_running_totals",
-    """
-SELECT CAST(event_type AS VARCHAR) AS event_type,
-    COUNT(*) AS n,
-    ROUND(SUM(value), 4) AS total,
-    FALSE AS finalized
-FROM events
-GROUP BY event_type
-""",
-)
-def st1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (streaming/stateful.py
-    running_totals): per-key running (count, sum). The streaming path
-    is applyInPandasWithState with timeout eviction; this entry gates
-    the BATCH fixpoint of the same function (the final totals every
-    micro-batch converges to), which is SQL-expressible — the
-    stream/batch agreement is separately tested in
-    tests/test_streaming_and_skew.py."""
-    from trisk_datawrangle_spark.streaming.stateful import running_totals
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    res = running_totals(ev, ["event_type"], "value")
-    return res.select(
-        "event_type", "n", F.round("total", 4).alias("total"), "finalized"
     )
 
 
@@ -1417,142 +1344,8 @@ def e13(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- #
-# physical layout (r7 verdict #6): the two 100-TB-critical layout   #
-# claims — z-order data skipping and shuffle-free bucketed joins —  #
-# driver-gated with hard oracles PLUS their plan/footer asserts     #
-# inline, so a layout regression fails the correctness window, not  #
-# just pytest.                                                      #
+# u4 — incremental upsert; y1 — compaction                          #
 # ---------------------------------------------------------------- #
-
-_Z1_LO_CUST, _Z1_HI_CUST = 400, 700
-_Z1_LO_PRICE, _Z1_HI_PRICE = 50_000.0, 120_000.0
-
-
-@q(
-    "z1_zorder_scan",
-    f"""
-SELECT o_orderkey, o_custkey,
-    CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-FROM orders
-WHERE o_custkey BETWEEN {_Z1_LO_CUST} AND {_Z1_HI_CUST}
-  AND o_totalprice BETWEEN {_Z1_LO_PRICE} AND {_Z1_HI_PRICE}
-""",
-)
-def z1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout, probed: orders is rewritten ONCE per corpus
-    clustered on the Morton curve of (o_custkey, o_totalprice)
-    (sources/zorder.py write_zordered — rank-space bucketing by
-    approx quantiles, pure-expression bit interleave, one sampled
-    range exchange), then a 2-D range predicate reads the z-ordered
-    copy. The oracle answers the same predicate from the ORIGINAL
-    table — layout must never change results. The entry ALSO asserts
-    the layout earns its keep: parquet footer min/max boxes
-    (file_minmax_boxes) must prune at least a third of the files for
-    this predicate, else it raises — so the skipping claim is
-    driver-gated, not narrative. At 100 TB this is the difference
-    between scanning every file and scanning the predicate's
-    neighborhood on BOTH dimensions."""
-    from trisk_datawrangle_spark.sources.zorder import (
-        file_minmax_boxes,
-        files_pruned,
-        write_zordered,
-    )
-
-    (orders,) = load_tables(spark, sf_dir, ["orders"]).values()
-    path = _scratch(sf_dir, "z1_orders_zordered")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_zordered(
-            orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-            path,
-            ["o_custkey", "o_totalprice"],
-            n_files=16,
-            bits=8,
-        )
-    boxes = file_minmax_boxes(path, ["o_custkey", "o_totalprice"])
-    hit, total = files_pruned(
-        boxes,
-        {
-            "o_custkey": (_Z1_LO_CUST, _Z1_HI_CUST),
-            "o_totalprice": (_Z1_LO_PRICE, _Z1_HI_PRICE),
-        },
-    )
-    if total >= 4 and hit > (2 * total) // 3:
-        raise AssertionError(
-            f"z1: z-order layout prunes nothing ({hit}/{total} files "
-            "survive a selective 2-D predicate) — clustering broken"
-        )
-    z = spark.read.parquet(path)
-    return z.filter(
-        F.col("o_custkey").between(_Z1_LO_CUST, _Z1_HI_CUST)
-        & F.col("o_totalprice").between(_Z1_LO_PRICE, _Z1_HI_PRICE)
-    ).select(
-        "o_orderkey",
-        "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias(
-            "price_cents"
-        ),
-    )
-
-
-@q(
-    "b1_bucketed_join",
-    """
-SELECT c.c_mktsegment,
-    COUNT(*) AS n_orders,
-    SUM(CAST(round(o.o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY 1
-""",
-)
-def b1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed co-located join, driver-gated: orders and customer
-    are persisted ONCE per corpus as bucketed managed tables on the
-    join key (sources/bucketed.py write_bucketed, 8 buckets), then
-    joined WITHOUT any Exchange — assert_no_shuffle_join raises if
-    either side would shuffle (bucket metadata lost), so the
-    zero-shuffle claim gates the correctness window itself. The
-    oracle runs the plain join on the original tables — bucketing
-    must never change results. At 100 TB pre-bucketing both fact
-    tables on the join key is what turns every downstream join into
-    a scan-local merge (no network), the single biggest shuffle
-    saving a warehouse layout buys."""
-    import hashlib
-
-    from trisk_datawrangle_spark.sources.bucketed import (
-        assert_no_shuffle_join,
-        write_bucketed,
-    )
-
-    full = os.path.abspath(os.path.normpath(sf_dir))
-    tag = hashlib.sha256(full.encode()).hexdigest()[:12]
-    db = f"b1_{tag}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    t = load_tables(spark, sf_dir, ["orders", "customer"])
-    names = {}
-    for side, keyed in (
-        ("orders", t["orders"].select(
-            F.col("o_custkey").alias("custkey"), "o_totalprice")),
-        ("customer", t["customer"].select(
-            F.col("c_custkey").alias("custkey"), "c_mktsegment")),
-    ):
-        name = f"{db}.{side}_b"
-        names[side] = name
-        if not spark.catalog.tableExists(name):
-            # write_bucketed recovers a previous process's orphaned
-            # warehouse directory itself (scheme-agnostic, via the
-            # Hadoop FS API) — the entry only decides WHETHER to
-            # rebuild, never how to clean storage
-            write_bucketed(keyed, name, ["custkey"], 8,
-                           sort_cols=["custkey"])
-    joined = spark.table(names["orders"]).join(
-        spark.table(names["customer"]), "custkey"
-    )
-    assert_no_shuffle_join(joined)
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        (F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-         / 100.0).alias("revenue"),
-    )
 
 
 @q(
@@ -1694,9 +1487,9 @@ GROUP BY 1
 """,
 )
 def y1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction, driver-gated (z1's pattern for the
-    janitor): orders is written FRAGMENTED (each of 4 partitions
-    shattered into 16 files — the incremental-writer pathology),
+    """Small-file compaction, driver-gated: orders is written
+    FRAGMENTED (each of 4 partitions shattered into 16 files — the
+    incremental-writer pathology),
     sources/compaction.py compact_partitions rewrites every
     over-fragmented partition via the crash-safe swap, the entry
     ASSERTS the file count actually collapsed (raises into the

@@ -337,7 +337,6 @@ kfin AS (
     return "".join(parts)
 
 
-
 def _d14_sql(k: int = 8, n_iter: int = 2, threshold: float = 0.45) -> str:
     """SemDeDup oracle FOR THE DEFAULT CLUSTERED TIER: the x31
     integer-exact k-means CTEs, cosine pairs restricted to within
@@ -607,7 +606,7 @@ FROM ranked WHERE rank <= 5
 """,
 )
 def s6(spark, sf_dir):
-    """ADC-only recall gate (the e6 pattern: SQL-computable ground
+    """ADC-only recall gate (SQL-computable ground
     truth anchors + a boolean accuracy flag the oracle asserts TRUE):
     IVF-PQ at REALISTIC pruned settings (n_probe=8 of 16 cells, m=8
     → 8-byte codes) proposes 40 candidates per query, exact-rescore
@@ -742,41 +741,6 @@ def s8_pca(spark, sf_dir):
             F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
             >= 0.5 * F.count(F.lit(1))
         ).alias("recall_ok"),
-    )
-
-
-@q(
-    "s7_ivf_pq_persisted",
-    ORACLES["s1_cosine_topk"],
-)
-def s7_pq(spark, sf_dir):
-    """Persisted-index ANN lifecycle (llm/pq_index.py): train + encode
-    + WRITE the IVF-PQ index to disk (codes partitioned by cell, model
-    as parquet tables), then serve the query batch from the STORED
-    index with cell-pruned reads — the s5 exact-recovery drive
-    (full probe + exact rescore) through the persisted path, so the
-    whole write→load→probe lifecycle must reproduce s1's brute-force
-    oracle bit-for-bit at 4 decimals."""
-    import tempfile
-
-    from trisk_datawrangle_spark.llm.pq_index import (
-        ivf_pq_index_topk,
-        write_ivf_pq_index,
-    )
-
-    e = _embs(spark, sf_dir)
-    qd = e.filter(F.col("vec_id") < 10)
-    path = tempfile.mkdtemp(prefix="pq_index_") + "/idx"
-    write_ivf_pq_index(e, path, n_cells=16, m=8)
-    cand = ivf_pq_index_topk(
-        spark, path, qd, k=2_000_000_000, n_probe=16
-    )
-    res = rescore_topk(cand, e, qd, k=5)
-    return res.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cosine", 4).alias("cosine"),
-        F.col("rank").cast("int").alias("rank"),
     )
 
 
@@ -3278,7 +3242,7 @@ def c2(spark, sf_dir):
 
 
 # ---------------------------------------------------------------- #
-# x11/x12 — token heavy hitters: exact top-k + Count-Min gate       #
+# x11 — token heavy hitters: exact top-k                            #
 # ---------------------------------------------------------------- #
 
 _TOPK_SQL = """
@@ -3307,73 +3271,6 @@ def x11(spark, sf_dir):
     from trisk_datawrangle_spark.llm.text import token_topk
 
     return token_topk(_docs(spark, sf_dir), "text", k=40)
-
-
-@q(
-    "x12_cms_freq_gate",
-    """
-SELECT token, exact_n, TRUE AS within_eps FROM (
-    SELECT token, CAST(count(*) AS BIGINT) AS exact_n
-    FROM (
-        SELECT unnest(string_split_regex(lower(text), '[^a-z0-9]+'))
-            AS token
-        FROM documents
-    )
-    WHERE token <> ''
-    GROUP BY token
-    ORDER BY exact_n DESC, token ASC
-    LIMIT 20
-)
-""",
-)
-def x12(spark, sf_dir):
-    """Count-Min sketch frequency estimates gated against ground
-    truth (the e6 HLL pattern for point frequencies): the sketch is
-    built/merged JVM-side by the ``count_min_sketch`` aggregate, the
-    KB-scale binary is estimated driver-side for the exact top-20
-    tokens, and each row carries ``within_eps`` — CMS never
-    undercounts, and overcounts by ≤ eps·N with the configured
-    confidence (eps=1e-4, conf=0.999; the margin test in
-    tests/test_gate_margins.py asserts the corpus sits far inside
-    the bound, so this gate fails diagnostically, not flakily)."""
-    from trisk_datawrangle_spark.llm.text import word_gram_table
-    from trisk_datawrangle_spark.operators.sketches import (
-        cms_estimate,
-        cms_sketch,
-        cms_total,
-    )
-
-    docs = _docs(spark, sf_dir)
-    # ONE cached token frame feeds both the exact top-k and the
-    # sketch aggregate (uncached, the scan+explode would run twice;
-    # a cache consumed once would be pure overhead)
-    toks = (
-        word_gram_table(docs, "text", "doc_id", n=1)
-        .select(F.col("gram").alias("token"))
-        .cache()
-    )
-    top = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("token").asc())
-        .limit(20)
-        .collect()  # bounded: 20 rows
-    )
-    sk = cms_sketch(toks, "token", eps=1e-4, confidence=0.999, seed=42)
-    est = cms_estimate(spark, sk, [r["token"] for r in top])
-    bound = max(1.0, 1e-4 * cms_total(spark, sk))  # the eps·N guarantee
-    rows = [
-        (
-            r["token"],
-            r["n"],
-            bool(est[r["token"]] >= r["n"]
-                 and est[r["token"]] - r["n"] <= bound),
-        )
-        for r in top
-    ]
-    return spark.createDataFrame(
-        rows, "token string, exact_n bigint, within_eps boolean"
-    )
 
 
 # ---------------------------------------------------------------- #
@@ -3811,190 +3708,6 @@ def d11(spark, sf_dir):
     )
     return pairs.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-@q("d13_persisted_index_dedup", _d11_sql())
-def d13(spark, sf_dir):
-    """Persisted-index dedup — the full production lifecycle of
-    d11's continual-ingestion shape (llm/lsh_index.py): the corpus
-    side's shingle + banded tables are WRITTEN to disk (partitioned
-    by collision shard) and the batch probes the STORED index with
-    partition-pruned reads, never re-shingling the corpus. Same
-    even/odd split and hard oracle as d11 — the lifecycle must
-    reproduce the inline derivation bit-for-bit."""
-    import tempfile
-
-    from trisk_datawrangle_spark.llm.lsh_index import (
-        minhash_lsh_index_pairs,
-        write_lsh_index,
-    )
-
-    docs = _docs(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="lsh_index_") + "/idx"
-    # 8 shards keep the fixture's leaf-directory count filesystem-
-    # friendly; production defaults to 64 (llm/lsh_index.py)
-    write_lsh_index(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        path,
-        num_hashes=64,
-        bands=32,
-        n_shards=8,
-    )
-    pairs = minhash_lsh_index_pairs(
-        spark,
-        path,
-        docs.filter(F.col("doc_id") % 2 == 1),
-        threshold=0.5,
-    )
-    return pairs.select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-# Probe-only serving entries: d13/s7 charge a full index WRITE
-# (build + persist + re-read) to every run, which hides the number a
-# production deployment actually cares about — the latency of serving
-# a query batch against an index that already exists. Since r8 (r7
-# verdict #5) the build publishes through the PRODUCTION lifecycle:
-# staged build -> publish_index_versioned into a STABLE versioned
-# root -> probes resolve the root's CURRENT pointer
-# (llm/lsh_index.py resolve_index_path — every probe entrypoint
-# calls it), so a SECOND process finds the published version instead
-# of rebuilding into a private tmpdir, and the serving entries
-# exercise the versioned-pointer read path end-to-end on every run.
-# In a timed loop the cold pass absorbs the one-time build and
-# every warm pass measures the partition-pruned probe alone. Same hard
-# oracles as the lifecycle entries — the probe against a published
-# index must reproduce the inline derivation bit-for-bit, so a
-# stale/corrupt version can never pass silently.
-_SERVING_INDEX_CACHE: dict = {}
-
-
-def _served_index_path(spark, kind: str, sf_dir, build) -> str:
-    """Return the stable versioned ROOT for (kind, sf_dir) —
-    probes resolve its CURRENT pointer — building and publishing
-    v=1 if no version is published yet. The root name carries a
-    hash of the corpus's FULL absolute path (the _scratch rule):
-    two different corpora that happen to share a directory basename
-    must never share a published index. The staging directory lives
-    UNDER the root (same filesystem), so the publish rename is a
-    metadata move, never a copy. The memo is only a fast path — the
-    pointer's existence is re-checked every call, so an externally
-    wiped root rebuilds transparently instead of failing on a
-    dangling CURRENT."""
-    import hashlib
-    import os
-
-    from trisk_datawrangle_spark.llm.lsh_index import (
-        CURRENT_POINTER,
-        publish_index_versioned,
-    )
-
-    full = os.path.abspath(os.path.normpath(str(sf_dir)))
-    sf_tag = os.path.basename(full) or "sf"
-    corpus = hashlib.sha256(full.encode()).hexdigest()[:12]
-    base = os.environ.get(
-        "SPARK_GRAFT_SERVING_DIR",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)))),
-            ".scratch", "serving",
-        ),
-    )
-    root = os.path.join(base, f"{kind}-{sf_tag}-{corpus}")
-    if not os.path.exists(os.path.join(root, CURRENT_POINTER)):
-        os.makedirs(root, exist_ok=True)
-        staged = os.path.join(root, f".staging-{os.getpid()}")
-        build(staged)
-        publish_index_versioned(spark, staged, root)
-    _SERVING_INDEX_CACHE[(kind, full)] = root
-    return root
-
-
-@q("d13_probe_serving", _d11_sql())
-def d13_probe(spark, sf_dir):
-    """LSH index SERVING latency — d13's probe stage alone: the
-    even-half index is built once and PUBLISHED through the
-    versioned lifecycle (publish_index_versioned into a stable root;
-    a second process finds the published version rather than
-    rebuilding), and each run resolves the root's CURRENT pointer
-    and probes the stored bands/shingles with partition-pruned reads
-    (llm/lsh_index.py minhash_lsh_index_pairs). This is the
-    steady-state continual-ingestion cost: at 100 TB the corpus
-    index is built once and amortized over every incoming batch, so
-    the per-batch number is probe, not build — and the probe
-    exercises the atomic-pointer read path a retrain-and-swap
-    deployment serves through."""
-    from trisk_datawrangle_spark.llm.lsh_index import (
-        minhash_lsh_index_pairs,
-        write_lsh_index,
-    )
-
-    docs = _docs(spark, sf_dir)
-
-    def build(staged: str) -> None:
-        write_lsh_index(
-            docs.filter(F.col("doc_id") % 2 == 0),
-            staged,
-            num_hashes=64,
-            bands=32,
-            n_shards=8,
-        )
-
-    path = _served_index_path(spark, "lsh", sf_dir, build)
-    pairs = minhash_lsh_index_pairs(
-        spark,
-        path,
-        docs.filter(F.col("doc_id") % 2 == 1),
-        threshold=0.5,
-    )
-    return pairs.select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-    )
-
-
-@q("s7_probe_serving", ORACLES["s1_cosine_topk"])
-def s7_probe(spark, sf_dir):
-    """IVF-PQ index SERVING latency — s7's probe stage alone: the
-    index is trained/encoded once and PUBLISHED through the
-    versioned lifecycle (publish_index_versioned into a stable root;
-    a second process finds the published version rather than
-    rebuilding), and each run resolves the root's CURRENT pointer
-    and serves the query batch from the stored codes with
-    cell-pruned reads + exact rescore (llm/pq_index.py
-    ivf_pq_index_topk). Full-probe + rescore recovers s1's
-    brute-force oracle exactly, so the versioned-pointer serving
-    path stays hash-gated while the bench records query latency,
-    not build cost."""
-    from trisk_datawrangle_spark.llm.pq_index import (
-        ivf_pq_index_topk,
-        write_ivf_pq_index,
-    )
-    from trisk_datawrangle_spark.llm.similarity import collect_query_batch
-
-    e = _embs(spark, sf_dir)
-    qd = e.filter(F.col("vec_id") < 10)
-
-    def build(staged: str) -> None:
-        write_ivf_pq_index(e, staged, n_cells=16, m=8)
-
-    path = _served_index_path(spark, "ivf_pq", sf_dir, build)
-    # collect the request batch ONCE and hand it to both stages (r13)
-    # — the probe GEMM and the rescore broadcast use the same rows,
-    # so the serving pipeline pays one query-collect job, not two
-    q_rows = collect_query_batch(qd, "vec_id", "embedding", caller="s7")
-    cand = ivf_pq_index_topk(
-        spark, path, qd, k=2_000_000_000, n_probe=16,
-        ranked=False,  # every pair feeds the exact rescore (r12)
-        q_rows=q_rows,
-    )
-    res = rescore_topk(cand, e, qd, k=5, q_rows=q_rows)
-    return res.select(
-        "query_id",
-        "neighbor_id",
-        F.round("cosine", 4).alias("cosine"),
-        F.col("rank").cast("int").alias("rank"),
     )
 
 
@@ -5370,7 +5083,7 @@ def x50(spark, sf_dir):
     into the scan (zero Python, like x46); one explode + one
     map-side-combinable groupBy on the host key — the plan survives
     any corpus size; hot hosts (every real link graph has them) are
-    exactly the k1/k2 salting case if the aggregate ever skews."""
+    absorbed by the map-side partial counts."""
     from trisk_datawrangle_spark.llm.extract import anchor_hrefs_expr
 
     d = _docs(spark, sf_dir).select("doc_id")

@@ -70,7 +70,6 @@ from trisk_datawrangle_spark.plans.pipelines import (
     yearly_revenue_series,
 )
 from trisk_datawrangle_spark.sources.readers import fan_out_scan, load_tables
-from trisk_datawrangle_spark.streaming.windows import tumbling_agg
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -1456,20 +1455,12 @@ FROM events GROUP BY 1, 2
 )
 def e1(spark, sf_dir):
     (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    res = tumbling_agg(
-        ev,
-        "ts",
-        "1 hour",
-        ["event_type"],
-        [
-            F.count(F.lit(1)).alias("n"),
-            exact_cents_sum("value").alias("sum_value"),
-        ],
+    res = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        exact_cents_sum("value").alias("sum_value"),
     )
     return res.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "window_start"
-        ),
+        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",
         "sum_value",
@@ -1621,106 +1612,6 @@ def e4(spark, sf_dir):
     return res.select("event_id", "incident_id")
 
 
-@q(
-    "e5_rollup_range",
-    """
-SELECT event_type,
-    COUNT(*) AS n,
-    CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-    MIN(CAST(round(value * 100) AS BIGINT)) AS min_cents,
-    MAX(CAST(round(value * 100) AS BIGINT)) AS max_cents
-FROM events
-WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
-GROUP BY 1
-""",
-)
-def e5(spark, sf_dir):
-    """Continuous-aggregate ladder (hour → day → month) answering a
-    month-aligned range from the coarsest grain — the rollup answer
-    must equal aggregating the raw events (the oracle does the
-    latter). Values ride as exact integer cents so every fold is
-    associative."""
-    import datetime as dt
-
-    from trisk_datawrangle_spark.operators.rollup import (
-        build_rollups,
-        rollup_range_query,
-    )
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    cents = ev.withColumn(
-        "value", F.round(F.col("value") * 100).cast("long")
-    )
-    rollups = build_rollups(cents, "ts", ["event_type"])
-    res = rollup_range_query(
-        rollups,
-        dt.datetime(2024, 1, 1),
-        dt.datetime(2024, 2, 1),
-        ["event_type"],
-    )
-    return res.select(
-        "event_type",
-        "n",
-        F.col("sum_value").alias("sum_cents"),
-        F.col("min_value").alias("min_cents"),
-        F.col("max_value").alias("max_cents"),
-    )
-
-
-@q(
-    "e8_session_window",
-    """
-WITH ordered AS (
-    SELECT user_id, ts,
-        CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                  > INTERVAL 30 MINUTES
-             OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-             THEN 1 ELSE 0 END AS new_session
-    FROM events
-), numbered AS (
-    SELECT user_id, ts,
-        SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-            ROWS UNBOUNDED PRECEDING) AS session_no
-    FROM ordered
-)
-SELECT user_id,
-    strftime(MIN(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
-    strftime(MAX(ts) + INTERVAL 30 MINUTES,
-             '%Y-%m-%d %H:%M:%S.%f') AS session_end,
-    COUNT(*) AS n_events
-FROM numbered
-GROUP BY user_id, session_no
-""",
-)
-def e8(spark, sf_dir):
-    """Session-window aggregation (``F.session_window``, 30-minute
-    inactivity gap, per user): the same expression tree runs under
-    Structured Streaming with a watermark (streaming/windows.py
-    session_agg). The oracle replays the sessionization as
-    gaps-and-islands SQL (lag → new-session flag → cumulative count →
-    group), including Spark's window-end = last event + gap."""
-    from trisk_datawrangle_spark.streaming.windows import session_agg
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    res = session_agg(
-        ev,
-        "ts",
-        "30 minutes",
-        ["user_id"],
-        [F.count(F.lit(1)).alias("n_events")],
-    )
-    return res.select(
-        "user_id",
-        F.date_format(
-            "window_start", "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        ).alias("session_start"),
-        F.date_format(
-            "window_end", "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        ).alias("session_end"),
-        "n_events",
-    )
-
-
 # ---------------------------------------------------------------- #
 # classic multi-way-join analytics (TPC-H Q3/Q5 shapes)             #
 # ---------------------------------------------------------------- #
@@ -1846,76 +1737,6 @@ def q5(spark, sf_dir):
 
 
 @q(
-    "k1_salted_count_distinct",
-    """
-SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct
-FROM events GROUP BY 1
-""",
-)
-def k1(spark, sf_dir):
-    """Skew-proof exact distinct count: value-derived salt puts every
-    distinct value in exactly one (key, salt) bucket, so per-bucket
-    exact counts merge by sum — same answer as COUNT(DISTINCT), but a
-    hot key's value set spreads over salt_buckets tasks instead of
-    one."""
-    from trisk_datawrangle_spark.operators.skew import salted_count_distinct
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    return salted_count_distinct(ev, ["event_type"], "user_id", salt_buckets=8)
-
-
-@q(
-    "e6_hll_distinct_rollup",
-    """
-SELECT event_type,
-    COUNT(DISTINCT user_id) AS exact_distinct,
-    TRUE AS within_5pct
-FROM events
-WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
-GROUP BY event_type
-""",
-)
-def e6(spark, sf_dir):
-    """Distinct users per event_type from the HLL sketch ladder
-    (hour sketches → month union), gated against ground truth.
-
-    The raw Datasketches-HLL estimate has no cross-engine oracle, but
-    it IS deterministic for a fixed input multiset (hash-based,
-    order/partitioning-independent register maxes), so the entry
-    returns the exact distinct count plus a ``within_5pct`` accuracy
-    flag — the oracle asserts the flag TRUE, turning the sketch's
-    error contract (~1.6% rsd at lg_k=12; 5% ≈ 3σ) into a hard driver
-    check: a broken ladder or a drifting estimate hash-mismatches.
-    Fold invariance and error bounds stay property-tested in
-    tests/test_sketches.py."""
-    import datetime as dt
-
-    from trisk_datawrangle_spark.operators.sketches import (
-        hll_range_distinct,
-        hll_rollup,
-    )
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    lo, hi = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
-    rollups = hll_rollup(ev, "ts", ["event_type"], "user_id")
-    approx = hll_range_distinct(rollups, lo, hi, ["event_type"])
-    exact = (
-        ev.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") < F.lit(hi)))
-        .groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("exact_distinct"))
-    )
-    return approx.join(exact, "event_type").select(
-        "event_type",
-        "exact_distinct",
-        (
-            F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-            / F.col("exact_distinct")
-            <= 0.05
-        ).alias("within_5pct"),
-    )
-
-
-@q(
     "a13_approx_median_gate",
     """
 SELECT o_orderpriority,
@@ -1926,7 +1747,7 @@ FROM orders GROUP BY 1
 )
 def a13(spark, sf_dir):
     """Mergeable approx-median gated against the exact percentile
-    (the e6-HLL/x12-CMS pattern for quantiles): ``median_approx`` is
+    (a sketch checked against ground truth): ``median_approx`` is
     the documented 100 TB rollup swap-in (bounded sketch memory per
     group vs the exact percentile's keep-every-value); this entry
     driver-gates its rank-error contract — the sketch value must land
@@ -1955,155 +1776,3 @@ def a13(spark, sf_dir):
     )
 
 
-@q(
-    "e10_stream_static_join",
-    """
-SELECT strftime(date_trunc('hour', e.ts), '%Y-%m-%d %H:%M:%S')
-           AS window_start,
-       n.n_name AS nation, COUNT(*) AS n,
-       SUM(CAST(round(e.value * 100) AS BIGINT)) / 100.0 AS sum_value
-FROM events e
-LEFT JOIN customer c ON e.user_id = c.c_custkey
-LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY 1, 2
-""",
-)
-def e10(spark, sf_dir):
-    """Stream-static enrichment join + tumbling window: events
-    broadcast-joined to the customer→nation dimension, then the e1
-    hourly aggregate per nation. The identical expression tree runs
-    under readStream (stream-static joins re-broadcast per
-    micro-batch — parity-tested in tests/test_streaming_and_skew.py);
-    exact-cents sums keep the money column bit-stable under any
-    partitioning."""
-    from trisk_datawrangle_spark.streaming.windows import (
-        stream_static_enrich,
-    )
-
-    t = load_tables(spark, sf_dir, ["events", "customer", "nation"])
-    dim = (
-        t["customer"]
-        .join(
-            t["nation"],
-            t["customer"].c_nationkey == t["nation"].n_nationkey,
-            "left",
-        )
-        .select(
-            F.col("c_custkey").alias("user_id"),
-            F.col("n_name").alias("nation"),
-        )
-    )
-    enriched = stream_static_enrich(t["events"], dim, "user_id")
-    res = tumbling_agg(
-        enriched,
-        "ts",
-        "1 hour",
-        ["nation"],
-        [
-            F.count(F.lit(1)).alias("n"),
-            exact_cents_sum("value").alias("sum_value"),
-        ],
-    )
-    return res.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
-            "window_start"
-        ),
-        "nation",
-        "n",
-        "sum_value",
-    )
-
-
-@q(
-    "e11_stream_dedup",
-    """
-SELECT event_type, COUNT(*) AS n_distinct_users
-FROM (SELECT DISTINCT user_id, event_type FROM events)
-GROUP BY 1
-""",
-)
-def e11(spark, sf_dir):
-    """Watermarked stream dedup, batch-path semantics
-    (streaming/windows.py stream_dedup): exactly-once per
-    (user_id, event_type), projected to the key columns so the
-    surviving-row choice (arbitrary in dropDuplicates) cannot leak
-    nondeterminism into the gate. The stream path
-    (dropDuplicatesWithinWatermark — bounded per-key state inside the
-    lateness horizon) is parity-tested in
-    tests/test_streaming_and_skew.py."""
-    from trisk_datawrangle_spark.streaming.windows import stream_dedup
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    dd = stream_dedup(ev, ["user_id", "event_type"])
-    return dd.select("user_id", "event_type").groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_distinct_users")
-    )
-
-
-@q(
-    "k2_salted_join",
-    """
-SELECT c.c_mktsegment AS segment, COUNT(*) AS n,
-    SUM(CAST(round(o.o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY 1
-""",
-)
-def k2(spark, sf_dir):
-    """Hot-key salted join (operators/skew.py salted_join): the big
-    side salts into 8 buckets, the medium side replicates across
-    them, the join runs on (key, salt) — the standard mitigation when
-    one key would pin a single task and the small side is too big to
-    broadcast. The oracle is the PLAIN join aggregate: salting must
-    be output-invariant, and the exact-cents sum keeps the money
-    column hash-stable."""
-    from trisk_datawrangle_spark.operators.skew import salted_join
-
-    t = load_tables(spark, sf_dir, ["orders", "customer"])
-    joined = salted_join(
-        t["orders"],
-        t["customer"].withColumnRenamed("c_custkey", "o_custkey"),
-        ["o_custkey"],
-        salt_buckets=8,
-    )
-    return joined.groupBy(
-        F.col("c_mktsegment").alias("segment")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        exact_cents_sum("o_totalprice").alias("revenue"),
-    )
-
-
-@q(
-    "e12_late_data_report",
-    """
-WITH flagged AS (
-    SELECT event_type,
-        (epoch_us(MAX(ts) OVER w) - epoch_us(ts)) / 1000000.0 AS late_by
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_type, COUNT(*) AS n_events,
-    COUNT(*) FILTER (late_by > 1800.0) AS n_late,
-    CAST(ROUND(MAX(CASE WHEN late_by > 1800.0 THEN late_by END), 0)
-        AS BIGINT) AS max_late_seconds
-FROM flagged GROUP BY 1
-""",
-)
-def e12(spark, sf_dir):
-    """Late-data accounting (streaming/windows.py late_data_report):
-    per event type, how many rows trail the per-user running max
-    event time by more than the 30-minute horizon — a LOWER BOUND on
-    what a watermarked stream would drop (Spark's watermark is
-    global; the per-key replay measures each key's own
-    out-of-orderness and stays parallel), measured on batch data
-    before choosing a production watermark. Exact integer-
-    microsecond arithmetic; arrival order pinned by the unique
-    event_id."""
-    from trisk_datawrangle_spark.streaming.windows import late_data_report
-
-    (ev,) = load_tables(spark, sf_dir, ["events"]).values()
-    return late_data_report(
-        ev, "ts", "event_id", 1800, ["user_id"], ["event_type"]
-    )

@@ -22,13 +22,3 @@ from trisk_datawrangle_spark.llm.similarity import (  # noqa: F401
     cosine_topk,
     lsh_bucket_topk,
 )
-from trisk_datawrangle_spark.llm.lsh_index import (  # noqa: F401
-    lsh_index_append,
-    minhash_lsh_index_pairs,
-    stream_dedup_ingest,
-    write_lsh_index,
-)
-from trisk_datawrangle_spark.llm.pq_index import (  # noqa: F401
-    ivf_pq_index_topk,
-    write_ivf_pq_index,
-)

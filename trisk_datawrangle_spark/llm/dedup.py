@@ -598,25 +598,8 @@ def _verify_pairs_from_arrays(
     aggregation as the signatures, so re-aggregating exploded rows
     here would be pure waste). Same joins, same size gate, same
     Jaccard arithmetic — identical output."""
-    return _verify_pairs_two_sided(arrays, arrays, cand, threshold)
-
-
-def _verify_pairs_two_sided(
-    arrays_a: DataFrame,
-    arrays_b: DataFrame,
-    cand: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """:func:`_verify_pairs_from_arrays` for callers whose a-side and
-    b-side array tables are DISJOINT id sets held separately (r13:
-    the index probe's existing-vs-batch sides) — joining each side
-    against its own table only skips the union the single-table form
-    would force, and each join's build side stays half the size.
-    Identical output when ``arrays_a`` covers every ``id_a`` and
-    ``arrays_b`` every ``id_b`` (inner-join semantics are per-side
-    either way)."""
     withA = cand.select("id_a", "id_b").join(
-        arrays_a.select(
+        arrays.select(
             F.col("id").alias("id_a"),
             F.col("hs").alias("ha"),
             F.col("n_grams").alias("n_a"),
@@ -624,7 +607,7 @@ def _verify_pairs_two_sided(
         "id_a",
     )
     withB = withA.join(
-        arrays_b.select(
+        arrays.select(
             F.col("id").alias("id_b"),
             F.col("hs").alias("hb"),
             F.col("n_grams").alias("n_b"),
@@ -707,9 +690,7 @@ def minhash_lsh_dedup_pairs(
     prof = _shingle_profile(df, text_col, id_col, ngram, num_hashes).cache()
     cand = _lsh_candidate_pairs(prof.select("id", "sig"), num_hashes, bands)
     # NOT narrowed to candidate ids (r12 measurement): semi-joining
-    # the arrays to cand's id set before the verifier — the shape
-    # that wins in the persisted-index probe, lsh_index.py — LOSES
-    # here (sf0.1 A/B: 1.3-1.8 s → 1.8-2.4 s): cand has one consumer
+    # the arrays to cand's id set before the verifier LOSES here (sf0.1 A/B: 1.3-1.8 s → 1.8-2.4 s): cand has one consumer
     # in this inline composite, so the narrowing forces an extra
     # cache barrier + two more shuffles to save work the JVM joins
     # away cheaply anyway.

@@ -20,10 +20,8 @@ partitioning and in any engine — the same exact-integer-sum trick the
 money columns use (SURVEY §7.4). Only the final mean is a float, and
 it is the exactly-rounded quotient of exact integers.
 
-At 100 TB the model tables are token-vocabulary-sized — they stay as
-shuffle equi-joins (never collected); if even that is too hot, the
-Count-Min tier (``operators/sketches.py``, x12) approximates the
-counts with a fixed-size mergeable sketch.
+The model tables are token-vocabulary-sized — they stay as shuffle
+equi-joins (never collected).
 """
 
 from __future__ import annotations

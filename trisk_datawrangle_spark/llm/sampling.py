@@ -176,8 +176,7 @@ def cap_per_group(
     Scale shape: one shuffle (the window partition on the group
     key); no driver-side state. A skewed group (one giant domain)
     concentrates its rows on one task but emits at most ``k`` of
-    them — for pathological domains pre-aggregate with a salted
-    partial top-k first (operators/skew.py pattern).
+    them.
     """
     from pyspark.sql import Window
 

@@ -199,8 +199,7 @@ def lsh_bucket_topk(
 MAX_VECTORIZED_CORPUS_ROWS = 2_000_000
 
 #: Ceiling on a collected QUERY batch (r13, advice item): the serving
-#: paths (ivf_topk / adc rescore / persisted-index probes) collect the
-#: request batch to the driver for the probe GEMM and the broadcast
+#: paths (ivf_topk / adc rescore) collect the request batch to the driver for the probe GEMM and the broadcast
 #: score matrix — request-sized by the serving contract, but a caller
 #: handing a corpus-sized frame by mistake must get a loud error, not
 #: a driver OOM. 200k × 64-dim f64 ≈ 100 MB broadcast, a sane cap.
@@ -213,7 +212,6 @@ def collect_query_batch(
     vec_col: str,
     max_rows: int = MAX_QUERY_BATCH_ROWS,
     caller: str = "collect_query_batch",
-    rows: list | None = None,
 ) -> list:
     """Collect a request-sized query batch ``(id, vec)`` with a size
     guard — ONE plain collect job (a ``limit`` would route through
@@ -223,10 +221,8 @@ def collect_query_batch(
     after the collect, and the catastrophic case (a frame several GB
     over the cap) is already aborted cleanly by
     ``spark.driver.maxResultSize`` (1 GB default) before the driver
-    can OOM, with an error naming that knob. ``rows``: a batch the
-    caller already collected — checked, not collected again."""
-    if rows is None:
-        rows = queries.select(id_col, vec_col).collect()
+    can OOM, with an error naming that knob."""
+    rows = queries.select(id_col, vec_col).collect()
     if len(rows) > max_rows:
         raise ValueError(
             f"{caller}: query batch exceeds max_rows={max_rows}; this "
@@ -459,7 +455,6 @@ def ivf_topk(
     n_cells: int = 16,
     n_probe: int = 4,
     centroids=None,
-    q_rows: list | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index:
     every corpus vector is assigned to its nearest coarse centroid
@@ -473,8 +468,7 @@ def ivf_topk(
     to each query's probed cells, emitting only the batch-local
     top-k per query. The query→cell probe runs driver-side on the
     collected request batch (request-sized by the serving contract —
-    the same shape as :func:`ivf_pq_index_topk` and
-    :func:`cosine_topk_vectorized`). Versus the previous
+    the same shape as :func:`cosine_topk_vectorized`). Versus the previous
     assign-then-broadcast-join-then-expression plan this removes the
     per-pair interpreted ``zip_with``/``aggregate`` dot products
     (~|pairs| × dim interpreted ops), the join that shipped two
@@ -499,11 +493,9 @@ def ivf_topk(
     sc = corpus.sparkSession.sparkContext
     cent = np.asarray(centroids, dtype=np.float64)
 
-    # size-guarded: a corpus-sized query frame or precollected batch
-    # must fail loudly, not OOM the driver
-    q_rows = collect_query_batch(
-        queries, id_col, vec_col, caller="ivf_topk", rows=q_rows
-    )
+    # size-guarded: a corpus-sized query frame must fail loudly, not
+    # OOM the driver
+    q_rows = collect_query_batch(queries, id_col, vec_col, caller="ivf_topk")
     if not q_rows:
         # empty request batch: typed empty result (the numpy probe
         # below would die on a zero-row matrix; the old join-based
@@ -770,9 +762,7 @@ def encode_pq_index(
 ) -> DataFrame:
     """The compressed IVF-PQ index frame: ``(neighbor_id, __cell,
     __codes)`` — one vectorized encode pass (GEMM per Arrow batch, no
-    shuffle), no float payload. Shared by the inline
-    :func:`ivf_pq_topk` and the persisted lifecycle
-    (``llm/pq_index.py``) so both produce the identical index."""
+    shuffle), no float payload, as :func:`ivf_pq_topk` probes it."""
     import numpy as np
     import pandas as pd
 
@@ -820,25 +810,15 @@ def adc_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probed: DataFrame | None = None,
     ranked: bool = True,
 ) -> DataFrame:
     """Probe + asymmetric-distance scoring + top-k over a prebuilt
     ``(neighbor_id, __cell, __codes)`` index frame (from
-    :func:`encode_pq_index` or read back from a persisted index).
+    :func:`encode_pq_index`).
     Per query, one ``m × k_codes`` LUT of subspace dot products
     against the broadcast codebooks; each candidate's approximate
     cosine is the sum of ``m`` lookups — no float vectors move at
     query time.
-
-    ``probed`` (r12): a caller that has ALREADY assigned queries to
-    cells — the persisted-index serving path collects the
-    request-sized batch to the driver and runs the |q| × n_cells
-    GEMM there anyway, to prune the codes read — can pass the
-    ``(query_id, __qv, __cell)`` frame directly and skip this
-    function's probe stage (one whole Python worker round-trip +
-    its exchange for a batch of a few rows). Same numpy probe math
-    either way — identical cells, identical output.
 
     ``ranked=False`` (r13): returns the bare candidate PAIR SET
     ``(query_id, neighbor_id)`` with no ADC scoring at all — the
@@ -871,11 +851,10 @@ def adc_topk(
                 }
             )
 
-    if probed is None:
-        bc_cent = sc.broadcast(np.asarray(centroids, dtype=np.float64))
-        probed = queries.select(id_col, vec_col).mapInPandas(
-            probe, "query_id long, __qv array<float>, __cell int"
-        )
+    bc_cent = sc.broadcast(np.asarray(centroids, dtype=np.float64))
+    probed = queries.select(id_col, vec_col).mapInPandas(
+        probe, "query_id long, __qv array<float>, __cell int"
+    )
     joined = index.join(F.broadcast(probed), "__cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
@@ -940,7 +919,6 @@ def rescore_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    q_rows: list | None = None,
 ) -> DataFrame:
     """Exact-rescore refine stage for approximate ANN: take candidate
     (query_id, neighbor_id) pairs from any approximate tier (IVF-PQ's
@@ -971,12 +949,10 @@ def rescore_topk(
     import numpy as np
     import pandas as pd
 
-    # size-guarded collect: callers that already collected the
-    # request batch (the persisted-index serving path probes with the
-    # same rows) pass it through — one collect job per probe, not one
-    # per stage — and it is guarded all the same
+    # size-guarded: a corpus-sized query frame must fail loudly, not
+    # OOM the driver
     q_rows = collect_query_batch(
-        queries, id_col, vec_col, caller="rescore_topk", rows=q_rows
+        queries, id_col, vec_col, caller="rescore_topk"
     )
     if not q_rows:
         # inner-join semantics vs an empty query batch: empty result

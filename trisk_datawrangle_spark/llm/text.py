@@ -31,9 +31,9 @@ def word_gram_table(df, text_col="text", id_col="doc_id", n=3, distinct=False):
     per-row shuffle overhead ×words), and the split+explode work is
     spread across the cluster instead of running inside the scan
     task of what is typically a small delta/batch frame (measured
-    sf0.1 warm: 0.56-0.75 s → 0.49-0.51 s for the d13 probe's
-    shingle stage). No explicit partition count — the config default
-    scales it, and AQE may coalesce."""
+    sf0.1 warm: 0.56-0.75 s → 0.49-0.51 s for a delta batch's
+    shingle stage). No explicit partition count — the config
+    default scales it, and AQE may coalesce."""
     from pyspark.sql import Window
 
     words = (

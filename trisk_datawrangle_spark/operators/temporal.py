@@ -26,7 +26,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType, TimestampType
 
 
 def _epoch_micros(c: Column) -> Column:
@@ -37,15 +36,6 @@ def _epoch_micros(c: Column) -> Column:
     interprets numerics as epoch seconds — so the same expression
     serves all dtypes the operators accept."""
     return F.unix_micros(c.cast("timestamp"))
-
-
-def _with_ts_watermarkable(df: DataFrame, ts_col: str) -> DataFrame:
-    """``withWatermark`` rejects TIMESTAMP_NTZ event time
-    (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); relabel to TIMESTAMP first.
-    No-op for anything else."""
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        return df.withColumn(ts_col, F.col(ts_col).cast(TimestampType()))
-    return df
 
 
 def join_asof(
@@ -255,42 +245,3 @@ def interval_join(
     residual = F.col(ts_col).between(F.col(start_col), F.col(end_col))
     return joined.filter(residual).drop("__bucket")
 
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    lower_seconds: int,
-    upper_seconds: int,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream (or batch) inner join with an event-time band:
-    match when ``right_ts ∈ [left_ts - lower, left_ts + upper]`` on
-    shared keys.
-
-    Under Structured Streaming both sides get the watermark and the
-    time-band condition is exactly what Spark needs to bound join
-    state (rows age out once the watermark passes their band); in
-    batch the same expression tree runs as an ordinary join. The two
-    timestamp columns must be named differently.
-    """
-    if left_ts == right_ts:
-        raise ValueError("rename one side: timestamp columns must differ")
-    if left.isStreaming:
-        left = _with_ts_watermarkable(left, left_ts).withWatermark(
-            left_ts, watermark
-        )
-    if right.isStreaming:
-        right = _with_ts_watermarkable(right, right_ts).withWatermark(
-            right_ts, watermark
-        )
-    band = (
-        (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {int(lower_seconds)} SECONDS"))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {int(upper_seconds)} SECONDS"))
-    )
-    cond = band
-    for k in on:
-        cond = cond & (left[k] == right[k])
-    return left.join(right, cond, "inner")

@@ -1,10 +1,10 @@
 """Small-file compaction for partitioned parquet tables.
 
 The operational problem at 100 TB: incremental writers
-(``merge_by_key``, streaming ``foreachBatch`` sinks, hourly appends)
-leave partitions holding hundreds of KB-scale files. Scans then pay
-one task + one open per file, the driver pays listing and footer
-reads, and shuffles inherit the tiny-split skew. Compaction is the
+(``merge_by_key``, hourly appends) leave partitions holding hundreds
+of KB-scale files. Scans then pay one task + one open per file, the
+driver pays listing and footer reads, and shuffles inherit the
+tiny-split skew. Compaction is the
 janitor: rewrite ONLY the offending partitions into ~target-sized
 files, leave healthy partitions' files untouched (so their cache/
 mtime survive), and swap so that a crash at ANY point never loses a
@@ -35,10 +35,8 @@ Crash windows and their recovery (run automatically on re-entry):
 
 The only reader-visible anomaly is a missing-partition window
 between (2) and (3) — never a partial or mixed file set. On object
-stores without atomic dir rename (S3), pair this with the
-versioned-path + pointer pattern ``llm/lsh_index.py:publish_index``
-implements, or run it against a real filesystem layer (HDFS,
-OneZone, EFS). This is single-writer maintenance (like
+stores without atomic dir rename (S3), run it against a real
+filesystem layer (HDFS, OneZone, EFS). This is single-writer maintenance (like
 ``merge_by_key``): do not run it concurrently with a writer on the
 same partitions.
 """

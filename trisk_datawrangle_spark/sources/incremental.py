@@ -58,59 +58,6 @@ def upsert_partitions(df: DataFrame, path: str, partition_by: Sequence[str]) -> 
     )
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence check via the Hadoop FS API —
-    ``os.path.exists`` is driver-local and always False for s3://
-    hdfs:// etc., which would make every micro-batch 'bootstrap' and
-    statically overwrite the table."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def stream_upsert(
-    stream_df: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_by: Sequence[str],
-    checkpoint: str,
-):
-    """Maintain a partitioned parquet table from a stream: each
-    micro-batch is key-merged into the table (``foreachBatch`` →
-    :func:`merge_by_key`), so the table always holds the latest row
-    per key while only touched partitions are rewritten.
-
-    The checkpoint makes ingestion resumable — a restarted query
-    continues from the last committed batch instead of re-merging
-    history. Returns the started StreamingQuery (caller awaits /
-    stops); uses availableNow so batch backfills and continuous runs
-    share the code path.
-    """
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # the merge evaluates the batch several times (emptiness
-        # probe, key joins, the merged materialization) — pin it once
-        # so the micro-batch source is scanned once, not ~4 times
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if not batch_df.head(1):
-            return
-        if _table_exists(batch_df.sparkSession, path):
-            merge_by_key(
-                batch_df.sparkSession, batch_df, path, keys, partition_by
-            )
-        else:  # first batch bootstraps the table layout
-            write_partitioned(batch_df, path, partition_by)
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _balanced_or(conds):
     """Pairwise OR reduction: a linear ``a | b | c | …`` chain nests
     one level per term and blows the JVM stack past a few hundred

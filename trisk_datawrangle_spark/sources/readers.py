@@ -123,9 +123,8 @@ def _normalize_timestamps(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     The corpus parquet stores tz-less ``timestamp[us]``, which Spark 4
     (``spark.sql.parquet.inferTimestampNTZ.enabled`` default) reads as
-    TIMESTAMP_NTZ — a type that cannot be cast to numerics, rejects
-    ``withWatermark``, and forks every downstream time expression into
-    a second dtype. The relabel is timezone-explicit: the NTZ wall
+    TIMESTAMP_NTZ — a type that cannot be cast to numerics and forks
+    every downstream time expression into a second dtype. The relabel is timezone-explicit: the NTZ wall
     clock is treated as UTC regardless of the caller's session
     timezone, so the resulting TIMESTAMP carries exactly the NTZ
     micros and this function never mutates session state. ``get_spark``
