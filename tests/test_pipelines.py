@@ -10,6 +10,8 @@ zero-fill (W8/W7), EF mean-imputation (A3+J1), dead-series removal
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -168,6 +170,35 @@ def test_first_year_positive_gate(spark, abcd):
     gated = first_year_positive(abcd, ["company_id", "ald_business_unit"])
     # Acme starts at 16 > 0, Car Co at 100 > 0 → both survive
     assert gated.select("company_id").distinct().count() == 2
+
+
+@pytest.mark.parametrize("partitions", [1, 8])
+def test_sums_are_exact_in_any_row_order(spark, tmp_path, partitions):
+    """Three raw rows recode to one key (ICE Diesel/Gasoline/CNG →
+    ICE, same company, location and year) with 2022 values 1e16, 1.0
+    and -1e16, one row per input file. A double sum gives 0.0 or 1.0
+    depending on the order rows arrive in; the exact sum is 1.0 in
+    all 6 orders, at any shuffle-partition count."""
+    techs = ("ICE Diesel", "ICE Gasoline", "ICE CNG")
+    emissions = _wide(spark, [])
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        for i, order in enumerate(itertools.permutations((1e16, 1.0, -1e16))):
+            files = [str(tmp_path / f"order{i}" / tech) for tech in techs]
+            for path, tech, value in zip(files, techs, order):
+                _wide(spark, [
+                    (5, "Car Co", "Automotive", tech, "JP", "# vehicles",
+                     value, 5.0, 5.0, 5.0),
+                ]).coalesce(1).write.parquet(path)
+            out = prepare_abcd_data(
+                spark.read.parquet(*files), emissions,
+                start_year=2022, time_horizon=3,
+            )
+            got = {r["year"]: r["plan_tech_prod"] for r in out.collect()}
+            assert got == {2022: 1.0, 2023: 15.0, 2024: 15.0, 2025: 15.0}, order
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 # ------------------------------------------------------------------ #

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_run_workflow import staged_dirs  # noqa: F401  (fixture)
 from trisk_datawrangle_spark.sources.readers import load_tables
 
 
@@ -374,3 +375,76 @@ def test_incremental_dedup_no_cartesian(spark, sf_dir):
     )
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def _exchanges(df) -> tuple[list[str], int]:
+    """Run ``df`` and read its final adaptive plan: the partitioning of
+    each exchange that shuffles (hash keys without attribute ids, or
+    the partitioning's name) and the number of broadcast exchanges.
+    Reused exchanges are not counted again."""
+    import re
+
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = [
+        line for line in plan.split("== Initial Plan ==")[0].splitlines()
+        if "ReusedExchange" not in line
+    ]
+    shuffles = []
+    for line in lines:
+        m = re.search(r"\bExchange (hashpartitioning\((.*?), \d+\)|\w+)", line)
+        if m:
+            shuffles.append(re.sub(r"#\d+L?", "", m.group(2) or m.group(1)))
+    return sorted(shuffles), sum("BroadcastExchange" in line for line in lines)
+
+
+#: financial's shuffles: on company_id the pairs, the ownership edges
+#: and eikon (twice: the missing-company probe reads a pruned copy),
+#: then the layer rollup and its one-row gather. Its broadcasts: the
+#: firm table, the layers, and the joins AQE turns into broadcasts.
+FINANCIAL_SHUFFLES, FINANCIAL_BROADCASTS = 6, 5
+
+
+def test_abcd_and_financial_shuffle_once_and_leak_nothing(
+    spark, staged_dirs, tmp_path, monkeypatch
+):
+    """ROADMAP "Jobs are exchanges": ``abcd`` shuffles its rows once,
+    on company_id, and otherwise only its emission-factor mean, which
+    is broadcast back; ``financial`` stays within a fixed number of
+    exchanges. Neither stage leaves a cached relation or a persisted
+    RDD behind (compared before and after: the test session is
+    shared)."""
+    from trisk_datawrangle_spark.run_workflow import run_stage
+    from trisk_datawrangle_spark.sources import readers
+
+    written = {}
+    write = readers.write_output
+
+    def keep(df, path, **kwargs):
+        written[path.rsplit("/", 1)[-1]] = df
+        return write(df, path, **kwargs)
+
+    monkeypatch.setattr(readers, "write_output", keep)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persisted() -> set[int]:
+        # by id: the context cleaner may drop an earlier test's RDD
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cached, rdds = cache.numCachedEntries(), persisted()
+    inp, _ = staged_dirs
+    for stage in ("abcd", "financial"):
+        run_stage(spark, stage, inp, str(tmp_path), start_year=2022, time_horizon=3)
+    assert cache.numCachedEntries() <= cached
+    assert persisted() <= rdds, persisted() - rdds
+
+    abcd = _exchanges(written["abcd_stress_test_input.parquet"])
+    assert abcd == (["ald_sector, ald_business_unit", "company_id"], 1), abcd
+    shuffles, broadcasts = _exchanges(
+        written["prewrangled_financial_data_stress_test.parquet"]
+    )
+    assert len(shuffles) <= FINANCIAL_SHUFFLES, shuffles
+    assert set(shuffles) == {
+        "company_id", "ald_sector, region, spark_grouping_id", "SinglePartition"
+    }, shuffles
+    assert broadcasts <= FINANCIAL_BROADCASTS, broadcasts

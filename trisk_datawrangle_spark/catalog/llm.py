@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from itertools import combinations as _combinations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 

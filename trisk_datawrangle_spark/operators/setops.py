@@ -7,7 +7,7 @@ never positional — so the engine only exposes
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping, Sequence
+from collections.abc import Callable, Mapping
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame

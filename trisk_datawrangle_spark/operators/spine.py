@@ -9,16 +9,20 @@ spine is ``distinct keys × explode(sequence(lo, hi))`` — generated
 feeding the interpolation operators.
 
 Scale notes: the distinct-keys aggregation is a map-side-combinable
-shuffle on the group keys; the subsequent left join is on the same
-keys + x, so AQE keeps it co-partitioned with the source shuffle. The
-explode fans out rows *after* the distinct (cheap), not before.
+shuffle on the group keys, and the left join back is on the keys + x.
+That join shuffles both sides again: with
+``spark.sql.requireAllClusterKeysForCoPartition`` (on by default) a
+join needs its children partitioned on all of its keys. A plan
+already partitioned on a key subset builds its spine without a join
+instead (``plans/abcd.py``). The explode fans out rows *after* the
+distinct (cheap), not before.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -8,26 +8,46 @@ activity/emission tables. Output: the canonical long
 (company, sector, business_unit, year) production + emission-factor
 table (outputs_structure.dbml:24-37).
 
-Scale design: one shuffle on the company/sector/business-unit keys
-covers dedup-aggregation, the spine join and every window that
-follows; the emissions⋈production pairing is a full outer join on
-those same keys (AQE keeps it co-partitioned). Year melt is a
-projection (native unpivot, no shuffle); the EF-imputation lookup is
-a tiny per-(sector, unit) aggregate broadcast back.
+Plan: one shuffle, on ``company_id``. Both wide inputs go through one
+ingest (owner filter, recodes, year columns packed into one array),
+are unioned with a side tag and repartitioned on ``company_id`` while
+still one row per wide row. Every later step is an aggregate or a
+window keyed by a superset of ``company_id``, so none of them
+exchanges again:
+
+- the melt is an ``inline`` of the packed years, the dedup-sum a
+  ``groupBy``;
+- emissions⋈production is a ``groupBy(KEYS, ald_location, year)``
+  that collects each side, then explodes the pairs;
+- the location rollup is a ``groupBy``;
+- the fixed year spine is a per-series ``map(year → values)`` looked
+  up over ``explode(sequence(lo, hi))``;
+- interpolation, LOCF, the dead-series test and the asset ids are
+  windows within a company.
+
+No step is a join on the series keys: with
+``spark.sql.requireAllClusterKeysForCoPartition`` a join on
+(company_id, x) re-shuffles both sides. Only the per-(sector,
+business unit) emission-factor mean needs other companies' rows; it is
+a tiny aggregate broadcast back. Nothing is cached.
+
+Every sum is exact: ``sum(cast(x AS DECIMAL(38,18)))``, cast back to
+double once, so the outputs do not depend on the order rows arrive in
+(README "Determinism as a contract"). A value or sum of magnitude
+1e20 or more does not fit that type.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+import re
+from collections.abc import Container, Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from trisk_datawrangle_spark.functions.scalars import recode, safe_div
 from trisk_datawrangle_spark.operators.interpolate import fill_locf, na_approx
-from trisk_datawrangle_spark.operators.reshape import melt_year_columns
-from trisk_datawrangle_spark.operators.spine import complete_spine
-from trisk_datawrangle_spark.operators.windows import with_asset_id
 
 #: Technology recode applied at ingest
 #: (R/prepare_asset_impact_data.R:47-75).
@@ -58,6 +78,45 @@ DEFAULT_SECTORS: Sequence[str] = ("Power", "Oil&Gas", "Coal", "Automotive", "Ste
 KEYS = ["company_id", "company_name", "ald_sector", "ald_business_unit"]
 
 
+#: a year column's name holds its year (melt_year_columns' pattern)
+_YEAR = re.compile(r"(\d{4})")
+_YEARS = "array<struct<year:int,value:double>>"
+
+
+def _exact_sum(col: str, over: WindowSpec | None = None) -> Column:
+    """Order-independent sum of a double column: exact in
+    DECIMAL(38, 18), cast back to double once."""
+    total = F.sum(F.col(col).cast("decimal(38,18)"))
+    return (total if over is None else total.over(over)).cast("double")
+
+
+def _ingest(wide: DataFrame, years: Container[int] | None = None) -> DataFrame:
+    """The ingest both wide AR tables share: drop unknown owners,
+    recode technologies/sectors, and pack the ``Equity Ownership
+    YYYY`` columns (those in ``years``, default all) into one
+    ``__years`` array of (year, value) structs. Packing instead of
+    melting keeps one row per wide row, so the rows can be shuffled
+    before the melt, and two tables with different year columns union
+    without NULL rows for the years only one of them has."""
+    cols = {c: int(m.group(1)) for c in wide.columns if (m := _YEAR.search(c))}
+    if not cols:
+        raise ValueError(f"no columns match {_YEAR.pattern!r}")
+    packed = F.array(*[
+        F.struct(F.lit(y).alias("year"), F.col(f"`{c}`").cast("double").alias("value"))
+        for c, y in cols.items()
+        if years is None or y in years
+    ]).cast(_YEARS)
+    return wide.filter(F.col("company_name") != "Unknown Owner").select(
+        "company_id",
+        "company_name",
+        recode("ald_sector", SECTOR_RECODE).alias("ald_sector"),
+        recode("ald_business_unit", TECHNOLOGY_RECODE).alias("ald_business_unit"),
+        "ald_location",
+        "activity_unit",
+        packed.alias("__years"),
+    )
+
+
 def prepare_asset_impact_data(
     wide: DataFrame,
     value_name: str = "value",
@@ -68,23 +127,15 @@ def prepare_asset_impact_data(
     with sum-or-all-NULL semantics
     (R/prepare_asset_impact_data.R:201-244 + the ``.sum_or_all_nans``
     aggregation at R/prepare_abcd_stress_test_input.R:8-14,39-46 —
-    Spark's native ``sum`` has exactly those semantics: nulls are
-    ignored and an all-null group yields NULL, SURVEY.md §2.4 A2).
+    SQL ``sum`` has exactly those semantics: nulls are ignored and an
+    all-null group yields NULL, SURVEY.md §2.4 A2). The sum is exact,
+    as every sum in this module.
     """
-    df = (
-        wide.filter(F.col("company_name") != "Unknown Owner")
-        .withColumn(
-            "ald_business_unit", recode("ald_business_unit", TECHNOLOGY_RECODE)
-        )
-        .withColumn("ald_sector", recode("ald_sector", SECTOR_RECODE))
-    )
-    long = melt_year_columns(
-        df,
-        id_cols=KEYS + ["ald_location", "activity_unit"],
-        value_name=value_name,
+    long = _ingest(wide).select(
+        *KEYS, "ald_location", "activity_unit", F.inline("__years")
     )
     return long.groupBy(*KEYS, "ald_location", "activity_unit", "year").agg(
-        F.sum(value_name).alias(value_name)
+        _exact_sum("value").alias(value_name)
     )
 
 
@@ -94,7 +145,6 @@ def filter_countries_coverage(
     country_filter: Sequence[str] = (),
     filter_hqs: bool = False,
     filter_assets: bool = False,
-    hqs: DataFrame | None = None,
 ) -> DataFrame:
     """Optional country scoping of Asset-Impact data
     (R/prepare_asset_impact_data.R:156-195,
@@ -116,13 +166,12 @@ def filter_countries_coverage(
     if not country_filter or not (filter_hqs or filter_assets):
         return ar_data
     if filter_hqs:
-        if hqs is None:
-            if company_informations is None:
-                raise ValueError(
-                    "filter_hqs=True needs company_informations "
-                    "(company_id, ald_location, is_ultimate_parent)"
-                )
-            hqs = hq_company_ids(company_informations, country_filter)
+        if company_informations is None:
+            raise ValueError(
+                "filter_hqs=True needs company_informations "
+                "(company_id, ald_location, is_ultimate_parent)"
+            )
+        hqs = hq_company_ids(company_informations, country_filter)
         ar_data = ar_data.join(F.broadcast(hqs), "company_id", "left_semi")
     if filter_assets:
         ar_data = ar_data.filter(F.col("ald_location").isin(*country_filter))
@@ -133,11 +182,8 @@ def hq_company_ids(
     company_informations: DataFrame, country_filter: Sequence[str]
 ) -> DataFrame:
     """Distinct ultimate-parent company ids headquartered in
-    ``country_filter`` — the HQ dimension both the production and the
-    emissions branch semi-join. Callers applying the filter to
-    several frames should build this ONCE (and cache it) and pass it
-    via ``filter_countries_coverage(hqs=...)`` so the distinct
-    aggregate and broadcast are not replanned per frame."""
+    ``country_filter``: the HQ dimension ``filter_countries_coverage``
+    semi-joins."""
     return (
         company_informations.filter(
             F.col("ald_location").isin(*list(country_filter))
@@ -165,95 +211,122 @@ def prepare_abcd_data(
     year-spine completion → interpolate + LOCF + zero-fill →
     emission factors (with per-(sector, unit) mean imputation) →
     drop dead series → asset ids
-    (R/prepare_abcd_stress_test_input.R:339-426).
+    (R/prepare_abcd_stress_test_input.R:339-426). The module
+    docstring gives the plan.
+
+    Rows that cannot reach the output are dropped at ingest: years
+    outside the model horizon (the fixed spine leaves them out), sectors
+    outside ``sectors`` (the EF mean is per sector), and rows with a
+    NULL key or location (they match nothing and roll up into a
+    series with a NULL key, which never survives).
     """
     lo, hi = start_year, start_year + time_horizon
+    years = range(lo, hi + 1)
+    # the asset-id order leads, so one sort serves every window
+    series_keys = [
+        "company_id", "ald_sector", "ald_business_unit",
+        "ald_production_unit", "company_name",
+    ]
 
-    prod = prepare_asset_impact_data(activities_wide, "plan_tech_prod")
-    emis = prepare_asset_impact_data(emissions_wide, "plan_emissions").filter(
+    emissions = _ingest(emissions_wide, years).filter(
         F.col("activity_unit").isin("tCO2", "tCO2e")
     )
-    # the HQ dimension is identical for both branches — build (and
-    # cache) it once instead of replanning the distinct + broadcast
-    # per frame
-    hqs = None
-    if filter_hqs and country_filter and company_informations is not None:
-        hqs = hq_company_ids(company_informations, country_filter).cache()
-    prod = filter_countries_coverage(
-        prod, company_informations, country_filter, filter_hqs,
-        filter_assets, hqs=hqs,
+    rows = (
+        _ingest(activities_wide, years).withColumn("__emis", F.lit(False))
+        .unionByName(emissions.withColumn("__emis", F.lit(True)))
+        .filter(F.col("ald_sector").isin(*sectors))
+        # IS NOT NULL, not dropna: the EF-mean join infers it on its
+        # keys, and with the same filter on both reads of `rows` the
+        # EF branch reuses the main branch's shuffle
+        .filter(" AND ".join(
+            f"{c} IS NOT NULL" for c in KEYS + ["ald_location", "activity_unit"]
+        ))
     )
-    emis = filter_countries_coverage(
-        emis, company_informations, country_filter, filter_hqs,
-        filter_assets, hqs=hqs,
+    rows = filter_countries_coverage(
+        rows, company_informations, country_filter, filter_hqs, filter_assets
     )
+    # the stage's one shuffle: everything after it is keyed by a
+    # superset of company_id
+    long = rows.repartition("company_id").select(
+        *KEYS, "ald_location", "activity_unit", "__emis", F.inline("__years")
+    )
+    deduped = long.groupBy(
+        *KEYS, "ald_location", "activity_unit", "__emis", "year"
+    ).agg(_exact_sum("value").alias("value"))
 
     # emissions⋈production on the natural keys (J3,
-    # prepare_abcd_stress_test_input.R:55-83). activity_unit differs
-    # by construction (production units vs tCO2) so it rides along,
-    # renamed, rather than joining.
-    join_keys = KEYS + ["ald_location", "year"]
-    merged = prod.withColumnRenamed("activity_unit", "ald_production_unit").join(
-        emis.select(
-            *join_keys,
-            F.col("activity_unit").alias("emissions_unit"),
-            "plan_emissions",
-        ),
-        join_keys,
-        "outer",
+    # prepare_abcd_stress_test_input.R:55-83) as a grouping: each
+    # production row pairs with every emissions row of its key, or
+    # with none. activity_unit differs by construction (production
+    # units vs tCO2), so it rides along rather than joining. A key
+    # with emissions only becomes a series with a NULL production
+    # unit, which never survives, so `explode` drops it here.
+    def side(emis: bool) -> Column:
+        return F.collect_list(
+            F.when(F.col("__emis") == emis, F.struct("activity_unit", "value"))
+        )
+
+    pairs = (
+        deduped.groupBy(*KEYS, "ald_location", "year")
+        .agg(side(False).alias("__prod"), side(True).alias("__emis"))
+        .select(
+            *KEYS, "ald_location", "year", "__emis",
+            F.explode("__prod").alias("__p"),
+        )
+        .select(
+            *KEYS, "ald_location", "year",
+            F.col("__p.activity_unit").alias("ald_production_unit"),
+            F.col("__p.value").alias("plan_tech_prod"),
+            F.explode_outer("__emis").alias("__e"),
+        )
     )
 
-    # drop NULL locations, roll production/emissions up over locations
+    # roll production/emissions up over locations
     # (prepare_abcd_stress_test_input.R:369-371, :246-259); the HQ
     # country (first location in key order) is kept as country_iso2.
-    # stage boundary: cached — the spine completion reuses this frame
-    # twice (bounds aggregate + join back) and everything downstream
-    # hangs off it; uncached, the physical plan replicates the whole
-    # scan→melt→aggregate→outer-join subtree once per reuse (~9 scans
-    # of each input observed). After the rollup the frame is
-    # series-grain (companies × business units × years) — orders of
-    # magnitude smaller than the raw asset-level input.
-    rolled = (
-        merged.filter(F.col("ald_location").isNotNull())
-        .groupBy(*KEYS, "ald_production_unit", "year")
-        .agg(
-            F.sum("plan_tech_prod").alias("plan_tech_prod"),
-            F.sum("plan_emissions").alias("plan_emissions"),
-            F.min("ald_location").alias("country_iso2"),
-            # min, not first(ignorenulls): first over an unordered
-            # aggregate is partition-order dependent — a company
-            # reporting tCO2 in one location and tCO2e in another
-            # would flip units between runs
-            F.min("emissions_unit").alias("emissions_unit"),
-        )
-        .cache()
+    # min, not first(ignorenulls): first over an unordered aggregate
+    # is partition-order dependent — a company reporting tCO2 in one
+    # location and tCO2e in another would flip units between runs.
+    # Every wide row has every year, so both are the same for each
+    # year of a series and are taken per series.
+    rolled = pairs.groupBy(*series_keys, "year").agg(
+        _exact_sum("plan_tech_prod").alias("plan_tech_prod"),
+        _exact_sum("__e.value").alias("plan_emissions"),
+        F.min("ald_location").alias("country_iso2"),
+        F.min("__e.activity_unit").alias("emissions_unit"),
     )
 
     # dense year spine over the model horizon (T1 fixed bounds,
     # :95-106), then interior interpolation, LOCF to the right edge,
     # and zero for years before the first observation (:267-295).
-    series_keys = KEYS + ["ald_production_unit"]
-    dense = complete_spine(
-        rolled, series_keys, "year", bounds="fixed", lo=lo, hi=hi
+    by_year = F.struct("year", F.struct("plan_tech_prod", "plan_emissions"))
+    at_year = F.col("__by_year")[F.col("year")]
+    dense = (
+        rolled.groupBy(*series_keys)
+        .agg(
+            F.map_from_entries(F.collect_list(by_year)).alias("__by_year"),
+            F.min("country_iso2").alias("country_iso2"),
+            F.min("emissions_unit").alias("emissions_unit"),
+        )
+        .select(
+            *series_keys, "country_iso2", "emissions_unit", "__by_year",
+            F.explode(F.sequence(F.lit(lo), F.lit(hi))).alias("year"),
+        )
+        .select(
+            *series_keys, "country_iso2", "emissions_unit", "year",
+            at_year["plan_tech_prod"].alias("plan_tech_prod"),
+            at_year["plan_emissions"].alias("plan_emissions"),
+        )
     )
     for col in ("plan_tech_prod", "plan_emissions"):
         dense = na_approx(dense, series_keys, "year", col, na_rm=False)
         dense = fill_locf(dense, series_keys, "year", col, direction="down")
         dense = dense.withColumn(col, F.coalesce(F.col(col), F.lit(0.0)))
-    dense = (
-        fill_locf(dense, series_keys, "year", "country_iso2", direction="downup")
-        .withColumn(
-            "emissions_unit",
-            F.min("emissions_unit").over(Window.partitionBy(*series_keys)),
-        )
-    )
 
     # emission factor = emissions / production; 0-production rows get
     # NULL (R Inf/NaN re-expressed, SURVEY.md §7.3.3), then missing
     # factors are mean-imputed per (sector, business_unit)
     # (:130-169) via a tiny broadcast lookup.
-    # second boundary: the EF-imputation lookup, the dead-series
-    # filter and the asset-id numbering each re-read this frame
     with_ef = dense.withColumn(
         "plan_emission_factor", safe_div("plan_emissions", "plan_tech_prod")
     ).withColumn(
@@ -261,9 +334,11 @@ def prepare_abcd_data(
         F.concat_ws(
             "/", F.coalesce("emissions_unit", F.lit("tCO2")), "ald_production_unit"
         ),
-    ).cache()
+    )
     avg_ef = with_ef.groupBy("ald_sector", "ald_business_unit").agg(
-        F.avg("plan_emission_factor").alias("__avg_ef")
+        (
+            _exact_sum("plan_emission_factor") / F.count("plan_emission_factor")
+        ).alias("__avg_ef")
     )
     with_ef = (
         with_ef.join(F.broadcast(avg_ef), ["ald_sector", "ald_business_unit"], "left")
@@ -271,45 +346,25 @@ def prepare_abcd_data(
             "plan_emission_factor",
             F.coalesce("plan_emission_factor", "__avg_ef"),
         )
-        .drop("__avg_ef")
     )
 
     # drop series whose production never exceeds zero (A9 + J4,
-    # :216-237) and restrict sectors + model years (:303-307,117-124)
-    alive = (
-        with_ef.groupBy(*series_keys)
-        .agg(F.sum("plan_tech_prod").alias("__tot"))
-        .filter(F.col("__tot") > 0)
-        .select(*series_keys)
+    # :216-237), then number the assets (W4, :309-320): one id per
+    # series, not per year-row, within company over the pinned
+    # natural-key order (SURVEY.md §7.3.2)
+    total = _exact_sum("plan_tech_prod", Window.partitionBy(*series_keys))
+    rank = F.dense_rank().over(
+        Window.partitionBy("company_id").orderBy(*series_keys[1:])
     )
-    kept = (
-        with_ef.join(alive, series_keys, "left_semi")
-        .filter(F.col("ald_sector").isin(*sectors))
-        .filter((F.col("year") >= lo) & (F.col("year") <= hi))
-    )
-
-    # asset ids (W4, :309-320): one id per asset (distinct series
-    # key), not per year-row — numbered within company over the
-    # pinned natural-key order (SURVEY.md §7.3.2), then joined back.
-    assets = with_asset_id(
-        kept.select(*series_keys).distinct(),
-        key_col="company_id",
-        order_cols=["ald_sector", "ald_business_unit", "ald_production_unit"],
-    )
-    # not broadcast: |assets| grows with the input (one row per asset);
-    # the join key equals the series partitioning, so AQE plans it as a
-    # co-partitioned SMJ (or broadcasts it itself when small)
-    out = kept.join(assets, series_keys, "left").withColumn(
-        "scenario_geography", F.lit("Global")
-    )
-    return out.select(
+    alive = with_ef.withColumn("__total", total).filter(F.col("__total") > 0)
+    return alive.select(
         "company_id",
         "company_name",
         "ald_sector",
         "ald_business_unit",
         "country_iso2",
-        "asset_id",
-        "scenario_geography",
+        F.concat_ws("_", "company_id", rank).alias("asset_id"),
+        F.lit("Global").alias("scenario_geography"),
         "year",
         "ald_production_unit",
         "emissions_factor_unit",

@@ -9,18 +9,22 @@ ownership edge list. Output: one row per company with median-imputed
 indicators plus ``*_rawdata_ratio`` provenance columns
 (README.md:179-186).
 
-Scale design: everything aggregates toward (company, sector, region)
-— medians are the only exact-percentile shuffle; the three layered
-average tables are tiny aggregates broadcast back (never a wide
-shuffle); the ownership closest-parent match is one join + one
-window on the subsidiary key.
+Plan: each input is shuffled once, on ``company_id`` (the ownership
+edges on their subsidiary id; eikon twice, as the missing-company
+probe reads a pruned copy), and nothing is shuffled on it again: the
+medians, the parent match and the final per-(company, sector) rollup
+are keyed by a superset of ``company_id``. Two steps need other
+companies' rows, and both are broadcast: the company-grain firm
+table, for the parent lookup, and the three imputation layers, one
+``rollup`` aggregate gathered into a one-row map whose keys
+``grouping_id()`` tells apart. Nothing is cached.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.functions.aggregates import median
@@ -41,106 +45,89 @@ def company_indicator_medians(
 
     ``companies`` (company_id, ald_sector) attaches sector with the
     reference's intended many-to-many duplication (:10-14 —
-    multi-sector companies contribute to every sector's pool).
+    multi-sector companies contribute to every sector's pool). A
+    company's rows are the same in each of its sectors, so the
+    medians are taken per (company, region) and the sectors joined
+    on after, both keyed by ``company_id``.
     Implausible net profit margins are nulled before aggregation
     (:464-474, F12 ``between`` gate).
     """
     lo, hi = npm_range
-    gated = eikon.withColumn(
+    gated = eikon.repartition("company_id").withColumn(
         "net_profit_margin",
         F.when(
             F.col("net_profit_margin").between(lo, hi),
             F.col("net_profit_margin"),
         ),
     )
-    with_sector = gated.join(
-        F.broadcast(companies.select("company_id", "ald_sector").distinct()),
-        "company_id",
-        "inner",
-    )
-    return with_sector.groupBy("company_id", "ald_sector", "region").agg(
+    medians = gated.groupBy("company_id", "region").agg(
         *[median(i).alias(i) for i in indicators]
     )
+    return medians.join(
+        companies.select("company_id", "ald_sector").distinct(), "company_id"
+    ).select("company_id", "ald_sector", "region", *indicators)
 
 
 def layered_averages(
     firm_level: DataFrame,
     min_sample_size: int = 50,
     indicators: Sequence[str] = INDICATORS,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three imputation layers (A4×3, :246-291): medians over
-    firms at (sector, region) — kept only when the pool has at least
-    ``min_sample_size`` firms — then per sector, then one global row.
-    All three are small enough to broadcast at any input scale."""
-    by_sector_region = (
-        firm_level.groupBy("ald_sector", "region")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[median(i).alias(f"avg_{i}") for i in indicators],
-        )
-        # strict >, matching the reference's sample_sufficient gate
-        # (create_averages_eikon, :71: size_sample > minimum_sample_size)
-        .filter(F.col("__n") > min_sample_size)
-        .drop("__n")
+) -> DataFrame:
+    """The three imputation layers (A4×3, :246-291) from one rollup:
+    medians over firms at (sector, region) — kept only when the pool
+    has more than ``min_sample_size`` firms — then per sector, then
+    one global row. Returned as one row: a map ``__layers`` from
+    (``grouping_id()``, sector, region) to the layer's medians, where
+    the id is 0 for a (sector, region) layer, 1 for a sector and 3 for
+    the global row, so a NULL region cannot pass for a sector. Small
+    enough to broadcast at any input scale."""
+    rolled = firm_level.rollup("ald_sector", "region").agg(
+        F.grouping_id().alias("layer"),
+        F.count(F.lit(1)).alias("__n"),
+        *[median(i).alias(i) for i in indicators],
     )
-    by_sector = firm_level.groupBy("ald_sector").agg(
-        *[median(i).alias(f"avg_{i}") for i in indicators]
+    # strict >, matching the reference's sample_sufficient gate
+    # (create_averages_eikon, :71: size_sample > minimum_sample_size)
+    kept = (F.col("layer") != 0) | (F.col("__n") > min_sample_size)
+    entry = F.struct(
+        _layer_key(F.col("layer"), F.col("ald_sector"), F.col("region")),
+        F.struct(*indicators),
     )
-    global_row = firm_level.agg(
-        *[median(i).alias(f"avg_{i}") for i in indicators]
+    return rolled.agg(
+        F.map_from_entries(F.collect_list(F.when(kept, entry))).alias("__layers")
     )
-    return by_sector_region, by_sector, global_row
+
+
+def _layer_key(layer: Column, sector: Column, region: Column) -> Column:
+    return F.struct(
+        layer.cast("long").alias("layer"),
+        sector.cast("string").alias("ald_sector"),
+        region.cast("string").alias("region"),
+    )
 
 
 def attach_averages(
     firm_level: DataFrame,
-    by_sector_region: DataFrame,
-    by_sector: DataFrame,
-    global_row: DataFrame,
+    layers: DataFrame,
     indicators: Sequence[str] = INDICATORS,
 ) -> DataFrame:
     """Granularity cascade (J2+J4+J8, :303-339): each firm gets the
     finest average layer available — (sector, region) when that pool
-    passed the sample gate, else sector, else global. One pass:
-    broadcast-left-join all three layers, coalesce finest-first."""
-    sr = F.broadcast(
-        by_sector_region.select(
-            "ald_sector",
-            "region",
-            *[F.col(f"avg_{i}").alias(f"__sr_{i}") for i in indicators],
-        )
-    )
-    s = F.broadcast(
-        by_sector.select(
-            "ald_sector",
-            *[F.col(f"avg_{i}").alias(f"__s_{i}") for i in indicators],
-        )
-    )
-    g = F.broadcast(
-        global_row.select(
-            *[F.col(f"avg_{i}").alias(f"__g_{i}") for i in indicators]
-        )
-    )
-    out = (
-        firm_level.join(sr, ["ald_sector", "region"], "left")
-        .join(s, "ald_sector", "left")
-        .crossJoin(g)
-    )
+    passed the sample gate, else sector, else global. One pass: the
+    one-row ``layers`` map is broadcast onto every firm and looked up
+    finest-first; a NULL region finds no (sector, region) layer."""
+    sector, region, none = F.col("ald_sector"), F.col("region"), F.lit(None)
+    found = [
+        F.when(region.isNotNull(), F.col("__layers")[_layer_key(F.lit(0), sector, region)]),
+        F.col("__layers")[_layer_key(F.lit(1), sector, none)],
+        F.col("__layers")[_layer_key(F.lit(3), none, none)],
+    ]
     # ONE select, not a withColumn-per-indicator loop: each withColumn
     # re-analyzes the whole upstream logical plan, which is quadratic
-    # in chain depth (this function sat on top of the full abcd plan
-    # in the e2e path and cost ~20s of pure analysis)
-    keep = [
-        c
-        for c in out.columns
-        if not c.startswith(("__sr_", "__s_", "__g_"))
-    ]
-    return out.select(
-        *keep,
-        *[
-            F.coalesce(f"__sr_{i}", f"__s_{i}", f"__g_{i}").alias(f"avg_{i}")
-            for i in indicators
-        ],
+    # in chain depth
+    return firm_level.crossJoin(F.broadcast(layers)).select(
+        *firm_level.columns,
+        *[F.coalesce(*[f[i] for f in found]).alias(f"avg_{i}") for i in indicators],
     )
 
 
@@ -187,21 +174,20 @@ def prepare_financial_data(
     layered imputation cascade runs; companies still uncovered fall
     through to the cascade averages. Output: one row per
     (company_id, ald_sector) with indicators + provenance ratios
-    (:586-603)."""
-    # stage boundaries: firm is re-read by the missing-company probe
-    # and the parent-inheritance join; pool by the three average
-    # layers, the cascade attach and the uncovered probe — uncached,
-    # each reuse replays the eikon scan + median aggregation. Both
-    # frames are company-grain (tiny next to the isin-level input).
-    firm = company_indicator_medians(
-        eikon, companies, npm_range, indicators
-    ).cache()
+    (:586-603); a pair with a NULL company or sector has none."""
+    # NOT NULL up front: the joins below infer it on their keys, and
+    # one filter everywhere lets every read of `pairs` share one
+    # shuffle
+    pairs = (
+        companies.select("company_id", "ald_sector")
+        .filter(F.col("company_id").isNotNull() & F.col("ald_sector").isNotNull())
+        .repartition("company_id")
+        .distinct()
+    )
+    firm = company_indicator_medians(eikon, pairs, npm_range, indicators)
 
     # production companies with no financial record → closest parent
-    prod_pairs = companies.select("company_id", "ald_sector").distinct()
-    missing = prod_pairs.join(
-        firm.select("company_id").distinct(), "company_id", "left_anti"
-    )
+    missing = pairs.join(firm.select("company_id"), "company_id", "left_anti")
     parents = closest_parent(
         missing,
         ownership_tree.select(
@@ -217,55 +203,37 @@ def prepare_financial_data(
         # single sector and the others vanished from the output
         group_cols=["company_id", "ald_sector"],
     )
-    inherited = (
-        parents.join(
+    # a missing pair takes its parent's firm rows of the same sector;
+    # with none it keeps one row of NULL indicators, outside the
+    # pool, which the cascade averages fill with provenance 0 (the
+    # reference reaches the same rows through its bind_cols
+    # fallback, :319-322)
+    inherited = parents.join(
+        F.broadcast(
             firm.select(
                 F.col("company_id").alias("parent_company_id"),
-                F.col("ald_sector").alias("__psector"),
+                "ald_sector",
                 "region",
                 *indicators,
-            ),
-            "parent_company_id",
-            "inner",
-        )
-        .filter(F.col("ald_sector") == F.col("__psector"))
-        .select("company_id", "ald_sector", "region", *indicators)
-    )
-    pool = firm.unionByName(inherited).cache()
+                F.lit(True).alias("__pooled"),
+            )
+        ),
+        ["parent_company_id", "ald_sector"],
+        "left",
+    ).select("company_id", "ald_sector", "region", *indicators, "__pooled")
+    rows = firm.withColumn("__pooled", F.lit(True)).unionByName(inherited)
 
-    sr, s, g = layered_averages(pool, min_sample_size, indicators)
-    filled = impute_with_provenance(attach_averages(pool, sr, s, g, indicators))
-
-    # still-missing production companies: cascade averages only,
-    # provenance 0 (the reference reaches the same rows through its
-    # bind_cols fallback, :319-322)
-    # anti-join on BOTH keys: a company covered for one sector must
-    # still fall back to cascade averages for its other sectors
-    uncovered = (
-        prod_pairs.join(
-            pool.select("company_id", "ald_sector").distinct(),
-            ["company_id", "ald_sector"],
-            "left_anti",
-        )
-        .withColumn("region", F.lit(None).cast("string"))
+    layers = layered_averages(
+        rows.filter(F.col("__pooled")), min_sample_size, indicators
     )
-    uncovered = attach_averages(uncovered, sr, s, g, indicators)
-    uncovered = uncovered.select(
-        *[
-            c
-            for c in uncovered.columns
-            if c not in {f"avg_{i}" for i in indicators}
-        ],
-        *[F.col(f"avg_{i}").alias(i) for i in indicators],
-        *[F.lit(0.0).alias(f"{i}_rawdata_ratio") for i in indicators],
+    filled = impute_with_provenance(
+        attach_averages(rows.drop("__pooled"), layers, indicators), indicators
     )
-
-    all_rows = filled.unionByName(uncovered)
 
     # company-level rollup (A4, :586-593) + overall provenance ratio
     # (F13, :484-500)
     ratio_cols = [f"{i}_rawdata_ratio" for i in indicators]
-    out = all_rows.groupBy("company_id", "ald_sector").agg(
+    out = filled.groupBy("company_id", "ald_sector").agg(
         *[median(i).alias(i) for i in indicators],
         *[F.avg(rc).alias(rc) for rc in ratio_cols],
     )

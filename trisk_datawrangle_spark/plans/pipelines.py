@@ -12,7 +12,7 @@ stage).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.functions.scalars import exact_cents_sum

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.functions.scalars import UNIT, recode

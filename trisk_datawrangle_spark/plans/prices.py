@@ -189,30 +189,6 @@ def prepare_ngfs_carbon_price(
     return interp.select(*CARBON_KEYS, "year", "carbon_tax")
 
 
-def add_cost_factor(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    price_col: str = "price",
-    x_col: str = "year",
-    out_col: str = "cost_factor",
-) -> DataFrame:
-    """W3 (R/prepare_LCOE_adjusted_price_data.R:38-48,146-156,280-290,
-    409-419): ``cost_factor = first(price)/price`` per group ordered
-    by year — the technology-cost decline index."""
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(x_col)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    first_p = F.first(price_col).over(w)
-    return df.withColumn(
-        out_col,
-        F.when(F.col(price_col) != 0, first_p / F.col(price_col)),
-    )
-
-
 LCOE_SERIES_KEYS = [
     "source",
     "scenario",

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.operators.interpolate import interpolate_yearly
 from trisk_datawrangle_spark.operators.quality import incomplete_groups
-from trisk_datawrangle_spark.functions.scalars import any_null
 
 #: Interpolation groups (run_prepare_Scenarios_AnalysisInput.R:18-27).
 INTERPOLATION_GROUPS = (
