@@ -194,28 +194,6 @@ def test_chunked_http_roundtrip_property(body, chunk):
 
 
 @given(
-    pages=st.lists(
-        st.text(
-            alphabet=st.characters(
-                min_codepoint=32, max_codepoint=126
-            ),
-            max_size=80,
-        ),
-        min_size=1,
-        max_size=5,
-    )
-)
-@settings(max_examples=40, deadline=None)
-def test_pdf_roundtrip_property(pages):
-    """pdf_build -> pdf_text is the identity for any printable-ASCII
-    page list — parens, backslashes, brackets included (the escape
-    path is the point)."""
-    from trisk_datawrangle_spark.llm.pdf import pdf_build, pdf_text
-
-    assert pdf_text(pdf_build(pages)) == pages
-
-
-@given(
     w=st.integers(min_value=2, max_value=40),
     h=st.integers(min_value=2, max_value=30),
     seed=st.integers(min_value=0, max_value=10**6),

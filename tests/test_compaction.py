@@ -145,21 +145,3 @@ def test_compaction_respects_target_bytes(spark, tmp_path):
     assert 2 <= len(_files(f"{path}/part=a")) <= 3
     assert spark.read.parquet(path).filter("part = 'a'").count() == 1200
 
-
-def test_write_sized_hits_file_count(spark, tmp_path):
-    from trisk_datawrangle_spark.sources.compaction import write_sized
-
-    df = spark.range(0, 20_000).selectExpr(
-        "id", "repeat('x', 64) AS pad", "id % 7 AS k"
-    )
-    path = str(tmp_path / "sized")
-    # aim for ~4 files: target = est/4 — measure est via one write
-    n1 = write_sized(df, path, target_bytes=10**9)
-    assert n1 == 1 and len(_files(path)) == 1
-    one_file = os.path.getsize(
-        os.path.join(path, _files(path)[0])
-    )
-    n4 = write_sized(df, path, target_bytes=one_file // 4 + 1)
-    assert 3 <= n4 <= 6
-    assert len(_files(path)) == n4
-    assert spark.read.parquet(path).count() == 20_000

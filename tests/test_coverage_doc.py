@@ -56,7 +56,12 @@ def _readme_section(text, heading):
 def test_readme_names_only_existing_files():
     """Every path in the first column of README.md's Layout table and
     every ``python <file>`` in its Running block must exist — a
-    deleted harness would otherwise keep being advertised."""
+    deleted harness would otherwise keep being advertised. So must
+    every package module (``llm/<name>.py``, ``plans/<name>.py``, ...)
+    cited in the package's sources, comments and docstrings included,
+    or in README, COVERAGE, SCALING and SURVEY: a cut module must
+    leave no citation behind. The history files (ROADMAP, CHANGES,
+    BASELINE) are exempt."""
     import re
 
     with open(os.path.join(REPO, "README.md")) as fh:
@@ -77,6 +82,27 @@ def test_readme_names_only_existing_files():
         p for p in named if not os.path.exists(os.path.join(REPO, p))
     )
     assert not missing, f"README.md names files that do not exist: {missing}"
+
+    pkg = os.path.join(REPO, "trisk_datawrangle_spark")
+    docs = ("README.md", "COVERAGE.md", "SCALING.md", "SURVEY.md")
+    citing = [os.path.join(REPO, d) for d in docs] + [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(pkg)
+        for f in fs
+        if f.endswith(".py")
+    ]
+    module = re.compile(
+        r"\b(?:llm|operators|plans|sources|functions|catalog)/\w+\.py\b"
+    )
+    dangling = set()
+    for path in citing:
+        with open(path) as fh:
+            dangling |= {
+                f"{os.path.relpath(path, REPO)}: {m}"
+                for m in module.findall(fh.read())
+                if not os.path.exists(os.path.join(pkg, m))
+            }
+    assert not dangling, f"citations of missing modules: {sorted(dangling)}"
 
 
 def _package_imports():

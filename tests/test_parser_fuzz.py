@@ -34,7 +34,6 @@ from trisk_datawrangle_spark.llm.multimodal import (
     encode_png,
     parse_image_dims,
 )
-from trisk_datawrangle_spark.llm.pdf import pdf_build, pdf_text
 from trisk_datawrangle_spark.llm.video import (
     encode_avi_mjpeg,
     sample_frames,
@@ -96,43 +95,6 @@ def _seeds() -> dict[str, bytes]:
         "jpeg_progressive": encode_jpeg_progressive(
             10, 12, 3, px3, quality=85
         ),
-        "pdf": pdf_build(["hello world page one", "page two"]),
-        "pdf15": pdf_build(
-            ["hello world page one", "page two"], xref_stream=True
-        ),
-        # glyph-coded subset font: mutations land in the
-        # /Differences array and the ToUnicode CMap stream too
-        "pdf_glyph": pdf_build(
-            ["hello world page one", "page two"], subset_font=True
-        ),
-        "pdf15_glyph": pdf_build(
-            ["hello world page one", "page two"],
-            xref_stream=True,
-            subset_font=True,
-        ),
-        # mixed identity-/F1 + coded-/F2 with a mid-stream Tf
-        # switch: mutations land in the font STATE tracking too
-        "pdf_mixed": pdf_build(
-            ["hello world page one", "page two"],
-            xref_stream=True,
-            mixed_fonts=True,
-        ),
-        # Type0/Identity-H composite font (2-byte glyph codes shown
-        # as hex strings across Tj and '): mutations land in the
-        # wide-code CMap, the hex-string scan, and the descendant
-        # font structure (r12)
-        "pdf_type0": pdf_build(
-            ["hello world page one", "page two"],
-            xref_stream=True,
-            type0=True,
-        ),
-        # subset font shown through hex-string operands: mutations
-        # land in the hex body / odd-digit / <<-dict paths (r12)
-        "pdf_hex": pdf_build(
-            ["hello world page one", "page two"],
-            subset_font=True,
-            hex_strings=True,
-        ),
         "http_gzip": (
             b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n"
             + __import__("gzip").compress(b"gzip fuzz seed " * 10, 6)
@@ -162,13 +124,6 @@ _PARSERS = {
     "http_charset": http_decode_text,
     "jpeg": decode_jpeg,
     "jpeg_progressive": decode_jpeg,
-    "pdf": pdf_text,
-    "pdf15": pdf_text,
-    "pdf_glyph": pdf_text,
-    "pdf15_glyph": pdf_text,
-    "pdf_mixed": pdf_text,
-    "pdf_type0": pdf_text,
-    "pdf_hex": pdf_text,
     "http_gzip": http_decode_text,
     "warc": warc_records,
     "wav": decode_wav,

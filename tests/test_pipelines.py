@@ -201,6 +201,31 @@ def test_sums_are_exact_in_any_row_order(spark, tmp_path, partitions):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
+def test_sums_raise_rather_than_drop_a_value(spark):
+    """A value or a sum that does not fit DECIMAL(38, 18) raises an
+    error naming the column; as a NULL from the cast it would drop out
+    of the sum (1e21 + 1.0 would read 1.0). NaN is skipped like NULL,
+    as R's ``sum(na.rm = TRUE)``."""
+
+    def plan_tech_prod_2022(a, b):
+        activities = _wide(spark, [
+            (5, "Car Co", "Automotive", tech, "JP", "# vehicles",
+             value, 5.0, 5.0, 5.0)
+            for tech, value in (("ICE Diesel", a), ("ICE Gasoline", b))
+        ])
+        out = prepare_abcd_data(
+            activities, _wide(spark, []), start_year=2022, time_horizon=3
+        )
+        return {r["year"]: r["plan_tech_prod"] for r in out.collect()}[2022]
+
+    assert plan_tech_prod_2022(float("nan"), 1.0) == 1.0
+    for a, b in ((1e21, 1.0), (float("-inf"), 1.0)):
+        with pytest.raises(Exception, match="abcd: a value of value does not fit"):
+            plan_tech_prod_2022(a, b)
+    with pytest.raises(Exception, match="abcd: the sum of value does not fit"):
+        plan_tech_prod_2022(6e19, 6e19)
+
+
 # ------------------------------------------------------------------ #
 # financial pipeline                                                  #
 # ------------------------------------------------------------------ #

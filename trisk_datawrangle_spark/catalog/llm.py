@@ -4373,7 +4373,7 @@ def s11(spark, sf_dir):
        count replayable from the html byte length;
     1/4: ``Content-Encoding: gzip`` with Content-Length of the
        COMPRESSED body — the dominant real-capture spelling,
-       inflated behind the PDF parser's 8 MB bomb cap;
+       inflated behind the 8 MB bomb cap;
     2/5: identity.
 
     The recovered HTML goes through the SAME JVM
@@ -4531,513 +4531,6 @@ def s11(spark, sf_dir):
         "gzipped",
         F.length("html").cast("long").alias("body_len"),
         strip_html_expr("html").alias("clean"),
-    )
-
-
-_S13_PAGE = 12  # words per PDF page in the s13 fixture
-
-
-@q(
-    "s13_pdf_extract",
-    f"""
-WITH toks AS (
-    SELECT doc_id,
-        -- explicit class, NOT \\s: RE2's \\s excludes \\v while the
-        -- kernel's Python class includes it — the sets must match
-        list_filter(
-            string_split_regex(text, '[ \\t\\n\\v\\f\\r]+'),
-            x -> x <> ''
-        ) AS words
-    FROM documents
-),
-pg AS (
-    SELECT doc_id,
-        CAST(greatest(ceil(len(words) / {_S13_PAGE}.0), 1) AS BIGINT)
-            AS n_pages
-    FROM toks
-),
-pages AS (
-    SELECT t.doc_id, i.i AS page_idx,
-        array_to_string(
-            t.words[i.i * {_S13_PAGE} + 1
-                    : i.i * {_S13_PAGE} + {_S13_PAGE}],
-            ' ') AS ptext
-    FROM toks t JOIN pg USING (doc_id),
-        unnest(generate_series(0, pg.n_pages - 1)) AS i(i)
-)
-SELECT p.doc_id,
-    CAST(pg.n_pages AS INTEGER) AS n_pages,
-    -- even docs build as PDF 1.5: xref STREAM + /ObjStm container
-    -- (+2) and one plain-integer length object per page (indirect
-    -- /Length); odd docs as classic PDF 1.4
-    CAST(3 + 2 * pg.n_pages
-         + CASE WHEN p.doc_id % 2 = 0
-                THEN 2 + pg.n_pages ELSE 0 END
-         AS INTEGER) AS n_objects,
-    p.doc_id % 2 = 0 AS xref_stream,
-    string_agg(p.ptext, chr(10) ORDER BY p.page_idx) AS clean
-FROM pages p JOIN pg USING (doc_id)
-GROUP BY p.doc_id, pg.n_pages
-""",
-)
-def s13(spark, sf_dir):
-    """PDF text extraction end to end (llm/pdf.py) — the other
-    front-door crawl format beside WARC/HTML: per document the text
-    is split into 12-word pages and BUILT into a spec-valid PDF —
-    ODD doc_ids as classic PDF 1.4 (real xref table, 20-byte
-    entries), EVEN doc_ids as PDF 1.5 (cross-reference STREAM with
-    /W [1 4 2] rows under the PNG Up predictor, non-stream objects
-    packed into an /ObjStm container addressed by type-2 entries —
-    the majority class of post-2005 crawl PDFs) — then PARSED back
-    xref-first: startxref → table/stream walk → object slicing with
-    declared-object-number validation (type-2 members through the
-    ObjStm N-pair header) → /Root → page tree → per-page /Contents
-    → zlib inflate → Tj/TJ text ops with escape handling — and the
-    kernel RAISES unless the recovered pages equal the built ones.
-    The oracle replays the page-chunking arithmetic and the
-    per-variant object-count formula (3 + 2·pages classic; 1.5 adds
-    the ObjStm + XRef objects AND one plain-integer length object
-    per page: 3 + 3·pages + 2), so a wrong xref offset, predictor row,
-    ObjStm slice, stream length, escape, or page order flips the
-    hash. Scale shape: bytes-level Arrow-batched mapInPandas like
-    s11 — parallelism from partitioning, records never scanned for
-    delimiters (offsets drive every slice)."""
-    import re as _re
-
-    import pandas as pd
-
-    from trisk_datawrangle_spark.llm.pdf import (
-        _parse_xref,
-        pdf_build,
-        pdf_text,
-    )
-
-    def extract(batches):
-        for pdf in batches:
-            ids, npages, nobjs, xstreams, cleans = [], [], [], [], []
-            for doc_id, text in zip(
-                pdf["doc_id"].astype("int64"), pdf["text"]
-            ):
-                doc_id = int(doc_id)
-                words = [
-                    w
-                    for w in _re.split(r"[\t\n\x0b\x0c\r ]+", text)
-                    if w
-                ]
-                pages = [
-                    " ".join(words[i:i + _S13_PAGE])
-                    for i in range(0, len(words), _S13_PAGE)
-                ] or [""]
-                use_stream = doc_id % 2 == 0
-                payload = pdf_build(pages, xref_stream=use_stream)
-                got = pdf_text(payload)
-                if got != pages:
-                    raise AssertionError(
-                        f"s13: PDF roundtrip mismatch for doc "
-                        f"{doc_id}"
-                    )
-                parsed = _parse_xref(payload)
-                if parsed is None:
-                    raise AssertionError(
-                        f"s13: xref parse failed for doc {doc_id}"
-                    )
-                table, _trailer = parsed
-                # present = direct offsets OR type-2 ObjStm members
-                n_present = sum(
-                    1
-                    for e in table
-                    if isinstance(e, tuple)
-                    or (isinstance(e, int) and e >= 0)
-                )
-                if use_stream:
-                    n_members = sum(
-                        1 for e in table if isinstance(e, tuple)
-                    )
-                    # catalog + pages tree + font + page dicts ride
-                    # in the ObjStm; a wrong member count means the
-                    # type-2 rows mis-parsed even if text matched
-                    if n_members != 3 + len(got):
-                        raise AssertionError(
-                            f"s13: ObjStm member count off for doc "
-                            f"{doc_id}"
-                        )
-                ids.append(doc_id)
-                npages.append(len(got))
-                nobjs.append(n_present)
-                xstreams.append(use_stream)
-                cleans.append("\n".join(got))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pages": npages,
-                    "n_objects": nobjs,
-                    "xref_stream": xstreams,
-                    "clean": cleans,
-                }
-            )
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    return d.mapInPandas(
-        extract,
-        "doc_id long, n_pages int, n_objects int,"
-        " xref_stream boolean, clean string",
-    )
-
-
-@q(
-    "s14_pdf_glyph_extract",
-    f"""
-WITH toks AS (
-    SELECT doc_id,
-        list_filter(
-            string_split_regex(text, '[ \\t\\n\\v\\f\\r]+'),
-            x -> x <> ''
-        ) AS words
-    FROM documents
-),
-pg AS (
-    SELECT doc_id,
-        CAST(greatest(ceil(len(words) / {_S13_PAGE}.0), 1) AS BIGINT)
-            AS n_pages
-    FROM toks
-),
-pages AS (
-    SELECT t.doc_id, i.i AS page_idx,
-        array_to_string(
-            t.words[i.i * {_S13_PAGE} + 1
-                    : i.i * {_S13_PAGE} + {_S13_PAGE}],
-            ' ') AS ptext
-    FROM toks t JOIN pg USING (doc_id),
-        unnest(generate_series(0, pg.n_pages - 1)) AS i(i)
-)
-SELECT p.doc_id,
-    CAST(pg.n_pages AS INTEGER) AS n_pages,
-    -- subset font adds ONE object (the ToUnicode CMap stream,
-    -- direct in both variants) on top of the s13 arithmetic; the
-    -- mixed-font arm (doc%3=0) adds TWO (/F2 font dict + its CMap)
-    CAST(CASE WHEN p.doc_id % 3 = 0 THEN 5 ELSE 4 END
-         + 2 * pg.n_pages
-         + CASE WHEN p.doc_id % 2 = 0
-                THEN 2 + pg.n_pages ELSE 0 END
-         AS INTEGER) AS n_objects,
-    p.doc_id % 2 = 0 AS xref_stream,
-    string_agg(p.ptext, chr(10) ORDER BY p.page_idx) AS clean
-FROM pages p JOIN pg USING (doc_id)
-GROUP BY p.doc_id, pg.n_pages
-""",
-)
-def s14(spark, sf_dir):
-    """PDF GLYPH decoding end to end (llm/pdf.py, r10 verdict
-    Missing #1) — the fidelity rung above s13's structural walk:
-    real crawled PDFs overwhelmingly use SUBSET fonts whose Tj
-    string bytes are glyph indices, not character codes, so an
-    extractor without the font's decode channels returns mojibake
-    that no downstream gate can detect. Same page chunking and
-    1.4/1.5 xref rotation as s13, but every document builds with a
-    glyph-coded font: codes are assigned sequentially from 0x21
-    over the ord-sorted distinct chars (non-identity by
-    construction — the kernel ASSERTS the coding differs from
-    identity, so the fixture cannot silently degenerate into
-    the identity case), and the mapping deliberately SPLITS across
-    the two public decode channels — every 7th AGL-named char lives
-    ONLY in ``/Encoding /Differences`` (resolved through the Adobe
-    Glyph List subset), the rest ONLY in the ``/ToUnicode`` CMap
-    (bfchar singles + bfranges in BOTH destination forms, Flate-
-    compressed stream object) — so an extractor implementing one
-    channel but not the other fails the roundtrip. Every THIRD doc
-    builds ``mixed_fonts``: each page shows its first half through
-    the identity /F1 and its second half through the coded /F2 with
-    a mid-stream ``/F2 12 Tf`` text-state switch — the shape every
-    real multi-font page has; an extractor resolving one font per
-    page (the first s14 cut) would decode the /F2 half as latin-1
-    mojibake and fail. The oracle
-    replays the chunking and the per-variant object arithmetic
-    (+1 CMap stream object over s13: streams may not live in an
-    ObjStm, so it stays direct in the 1.5 variant too; +2 for the
-    mixed arm's /F2 dict, which DOES ride the ObjStm,
-    member-count-asserted). Scale
-    shape: bytes-level Arrow-batched mapInPandas like s13 — no
-    shuffle, embarrassingly parallel; hostile CMaps/Differences
-    (dup codes, hi<lo ranges, odd hex, lone surrogates, non-gen-0
-    refs, unmapped codes) refuse loudly, fuzz-gated in
-    tests/test_parser_fuzz.py."""
-    import pandas as pd
-
-    import re as _re
-
-    from trisk_datawrangle_spark.llm.pdf import (
-        _glyph_coder,
-        _parse_xref,
-        pdf_build,
-        pdf_text,
-    )
-
-    def extract(batches):
-        for pdf in batches:
-            ids, npages, nobjs, xstreams, cleans = [], [], [], [], []
-            for doc_id, text in zip(
-                pdf["doc_id"].astype("int64"), pdf["text"]
-            ):
-                doc_id = int(doc_id)
-                words = [
-                    w
-                    for w in _re.split(r"[\t\n\x0b\x0c\r ]+", text)
-                    if w
-                ]
-                pages = [
-                    " ".join(words[i:i + _S13_PAGE])
-                    for i in range(0, len(words), _S13_PAGE)
-                ] or [""]
-                use_mixed = doc_id % 3 == 0
-                coded_src = (
-                    [t[len(t) // 2:] for t in pages]
-                    if use_mixed
-                    else pages
-                )
-                code_of, _diff, _cmap = _glyph_coder(coded_src)
-                if all(code == ord(ch) for ch, code in code_of.items()):
-                    raise AssertionError(
-                        f"s14: identity coding for doc {doc_id} — "
-                        "the glyph fixture is vacuous"
-                    )
-                use_stream = doc_id % 2 == 0
-                payload = pdf_build(
-                    pages,
-                    xref_stream=use_stream,
-                    subset_font=not use_mixed,
-                    mixed_fonts=use_mixed,
-                )
-                got = pdf_text(payload)
-                if got != pages:
-                    raise AssertionError(
-                        f"s14: glyph roundtrip mismatch for doc "
-                        f"{doc_id}"
-                    )
-                parsed = _parse_xref(payload)
-                if parsed is None:
-                    raise AssertionError(
-                        f"s14: xref parse failed for doc {doc_id}"
-                    )
-                table, _trailer = parsed
-                n_present = sum(
-                    1
-                    for e in table
-                    if isinstance(e, tuple)
-                    or (isinstance(e, int) and e >= 0)
-                )
-                if use_stream:
-                    n_members = sum(
-                        1 for e in table if isinstance(e, tuple)
-                    )
-                    # the CMap stream must NOT ride in the ObjStm;
-                    # the mixed arm's /F2 font dict MUST
-                    want_members = (4 if use_mixed else 3) + len(got)
-                    if n_members != want_members:
-                        raise AssertionError(
-                            f"s14: ObjStm member count off for doc "
-                            f"{doc_id}"
-                        )
-                ids.append(doc_id)
-                npages.append(len(got))
-                nobjs.append(n_present)
-                xstreams.append(use_stream)
-                cleans.append("\n".join(got))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pages": npages,
-                    "n_objects": nobjs,
-                    "xref_stream": xstreams,
-                    "clean": cleans,
-                }
-            )
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    return d.mapInPandas(
-        extract,
-        "doc_id long, n_pages int, n_objects int,"
-        " xref_stream boolean, clean string",
-    )
-
-
-@q(
-    "s15_pdf_type0_extract",
-    f"""
-WITH toks AS (
-    SELECT doc_id,
-        list_filter(
-            string_split_regex(text, '[ \\t\\n\\v\\f\\r]+'),
-            x -> x <> ''
-        ) AS words
-    FROM documents
-),
-pg AS (
-    SELECT doc_id,
-        CAST(greatest(ceil(len(words) / {_S13_PAGE}.0), 1) AS BIGINT)
-            AS n_pages
-    FROM toks
-),
-pages AS (
-    SELECT t.doc_id, i.i AS page_idx,
-        array_to_string(
-            t.words[i.i * {_S13_PAGE} + 1
-                    : i.i * {_S13_PAGE} + {_S13_PAGE}],
-            ' ') AS ptext
-    FROM toks t JOIN pg USING (doc_id),
-        unnest(generate_series(0, pg.n_pages - 1)) AS i(i)
-)
-SELECT p.doc_id,
-    CAST(pg.n_pages AS INTEGER) AS n_pages,
-    -- the Type0 arm (doc%3=0) adds TWO objects over the s13 base
-    -- (descendant CIDFont dict + the 2-byte-code ToUnicode CMap
-    -- stream); the hex-string and quote-operator subset arms add
-    -- ONE (the CMap stream)
-    CAST(CASE WHEN p.doc_id % 3 = 0 THEN 5 ELSE 4 END
-         + 2 * pg.n_pages
-         + CASE WHEN p.doc_id % 2 = 0
-                THEN 2 + pg.n_pages ELSE 0 END
-         AS INTEGER) AS n_objects,
-    p.doc_id % 2 = 0 AS xref_stream,
-    p.doc_id % 3 = 0 AS type0,
-    string_agg(p.ptext, chr(10) ORDER BY p.page_idx) AS clean
-FROM pages p JOIN pg USING (doc_id)
-GROUP BY p.doc_id, pg.n_pages
-""",
-)
-def s15(spark, sf_dir):
-    """Type0/Identity-H composite fonts + hex-string show operands
-    (llm/pdf.py, r11 verdict Missing #1) — the fidelity rung above
-    s14's simple subset fonts, and the DOMINANT form in real crawls:
-    modern writers embed Type0 fonts whose show strings are 2-byte
-    glyph codes emitted as HEX string objects (``<0041> Tj``), text
-    meaning carried only by a wide-code ToUnicode CMap. Before r12
-    the content scan consumed only ``(...)`` literals, so a hex
-    operand was SILENTLY SKIPPED — partial/empty extraction, the one
-    refuse-loudly violation in the module (r11 verdict); now both
-    string object forms decode and an inline ``<<`` dict refuses
-    loudly. Same page chunking and 1.4/1.5 xref rotation as s13,
-    three arms: doc%3=0 builds a Type0/Identity-H composite (2-byte
-    codes from 1, hex operands split across ``Tj`` and the ``'``
-    move-and-show operator — both composite show forms); doc%3=1 a
-    glyph-coded SIMPLE subset shown entirely through hex operands
-    (``<..> Tj`` head + kerned ``[<..> -250 <..>] TJ`` array tail);
-    doc%3=2 the same subset shown through all THREE literal
-    operator forms ``(A) Tj (B) ' 1 2 (C) "``. The kernel asserts
-    the coding is non-identity (the fixture cannot degenerate), the
-    roundtrip is exact, and the 1.5 ObjStm member count matches the
-    arm (the descendant CIDFont dict RIDES the ObjStm, the CMap
-    stream must NOT). The oracle replays the chunking and the
-    per-arm object arithmetic (+2 Type0 / +1 subset over s13).
-    Hostile composite shapes (Identity-V, named CMaps, /Differences
-    on a Type0, missing ToUnicode, odd byte counts, unmapped wide
-    codes, malformed hex, inline dicts) refuse loudly — fuzz-gated
-    via the pdf_type0/pdf_hex seeds in tests/test_parser_fuzz.py.
-    Scale shape: bytes-level Arrow-batched mapInPandas like s13 —
-    shuffle-free, embarrassingly parallel, linear in documents."""
-    import pandas as pd
-
-    import re as _re
-
-    from trisk_datawrangle_spark.llm.pdf import (
-        _glyph_coder,
-        _parse_xref,
-        pdf_build,
-        pdf_text,
-    )
-
-    def extract(batches):
-        for pdf in batches:
-            ids, npages, nobjs = [], [], []
-            xstreams, t0s, cleans = [], [], []
-            for doc_id, text in zip(
-                pdf["doc_id"].astype("int64"), pdf["text"]
-            ):
-                doc_id = int(doc_id)
-                words = [
-                    w
-                    for w in _re.split(r"[\t\n\x0b\x0c\r ]+", text)
-                    if w
-                ]
-                pages = [
-                    " ".join(words[i:i + _S13_PAGE])
-                    for i in range(0, len(words), _S13_PAGE)
-                ] or [""]
-                arm = doc_id % 3
-                use_type0 = arm == 0
-                code_of, _d, _c = _glyph_coder(
-                    pages, width=2 if use_type0 else 1
-                )
-                if all(
-                    code == ord(ch) for ch, code in code_of.items()
-                ):
-                    raise AssertionError(
-                        f"s15: identity coding for doc {doc_id} — "
-                        "the glyph fixture is vacuous"
-                    )
-                use_stream = doc_id % 2 == 0
-                payload = pdf_build(
-                    pages,
-                    xref_stream=use_stream,
-                    subset_font=not use_type0,
-                    type0=use_type0,
-                    hex_strings=arm == 1,
-                    quote_ops=arm == 2,
-                )
-                got = pdf_text(payload)
-                if got != pages:
-                    raise AssertionError(
-                        f"s15: roundtrip mismatch for doc {doc_id} "
-                        f"(arm {arm})"
-                    )
-                parsed = _parse_xref(payload)
-                if parsed is None:
-                    raise AssertionError(
-                        f"s15: xref parse failed for doc {doc_id}"
-                    )
-                table, _trailer = parsed
-                n_present = sum(
-                    1
-                    for e in table
-                    if isinstance(e, tuple)
-                    or (isinstance(e, int) and e >= 0)
-                )
-                if use_stream:
-                    n_members = sum(
-                        1 for e in table if isinstance(e, tuple)
-                    )
-                    # the descendant CIDFont dict rides the ObjStm;
-                    # the CMap stream must not
-                    want_members = (4 if use_type0 else 3) + len(got)
-                    if n_members != want_members:
-                        raise AssertionError(
-                            f"s15: ObjStm member count off for doc "
-                            f"{doc_id}"
-                        )
-                ids.append(doc_id)
-                npages.append(len(got))
-                nobjs.append(n_present)
-                xstreams.append(use_stream)
-                t0s.append(use_type0)
-                cleans.append("\n".join(got))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pages": npages,
-                    "n_objects": nobjs,
-                    "xref_stream": xstreams,
-                    "type0": t0s,
-                    "clean": cleans,
-                }
-            )
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    return d.mapInPandas(
-        extract,
-        "doc_id long, n_pages int, n_objects int,"
-        " xref_stream boolean, type0 boolean, clean string",
     )
 
 
@@ -7284,7 +6777,7 @@ def x63(spark, sf_dir):
     so a lost gz member, a cap that does not fire, a refusal that
     drops the row entirely, or any parse drift flips the hash.
     Scale shape: per-row Arrow gunzip (bytes-level, no shuffle,
-    linear in documents — the s11/s13 media-kernel tier) feeding
+    linear in documents — the s11 media-kernel tier) feeding
     the scan-fused JVM parse; the bomb payload is built once per
     kernel, not per row."""
     import gzip as _gzip

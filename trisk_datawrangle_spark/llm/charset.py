@@ -38,7 +38,7 @@ windows-1254 and iso-8859-11 → windows-874 included), ~90 labels
 total. A
 DECLARED charset outside the supported set, or payload bytes that
 do not decode under the declared charset, returns None — refused
-loudly, the same contract as the WARC/PDF parsers: mis-decoded text
+loudly, the same contract as the WARC parser: mis-decoded text
 poisons every downstream gate, so a record we cannot decode
 faithfully is dropped, not guessed at.
 

@@ -24,7 +24,7 @@ refused loudly (None), as is any malformed framing. Compressed
 codings (``Content-Encoding: gzip``/``x-gzip``/``deflate`` — zlib
 wrapped with the raw-deflate legacy fallback — and the composite
 ``Transfer-Encoding: gzip, chunked``) inflate via stdlib zlib
-behind the same 8 MB bomb cap as the PDF parser; ``br``/``zstd``/
+behind an 8 MB decompression-bomb cap; ``br``/``zstd``/
 stacked/unknown codings are refused loudly, never passed through
 compressed.
 """
@@ -370,9 +370,8 @@ def _dechunk(body: bytes) -> tuple[bytes, int] | None:
         n_chunks += 1
 
 
-#: Bounded inflate cap for gzip HTTP bodies — the same bomb-cap
-#: idiom as llm/pdf.py's _MAX_INFLATE: a coding that inflates past
-#: this is a decompression bomb, refused (None), never streamed on.
+#: Bounded inflate cap for gzip HTTP bodies. A coding that inflates
+#: past it is a decompression bomb: refused (None), never streamed on.
 _MAX_INFLATE = 8 * 1024 * 1024
 
 

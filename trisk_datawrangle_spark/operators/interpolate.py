@@ -10,9 +10,10 @@ Window-frame scale note: every window here partitions by the
 interpolation groups and orders by the x column. For climate-scenario
 shapes, groups are small (tens of rows) and numerous (millions at
 100 TB) — exactly the shape Spark's window operator handles well
-after one shuffle on the group keys. All downstream windows reuse the
-same partitioning, so the whole interpolate→index pipeline costs a
-single shuffle.
+after one shuffle on the group keys. Later windows on the same keys
+reuse that partitioning; a join does not. ``complete_spine``'s join
+on the keys + year re-shuffles both sides (``operators/spine.py``),
+so an interpolate→index pipeline built on it shuffles more than once.
 """
 
 from __future__ import annotations
@@ -300,12 +301,11 @@ def fit_window_extension(
     prepare_LCOE_adjusted_price_data.R:199-207 — one grouped
     aggregate + broadcast join here, never a per-combination loop).
 
-    Deterministic by construction: the normal equations are computed
-    from plain sums (n·Σxy − ΣxΣy over n·Σx² − (Σx)²), and the
-    slope/intercept/prediction expression sequence is fixed, so two
-    engines evaluating the same rows produce bit-identical output —
-    unlike the ``covar_pop`` formulation, whose intermediate rounding
-    is aggregation-order-dependent."""
+    The normal equations are computed from plain sums
+    (n·Σxy − ΣxΣy over n·Σx² − (Σx)²) in a fixed expression sequence.
+    ``__sy`` and ``__sxy`` are double sums taken in the order rows
+    arrive, so, like any double sum, the fit can differ in the last
+    bits between runs that partition the rows differently."""
     groups = list(group_cols)
     fit = (
         df.filter(

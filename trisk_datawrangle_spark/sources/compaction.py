@@ -213,60 +213,3 @@ def compact_partitions(
         report["files_after"] += n_new
     return report
 
-
-def write_sized(
-    df,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    partition_by: Sequence[str] | None = None,
-    sample_rows: int = 1000,
-    mode: str = "overwrite",
-) -> int:
-    """Write ``df`` as parquet with output files sized toward
-    ``target_bytes`` — the PREVENTION side of :func:`compact_partitions`
-    (right-size at write time instead of compacting later).
-
-    File count = ``ceil(estimated_bytes / target_bytes)`` where the
-    estimate is row count × sampled average encoded-row size (a
-    ``sample_rows``-row parquet encode in memory via Arrow — honest
-    about compression, no full materialization). Partitioned writes
-    repartition by the partition columns WITH a salt sized so each
-    partition's files land near the target (files per partition =
-    total files / distinct partitions, floored at 1). Returns the
-    target file count. Estimation costs one count + one tiny sample;
-    both reuse the input's lineage."""
-    import io
-    import math
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    n = df.count()
-    if n == 0:
-        df.write.mode(mode).parquet(path)
-        return 1
-    sample = df.limit(int(sample_rows)).toPandas()
-
-    def encoded(frame) -> int:
-        buf = io.BytesIO()
-        pq.write_table(pa.Table.from_pandas(frame), buf)
-        return buf.getbuffer().nbytes
-
-    # difference of two encodes cancels the fixed parquet footer /
-    # metadata cost that would otherwise inflate the per-row estimate
-    head = max(1, len(sample) // 10)
-    b_small, b_full = encoded(sample.head(head)), encoded(sample)
-    per_row = max(1, (b_full - b_small) // max(1, len(sample) - head))
-    est_bytes = n * per_row
-    n_files = max(1, math.ceil(est_bytes / float(target_bytes)))
-    if partition_by:
-        n_parts = df.select(*partition_by).distinct().count()
-        per_part = max(1, n_files // max(1, n_parts))
-        salted = df.withColumn(
-            "__salt", F.pmod(F.xxhash64(*df.columns), F.lit(per_part))
-        ).repartition(*partition_by, "__salt").drop("__salt")
-        salted.write.mode(mode).partitionBy(*partition_by).parquet(path)
-    else:
-        df.repartition(n_files).write.mode(mode).parquet(path)
-    return n_files
