@@ -16,7 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.plans.abcd import (
-    first_year_positive,
     prepare_abcd_data,
     prepare_asset_impact_data,
 )
@@ -167,9 +166,20 @@ def test_asset_id_and_geography(abcd):
 
 
 def test_first_year_positive_gate(spark, abcd):
-    gated = first_year_positive(abcd, ["company_id", "ald_business_unit"])
+    """P9: a live series whose first-year production is 0 is dropped;
+    asset ids are numbered before the gate, so the series kept beside
+    it stays the company's second asset."""
     # Acme starts at 16 > 0, Car Co at 100 > 0 → both survive
-    assert gated.select("company_id").distinct().count() == 2
+    assert abcd.select("company_id").distinct().count() == 2
+    activities = _wide(spark, [
+        (7, "Gate Co", "Power", "CoalCap", "DE", "MW", 0.0, 5.0, 5.0, 5.0),
+        (7, "Gate Co", "Power", "GasCap", "DE", "MW", 3.0, 3.0, 3.0, 3.0),
+    ])
+    out = prepare_abcd_data(
+        activities, _wide(spark, []), start_year=2022, time_horizon=3
+    )
+    rows = out.select("ald_business_unit", "asset_id").distinct().collect()
+    assert [tuple(r) for r in rows] == [("GasCap", "7_2")]
 
 
 @pytest.mark.parametrize("partitions", [1, 8])
@@ -327,3 +337,119 @@ def test_multisector_company_keeps_all_sector_rows(spark, fin_inputs):
     assert r3p["pd"] == pytest.approx(0.3)
     r3o = out.filter((F.col("company_id") == 3) & (F.col("ald_sector") == "Oil&Gas")).collect()[0]
     assert r3o["rawdata_ratio"] == 0.0
+
+
+# ------------------------------------------------------------------ #
+# rewritten operators against their join / unpivot formulation       #
+# ------------------------------------------------------------------ #
+
+
+def _spine_by_join(df, group_cols, x_col, bounds, lo, hi, step):
+    """``complete_spine`` as a left join of a distinct-keys spine onto
+    ``df``: the formulation the one-aggregate version must match."""
+    if bounds == "group":
+        keys = df.groupBy(*group_cols).agg(
+            F.min(x_col).alias("__lo"), F.max(x_col).alias("__hi")
+        )
+    else:
+        agg = df.agg(F.min(x_col).alias("__dlo"), F.max(x_col).alias("__dhi"))
+        keys = df.select(*group_cols).distinct().crossJoin(agg).select(
+            *group_cols,
+            (F.lit(lo) if lo is not None else F.col("__dlo")).alias("__lo"),
+            (F.lit(hi) if hi is not None else F.col("__dhi")).alias("__hi"),
+        )
+    spine = keys.select(
+        *group_cols,
+        F.explode(F.sequence("__lo", "__hi", F.lit(step))).alias(x_col),
+    )
+    return spine.join(df, list(group_cols) + [x_col], "left")
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+SPINE_CASES = {
+    "group": dict(bounds="group"),
+    "global": dict(bounds="global"),
+    "fixed_narrower": dict(bounds="fixed", lo=2022, hi=2024),
+    "fixed_wider": dict(bounds="fixed", lo=2016, hi=2032),
+    "fixed_lo_only": dict(bounds="fixed", lo=2017),
+    "fixed_hi_only": dict(bounds="fixed", hi=2031),
+}
+
+
+@pytest.mark.parametrize("step", [1, 2])
+@pytest.mark.parametrize("case", sorted(SPINE_CASES))
+def test_complete_spine_matches_the_join(spark, case, step):
+    """NULL keys, NULL years, duplicate (key, year) rows and years off
+    a step-2 grid, under every bounds mode, give the same rows and
+    columns as the spine left-joined onto the data; so does an empty
+    input."""
+    from trisk_datawrangle_spark.operators.spine import complete_spine
+
+    schema = "g string, h int, v double, year int, tag string"
+    rows = [
+        ("a", 1, 1.0, 2020, "x"), ("a", 1, 2.0, 2020, "y"),  # duplicate
+        ("a", 1, 3.0, 2023, None), ("a", 1, 4.0, 2026, "z"),
+        ("a", 1, 5.0, None, "n"),                              # NULL year
+        ("a", 2, None, 2021, "w"), ("a", 2, 6.0, 2025, None),
+        (None, 1, 7.0, 2019, "k"), (None, 1, 8.0, 2024, "k"),  # NULL key
+        ("b", None, 9.0, 2022, "m"),                            # NULL key
+        ("c", 3, None, None, None),                             # no year
+        ("d", 4, 10.0, 2028, "q"),
+    ]
+    opts = SPINE_CASES[case]
+    for data in (rows, []):
+        df = spark.createDataFrame(data, schema)
+        got = complete_spine(df, ["g", "h"], "year", step=step, **opts)
+        want = _spine_by_join(
+            df, ["g", "h"], "year", opts["bounds"], opts.get("lo"),
+            opts.get("hi"), step,
+        )
+        assert got.dtypes == want.dtypes
+        assert _rows(got) == _rows(want), (case, step, len(data))
+
+
+@pytest.mark.parametrize(
+    "pattern,columns",
+    [
+        (r"(\d{4})", ["2021", "Equity Ownership 2022", "2023"]),
+        (r"FY(\d{2})", ["FY21", "FY22", "FY23"]),
+    ],
+)
+def test_melt_year_columns_matches_unpivot(spark, pattern, columns):
+    """Mixed int/double year columns with NULLs melt to the rows and
+    types ``unpivot`` gives, with the year from ``pattern``'s group."""
+    from trisk_datawrangle_spark.operators.reshape import melt_year_columns
+
+    df = spark.createDataFrame(
+        [("a", "u", 1, 2.5, None), ("b", None, None, -1.0, 7)],
+        f"k string, other string, `{columns[0]}` int, "
+        f"`{columns[1]}` double, `{columns[2]}` bigint",
+    )
+    got = melt_year_columns(df, ["k"], pattern=pattern, value_name="v")
+    want = (
+        df.unpivot(["k"], columns, "__name", "v")
+        .withColumn("year", F.regexp_extract("__name", pattern, 1).cast("int"))
+        .drop("__name")
+    )
+    assert got.dtypes == want.dtypes
+    assert _rows(got) == _rows(want)
+
+
+def test_clone_recode_matches_filter_union(spark):
+    """Rows where the predicate holds come back twice, the copy
+    recoded; a NULL predicate clones nothing."""
+    from trisk_datawrangle_spark.operators.setops import clone_recode
+
+    df = spark.createDataFrame(
+        [("GasCap", 1, 0.5), ("CoalCap", 2, None), (None, 3, 1.0), ("GasCap", 4, None)],
+        "tech string, n int, v double",
+    )
+    pred = F.col("tech") == "GasCap"
+    got = clone_recode(df, pred, {"tech": "OilCap", "n": F.col("n") + 10})
+    clone = df.filter(pred).withColumns({"tech": F.lit("OilCap"), "n": F.col("n") + 10})
+    want = df.unionByName(clone)
+    assert got.dtypes == want.dtypes
+    assert _rows(got) == _rows(want)

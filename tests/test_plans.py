@@ -378,50 +378,100 @@ def test_incremental_dedup_no_cartesian(spark, sf_dir):
 
 
 def _exchanges(df) -> tuple[list[str], int]:
-    """Run ``df`` and read its final adaptive plan: the partitioning of
-    each exchange that shuffles (hash keys without attribute ids, or
-    the partitioning's name) and the number of broadcast exchanges.
-    Reused exchanges are not counted again."""
+    """Run ``df`` and read its final adaptive plan, subqueries
+    included: the partitioning of each exchange that shuffles (hash
+    keys without attribute ids, or the partitioning's name) and the
+    number of broadcast exchanges. Reused exchanges and the initial
+    plans printed beside each final one are not counted."""
     import re
 
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = [
-        line for line in plan.split("== Initial Plan ==")[0].splitlines()
-        if "ReusedExchange" not in line
-    ]
-    shuffles = []
-    for line in lines:
+    # (indent, final?) of the "== Final/Initial Plan ==" sections open
+    # at the current line; a line belongs to the innermost section
+    # indented less than it
+    sections: list[tuple[int, bool]] = []
+    shuffles, broadcasts = [], 0
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" "))
+        while sections and sections[-1][0] >= indent:
+            sections.pop()
+        m = re.search(r"== (Final|Initial) Plan ==", line)
+        if m:
+            sections.append((indent, m.group(1) == "Final"))
+            continue
+        if not all(final for _, final in sections) or "ReusedExchange" in line:
+            continue
         m = re.search(r"\bExchange (hashpartitioning\((.*?), \d+\)|\w+)", line)
         if m:
             shuffles.append(re.sub(r"#\d+L?", "", m.group(2) or m.group(1)))
-    return sorted(shuffles), sum("BroadcastExchange" in line for line in lines)
+        broadcasts += "BroadcastExchange" in line
+    return sorted(shuffles), broadcasts
 
 
-#: financial's shuffles: on company_id the pairs, the ownership edges
-#: and eikon (twice: the missing-company probe reads a pruned copy),
-#: then the layer rollup and its one-row gather. Its broadcasts: the
-#: firm table, the layers, and the joins AQE turns into broadcasts.
-FINANCIAL_SHUFFLES, FINANCIAL_BROADCASTS = 6, 5
+#: Each written table's exchanges in its final plan, on the staged
+#: inputs (``tests/test_run_workflow.staged_dirs``): its shuffles'
+#: partitionings and the most broadcasts it may plan. The
+#: scenario-side stages shuffle their rows once, on the stage's common
+#: key prefix (scenarios also aggregates the tiny sector lookup before
+#: broadcasting it); abcd once on company_id and once for the
+#: emission-factor mean window.
+#: financial shuffles the pairs and eikon on company_id, then the
+#: layer rollup and its one-row gather; its broadcasts are the
+#: medians, the ownership edges, the parent rows and the layers.
+#: trisk_v2's shuffles are the price dedup and the carbon mean; its
+#: broadcasts the common (scenario, geography) pairs and the three
+#: dimension tables.
+STAGE_EXCHANGES = {
+    "Scenarios_AnalysisInput": (
+        ["ald_sector", "scenario, scenario_geography, sector"], 1
+    ),
+    "prewrangled_capacity_factors": (
+        ["scenario, scenario_geography, ald_business_unit"], 0
+    ),
+    "price_data_long": (["scenario, sector, unit"], 0),
+    "ngfs_carbon_price": (
+        ["model, scenario, scenario_geography, variable, unit"], 0
+    ),
+    "abcd_stress_test_input": (
+        ["ald_sector, ald_business_unit", "company_id"], 0
+    ),
+    "prewrangled_financial_data_stress_test": (
+        [
+            "SinglePartition",
+            "ald_sector, region, spark_grouping_id",
+            "company_id",
+            "company_id",
+        ],
+        4,
+    ),
+    "assets_data": (["asset_id"], 1),
+    "scenarios_data": (
+        ["scenario, ald_sector, year, price", "scenario, scenario_geography, year"],
+        4,
+    ),
+}
 
 
 def test_abcd_and_financial_shuffle_once_and_leak_nothing(
     spark, staged_dirs, tmp_path, monkeypatch
 ):
-    """ROADMAP "Jobs are exchanges": ``abcd`` shuffles its rows once,
-    on company_id, and otherwise only its emission-factor mean, which
-    is broadcast back; ``financial`` stays within a fixed number of
-    exchanges. Neither stage leaves a cached relation or a persisted
-    RDD behind (compared before and after: the test session is
-    shared)."""
-    from trisk_datawrangle_spark.run_workflow import run_stage
+    """ROADMAP "Jobs are exchanges": every table a stage writes plans
+    exactly the exchanges of :data:`STAGE_EXCHANGES` — ``abcd``
+    shuffles its rows on company_id and once more for its
+    emission-factor mean, each scenario-side stage once on its common
+    key prefix — so a second pass over a stage's rows or an operator
+    that drops the partitioning shows as a new exchange. No stage
+    leaves a cached relation or a persisted RDD behind (compared
+    before and after: the test session is shared)."""
+    from trisk_datawrangle_spark.run_workflow import ALL_STAGES, run_stage
     from trisk_datawrangle_spark.sources import readers
 
     written = {}
     write = readers.write_output
 
     def keep(df, path, **kwargs):
-        written[path.rsplit("/", 1)[-1]] = df
+        written[path.rsplit("/", 1)[-1].removesuffix(".parquet")] = df
         return write(df, path, **kwargs)
 
     monkeypatch.setattr(readers, "write_output", keep)
@@ -433,18 +483,14 @@ def test_abcd_and_financial_shuffle_once_and_leak_nothing(
 
     cached, rdds = cache.numCachedEntries(), persisted()
     inp, _ = staged_dirs
-    for stage in ("abcd", "financial"):
+    for stage in ALL_STAGES:
         run_stage(spark, stage, inp, str(tmp_path), start_year=2022, time_horizon=3)
     assert cache.numCachedEntries() <= cached
     assert persisted() <= rdds, persisted() - rdds
 
-    abcd = _exchanges(written["abcd_stress_test_input.parquet"])
-    assert abcd == (["ald_sector, ald_business_unit", "company_id"], 1), abcd
-    shuffles, broadcasts = _exchanges(
-        written["prewrangled_financial_data_stress_test.parquet"]
-    )
-    assert len(shuffles) <= FINANCIAL_SHUFFLES, shuffles
-    assert set(shuffles) == {
-        "company_id", "ald_sector, region, spark_grouping_id", "SinglePartition"
-    }, shuffles
-    assert broadcasts <= FINANCIAL_BROADCASTS, broadcasts
+    assert written.keys() == STAGE_EXCHANGES.keys()
+    for table, df in written.items():
+        shuffles, broadcasts = _exchanges(df)
+        pinned, most = STAGE_EXCHANGES[table]
+        assert shuffles == pinned, (table, shuffles)
+        assert broadcasts <= most, (table, broadcasts)

@@ -2260,8 +2260,8 @@ LEFT JOIN fin f USING (company_id, ald_sector)
 def w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end assets workflow oracle (run_workflow.R:104-160
     composed with §3.1 + §3.2): deterministic nation-derived wide
-    activity/emission tables flow through prepare_abcd_data →
-    first_year_positive → prepare_financial_data (with ownership
+    activity/emission tables flow through prepare_abcd_data (with its
+    P9 first-year gate) → prepare_financial_data (with ownership
     inheritance for Eikon-missing companies) → assemble_assets_data,
     and the oracle replays the dataflow in SQL.
 
@@ -2271,10 +2271,7 @@ def w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolating percentile vs DuckDB MEDIAN); one out-of-range
     net-profit-margin exercises the F12 gate; the zero-production
     first year exercises the P9 gate after asset ids are assigned."""
-    from trisk_datawrangle_spark.plans.abcd import (
-        first_year_positive,
-        prepare_abcd_data,
-    )
+    from trisk_datawrangle_spark.plans.abcd import prepare_abcd_data
     from trisk_datawrangle_spark.plans.financial import (
         prepare_financial_data,
     )
@@ -2335,11 +2332,8 @@ def w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # what run_workflow does between stages (parquet write/read) and
     # collapses the analysis to shallow plans. The frame is
     # series-grain (tiny), so materializing it is free.
-    abcd = first_year_positive(
-        prepare_abcd_data(
-            wide(False), wide(True), start_year=2025, time_horizon=2
-        ),
-        ["company_id", "ald_business_unit", "ald_production_unit"],
+    abcd = prepare_abcd_data(
+        wide(False), wide(True), start_year=2025, time_horizon=2
     ).localCheckpoint()
 
     eikon = (

@@ -11,9 +11,11 @@ interpolation groups and orders by the x column. For climate-scenario
 shapes, groups are small (tens of rows) and numerous (millions at
 100 TB) — exactly the shape Spark's window operator handles well
 after one shuffle on the group keys. Later windows on the same keys
-reuse that partitioning; a join does not. ``complete_spine``'s join
-on the keys + year re-shuffles both sides (``operators/spine.py``),
-so an interpolate→index pipeline built on it shuffles more than once.
+reuse that partitioning; a join does not. ``complete_spine`` is an
+aggregate and an ``inline`` (``operators/spine.py``) and
+``lm_extrapolate`` a window, so a spine→interpolate→extend→index
+pipeline partitioned once on a prefix of its group keys shuffles
+once.
 """
 
 from __future__ import annotations
@@ -191,10 +193,14 @@ def lm_extrapolate(
 
     Spark-first: the per-group regression is a *closed form* over
     plain aggregates — slope = covar_pop/var_pop, intercept =
-    ȳ − slope·x̄ — i.e. one map-side-combinable groupBy, one join
-    back. No iteration, no UDF, no per-group collect. The reference's
-    R loop (price_data_long.R:728-733 iterates rows!) becomes two
-    shuffles total regardless of group count.
+    ȳ − slope·x̄ — taken as aggregates over an unordered window on the
+    groups, over the rows with a known ``y_col`` (and ``x_col`` in
+    [``fit_lo``, ``fit_hi``]). No join, so a plan partitioned on the
+    groups (or a subset) computes the fit without an exchange and
+    without a second pass over its input; the reference's R loop
+    (price_data_long.R:728-733 iterates rows!) becomes one window. A
+    group with a NULL key gets no prediction, as an equi-join of the
+    coefficients would give it none.
 
     ``exact_scale``: for fixed-point y (money with ``exact_scale``
     decimals) and integer x, compute the closed form from *integer*
@@ -205,11 +211,15 @@ def lm_extrapolate(
     """
     out = out_col or y_col
     groups = list(group_cols)
-    fit = df.filter(F.col(y_col).isNotNull())
+    fit = F.col(y_col).isNotNull()
     if fit_lo is not None:
-        fit = fit.filter(F.col(x_col) >= fit_lo)
+        fit = fit & (F.col(x_col) >= fit_lo)
     if fit_hi is not None:
-        fit = fit.filter(F.col(x_col) <= fit_hi)
+        fit = fit & (F.col(x_col) <= fit_hi)
+    keyed = F.lit(True)
+    for g in groups:
+        keyed = keyed & F.col(g).isNotNull()
+    w = Window.partitionBy(*groups)
     if exact_scale is not None:
         # Exact-rational prediction. With fixed-point y the closed
         # form pred = ((sy·B − A·sx) + A·n·x) / (B·n), A = n·sxy−sx·sy,
@@ -227,36 +237,29 @@ def lm_extrapolate(
         # round-trip to the identical resolved plan — the
         # _signatures_from_shingles lesson applied here.
         mult = 10 ** exact_scale
-        gq = [f"`{g}`" for g in groups]
+        over = "OVER (PARTITION BY " + ", ".join(f"`{g}`" for g in groups) + ")"
         dec = "decimal(38,0)"
-        coef = (
-            fit.selectExpr(
-                *gq,
-                f"cast(`{x_col}` as long) AS __xi",
-                f"cast(round(`{y_col}` * {mult}) as long) AS __yi",
-            )
-            .groupBy(*groups)
-            .agg(
-                F.expr("count(1) AS __n"),
-                F.expr("sum(__xi) AS __sx"),
-                F.expr("sum(__xi * __xi) AS __sxx"),
-                F.expr("sum(__yi) AS __sy"),
-                F.expr("sum(__xi * __yi) AS __sxy"),
-            )
-            .selectExpr(
-                "*",
-                f"cast(__n as {dec}) * cast(__sxy as {dec})"
-                f" - cast(__sx as {dec}) * cast(__sy as {dec}) AS __A",
-                f"cast(__n as {dec}) * cast(__sxx as {dec})"
-                f" - cast(__sx as {dec}) * cast(__sx as {dec}) AS __B",
-            )
-        )
-        joined = df.join(coef, groups, "left").selectExpr(
+        fitted = df.select(
             "*",
-            f"cast(__sy as {dec}) * __B - __A * cast(__sx as {dec})"
-            f" + __A * cast(__n as {dec}) * cast(`{x_col}` as {dec})"
+            F.when(fit, F.col(x_col).cast("long")).alias("__xi"),
+            F.when(fit, F.round(F.col(y_col) * mult).cast("long")).alias("__yi"),
+            F.when(fit, F.lit(1)).alias("__in"),
+        ).selectExpr(
+            "*",
+            f"cast(count(__in) {over} as {dec}) AS __n",
+            f"cast(sum(__xi) {over} as {dec}) AS __sx",
+            f"cast(sum(__xi * __xi) {over} as {dec}) AS __sxx",
+            f"cast(sum(__yi) {over} as {dec}) AS __sy",
+            f"cast(sum(__xi * __yi) {over} as {dec}) AS __sxy",
+        ).selectExpr(
+            "*",
+            "__n * __sxy - __sx * __sy AS __A",
+            "__n * __sxx - __sx * __sx AS __B",
+        ).selectExpr(
+            "*",
+            f"__sy * __B - __A * __sx + __A * __n * cast(`{x_col}` as {dec})"
             " AS __num",
-            f"__B * cast(__n as {dec}) AS __den",
+            "__B * __n AS __den",
         )
         scaled_units = F.expr(
             "CASE WHEN __den IS NULL OR __den = 0 THEN NULL "
@@ -264,26 +267,15 @@ def lm_extrapolate(
             "ELSE -((2 * (-__num) + __den) div (2 * __den)) END"
         )
         pred = scaled_units.cast("double") / F.lit(float(mult))
-        return (
-            joined.withColumn(out, F.coalesce(F.col(y_col), pred))
-            .drop("__n", "__sx", "__sxx", "__sy", "__sxy", "__A", "__B",
-                  "__num", "__den")
-        )
-    x = F.col(x_col).cast("double")
-    coef = fit.groupBy(*groups).agg(
-        (F.covar_pop(x, F.col(y_col)) / F.var_pop(x)).alias("__slope"),
-        F.avg(y_col).alias("__my"),
-        F.avg(x).alias("__mx"),
-    )
-    coef = coef.withColumn(
-        "__icept", F.col("__my") - F.col("__slope") * F.col("__mx")
-    ).drop("__my", "__mx")
-    pred = F.col("__icept") + F.col("__slope") * F.col(x_col).cast("double")
-    return (
-        df.join(coef, groups, "left")
-        .withColumn(out, F.coalesce(F.col(y_col), pred))
-        .drop("__slope", "__icept")
-    )
+        return fitted.withColumn(
+            out, F.coalesce(F.col(y_col), F.when(keyed, pred))
+        ).select(*df.columns, *([out] if out not in df.columns else []))
+    x = F.when(fit, F.col(x_col).cast("double"))
+    y = F.when(fit, F.col(y_col))
+    slope = F.covar_pop(x, y).over(w) / F.var_pop(x).over(w)
+    icept = F.avg(y).over(w) - slope * F.avg(x).over(w)
+    pred = icept + slope * F.col(x_col).cast("double")
+    return df.withColumn(out, F.coalesce(F.col(y_col), F.when(keyed, pred)))
 
 
 def fit_window_extension(

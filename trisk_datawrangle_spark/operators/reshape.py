@@ -1,9 +1,10 @@
 """Reshape operators: pivot / unpivot / split (SURVEY.md §2.6).
 
 Scale notes: ``melt`` uses Spark's native ``unpivot`` (a projection —
-no shuffle); ``pivot_wider`` always takes an explicit ``values`` list
-when known, because an unpinned pivot runs an extra distinct job and
-(at 100 TB) an unbounded column fan-out.
+no shuffle); ``melt_year_columns`` an ``inline``, which also keeps
+the input's partitioning; ``pivot_wider`` always takes an explicit
+``values`` list when known, because an unpinned pivot runs an extra
+distinct job and (at 100 TB) an unbounded column fan-out.
 """
 
 from __future__ import annotations
@@ -34,19 +35,28 @@ def melt_year_columns(
     value_name: str = "value",
 ) -> DataFrame:
     """Melt wide year columns ("2018", "Equity Ownership 2023", …) to
-    long ``(year:int, value)`` (R1, prepare_abcd_stress_test_input.R:22-32
-    — year extracted from the column name via regex :29)."""
+    long ``(value, year:int)`` (R1, prepare_abcd_stress_test_input.R:22-32
+    — year extracted from the column name via regex :29).
+
+    The year columns are packed into one array of (value, year)
+    structs and ``inline``d: a ``Generate`` keeps the input's
+    partitioning, where ``unpivot``'s ``Expand`` drops it and makes the
+    next aggregate shuffle again. The array takes the columns' common
+    type, as ``unpivot`` does."""
     rx = re.compile(pattern)
-    value_cols = [c for c in df.columns if rx.search(c)]
+    value_cols = [(c, m.group(1)) for c in df.columns if (m := rx.search(c))]
     if not value_cols:
         raise ValueError(f"no columns match {pattern!r}")
-    long = df.unpivot(list(id_cols), value_cols, "__name", value_name)
-    # extract with the SAME pattern that selected the columns — a
-    # caller pattern like r"FY(\d{2})" would otherwise select columns
-    # the hardcoded 4-digit extractor cannot parse (year=NULL rows)
-    return long.withColumn(
-        year_name, F.regexp_extract("__name", pattern, 1).cast("int")
-    ).drop("__name")
+    # the year is group 1 of the SAME pattern that selected the column,
+    # cast as a string: a caller pattern like r"FY(\d{2})" works too
+    years = F.array(*[
+        F.struct(
+            F.col(f"`{c}`").alias(value_name),
+            F.lit(y).cast("int").alias(year_name),
+        )
+        for c, y in value_cols
+    ])
+    return df.select(*id_cols, F.inline(years))
 
 
 def pivot_wider(

@@ -7,7 +7,7 @@ never positional — so the engine only exposes
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
+from collections.abc import Mapping
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -24,24 +24,30 @@ def union_by_name(*dfs: DataFrame) -> DataFrame:
 
 
 def clone_recode(
-    df: DataFrame,
-    predicate: Column,
-    mapping: Mapping[str, object] | Callable[[DataFrame], DataFrame],
+    df: DataFrame, predicate: Column, mapping: Mapping[str, object]
 ) -> DataFrame:
-    """The clone-with-recode idiom (U2): filter a slice, relabel its
-    key columns, union it back — e.g. SDS→NZE scenario cloning
+    """The clone-with-recode idiom (U2): every row, plus a copy of the
+    rows where ``predicate`` holds with ``mapping``'s columns set to
+    new values (literals or Columns) — e.g. SDS→NZE scenario cloning
     (prepare_scenario_data.R:911-915), GasCap→OilCap capacity cloning
     (prepare_prewrangled_capacity_factors.R:225-237).
 
-    ``mapping``: either ``{col: new_literal}`` or a function
-    DataFrame→DataFrame for arbitrary relabeling.
-    """
-    clone = df.filter(predicate)
-    if callable(mapping):
-        clone = mapping(clone)
-    else:
-        for col, new in mapping.items():
-            clone = clone.withColumn(
-                col, new if isinstance(new, Column) else F.lit(new)
-            )
-    return df.unionByName(clone)
+    One pass: each row ``explode``s into itself and, where the
+    predicate holds, its recoded copy — the reference's filter + union
+    would run ``df`` twice."""
+    unknown = set(mapping) - set(df.columns)
+    if unknown:
+        raise ValueError(f"clone_recode: no columns {sorted(unknown)}")
+    copies = F.when(predicate, F.array(F.lit(False), F.lit(True))).otherwise(
+        F.array(F.lit(False))
+    )
+    clone = F.col("__clone")
+
+    def recoded(c: str) -> Column:
+        new = mapping[c]
+        new = new if isinstance(new, Column) else F.lit(new)
+        return F.when(clone, new).otherwise(F.col(f"`{c}`")).alias(c)
+
+    return df.select("*", F.explode(copies).alias("__clone")).select(*[
+        recoded(c) if c in mapping else F.col(f"`{c}`") for c in df.columns
+    ])

@@ -3,19 +3,21 @@
 The reference builds yearly spines with
 ``tidyr::complete(year = full_seq(year, 1), nesting(keys...))``
 (prepare_scenario_data.R:14; prepare_prewrangled_capacity_factors.R:113-120;
-prepare_ngfs_carbon_price.R:102-110). Spark-first formulation: the
-spine is ``distinct keys × explode(sequence(lo, hi))`` — generated
-*distributed*, never on the driver. New spine rows carry NULL values,
-feeding the interpolation operators.
+prepare_ngfs_carbon_price.R:102-110). Spark-first formulation: each
+group's grid is ``sequence(lo, hi)`` — generated *distributed*, never
+on the driver. New spine rows carry NULL values, feeding the
+interpolation operators.
 
-Scale notes: the distinct-keys aggregation is a map-side-combinable
-shuffle on the group keys, and the left join back is on the keys + x.
-That join shuffles both sides again: with
+Scale notes: one ``groupBy`` on the group keys gathers each group's
+rows (``collect_list`` of structs) and its x bounds; one ``inline``
+then emits the rows that lie on the grid plus an all-NULL row for
+every grid point the group lacks. No join: with
 ``spark.sql.requireAllClusterKeysForCoPartition`` (on by default) a
-join needs its children partitioned on all of its keys. A plan
-already partitioned on a key subset builds its spine without a join
-instead (``plans/abcd.py``). The explode fans out rows *after* the
-distinct (cheap), not before.
+join on the keys + x would shuffle both sides again, while the
+aggregate is satisfied by any partitioning on a subset of the group
+keys, so a plan already partitioned on a key prefix completes its
+spine without an exchange, and the ``inline`` keeps that
+partitioning for the windows after it.
 """
 
 from __future__ import annotations
@@ -49,46 +51,61 @@ def complete_spine(
         a one-row aggregate broadcast back (lazy — no driver
         collect, no empty-input crash).
 
-    Missing combinations appear with NULL in all non-key columns.
+    Missing combinations appear with NULL in all non-key columns. The
+    result is the left join of the spine onto ``df`` on the keys +
+    ``x_col``: duplicate (key, x) rows all survive, rows with a NULL
+    or off-grid x drop out, and a group with a NULL key keeps only its
+    (all-NULL) spine rows. Columns: the keys, ``x_col``, then the
+    others in ``df`` order.
     """
     group_cols = list(group_cols)
-    if bounds == "group":
-        keys = df.groupBy(*group_cols).agg(
-            F.min(x_col).alias("__lo"), F.max(x_col).alias("__hi")
-        )
-    elif bounds == "global":
-        agg = df.agg(F.min(x_col).alias("__lo"), F.max(x_col).alias("__hi"))
-        keys = df.select(*group_cols).distinct().crossJoin(F.broadcast(agg))
-    elif bounds == "fixed":
-        if lo is None and hi is None:
-            raise ValueError("bounds='fixed' requires lo and/or hi")
-        keys = df.select(*group_cols).distinct()
-        if lo is None or hi is None:
-            agg = df.agg(
-                F.min(x_col).alias("__dlo"), F.max(x_col).alias("__dhi")
-            )
-            keys = (
-                keys.crossJoin(F.broadcast(agg))
-                .withColumn(
-                    "__lo", F.lit(lo) if lo is not None else F.col("__dlo")
-                )
-                .withColumn(
-                    "__hi", F.lit(hi) if hi is not None else F.col("__dhi")
-                )
-                .drop("__dlo", "__dhi")
-            )
-        else:
-            keys = keys.withColumn("__lo", F.lit(lo)).withColumn(
-                "__hi", F.lit(hi)
-            )
-    else:
-        raise ValueError(f"unknown bounds mode {bounds!r}")
-
-    spine = keys.select(
-        *group_cols,
-        F.explode(F.sequence(F.col("__lo"), F.col("__hi"), F.lit(step))).alias(x_col),
+    rest = [c for c in df.columns if c not in group_cols and c != x_col]
+    gathered = df.groupBy(*group_cols).agg(
+        F.collect_list(
+            F.struct(*[F.col(f"`{c}`") for c in [x_col, *rest]])
+        ).alias("__rows"),
+        F.min(x_col).alias("__lo"),
+        F.max(x_col).alias("__hi"),
     )
-    return spine.join(df, group_cols + [x_col], "left")
+    if bounds == "fixed" and lo is None and hi is None:
+        raise ValueError("bounds='fixed' requires lo and/or hi")
+    if bounds not in ("group", "global", "fixed"):
+        raise ValueError(f"unknown bounds mode {bounds!r}")
+    lo_c, hi_c = F.col("__lo"), F.col("__hi")
+    if bounds != "group":
+        if bounds == "global" or lo is None or hi is None:
+            # the data-wide bound: a one-row aggregate broadcast back
+            # (lazy: no driver collect, no empty-input crash)
+            agg = df.agg(F.min(x_col).alias("__dlo"), F.max(x_col).alias("__dhi"))
+            gathered = gathered.crossJoin(F.broadcast(agg))
+            lo_c, hi_c = F.col("__dlo"), F.col("__dhi")
+        if bounds == "fixed":
+            lo_c = F.lit(lo) if lo is not None else lo_c
+            hi_c = F.lit(hi) if hi is not None else hi_c
+
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    x_type = fields[x_col].simpleString()
+    keyed = F.lit(True)
+    for c in group_cols:
+        keyed = keyed & F.col(c).isNotNull()
+    # a row lies on the grid when sequence(lo, hi, step) holds its x
+    on_grid = F.filter(
+        "__rows",
+        lambda r: keyed
+        & r[x_col].between(F.least(lo_c, hi_c), F.greatest(lo_c, hi_c))
+        & ((r[x_col] - lo_c) % step == 0),
+    )
+    missing = F.transform(
+        F.array_except(
+            F.sequence(lo_c, hi_c, F.lit(step)).cast(f"array<{x_type}>"),
+            F.transform(on_grid, lambda r: r[x_col]),
+        ),
+        lambda x: F.struct(
+            x.alias(x_col),
+            *[F.lit(None).cast(fields[c]).alias(c) for c in rest],
+        ),
+    )
+    return gathered.select(*group_cols, F.inline(F.concat(on_grid, missing)))
 
 
 def complete_cross(

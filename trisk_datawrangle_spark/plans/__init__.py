@@ -3,7 +3,6 @@ from trisk_datawrangle_spark.plans.pipelines import (  # noqa: F401
     yearly_revenue_series,
 )
 from trisk_datawrangle_spark.plans.abcd import (  # noqa: F401
-    first_year_positive,
     prepare_abcd_data,
     prepare_asset_impact_data,
 )

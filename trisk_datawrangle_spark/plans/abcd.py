@@ -8,7 +8,8 @@ activity/emission tables. Output: the canonical long
 (company, sector, business_unit, year) production + emission-factor
 table (outputs_structure.dbml:24-37).
 
-Plan: one shuffle, on ``company_id``. Both wide inputs go through one
+Plan: the rows shuffle on ``company_id``, and once more for the
+emission-factor mean. Both wide inputs go through one
 ingest (owner filter, recodes, year columns packed into one array),
 are unioned with a side tag and repartitioned on ``company_id`` while
 still one row per wide row. Every later step is an aggregate or a
@@ -22,14 +23,16 @@ exchanges again:
 - the location rollup is a ``groupBy``;
 - the fixed year spine is a per-series ``map(year → values)`` looked
   up over ``explode(sequence(lo, hi))``;
-- interpolation, LOCF, the dead-series test and the asset ids are
-  windows within a company.
+- interpolation, LOCF, the dead-series test, the asset ids and the
+  first-year gate's value are windows within a company.
 
 No step is a join on the series keys: with
 ``spark.sql.requireAllClusterKeysForCoPartition`` a join on
 (company_id, x) re-shuffles both sides. Only the per-(sector,
 business unit) emission-factor mean needs other companies' rows; it is
-a tiny aggregate broadcast back. Nothing is cached.
+a window over (sector, business unit), the plan's second shuffle, and
+the dead-series and first-year filters come after it. So no step runs
+twice, and nothing is cached or broadcast.
 
 Every sum is exact: ``sum(cast(x AS DECIMAL(38,18)))``, cast back to
 double once, so the outputs do not depend on the order rows arrive in
@@ -76,6 +79,10 @@ SECTOR_RECODE: Mapping[str, str] = {
 DEFAULT_SECTORS: Sequence[str] = ("Power", "Oil&Gas", "Coal", "Automotive", "Steel")
 
 KEYS = ["company_id", "company_name", "ald_sector", "ald_business_unit"]
+
+#: the groups of the P9 first-year gate
+#: (run_prepare_abcd_stress_test_input.R:107-111)
+FIRST_YEAR_KEYS = ["company_id", "ald_business_unit", "ald_production_unit"]
 
 
 #: a year column's name holds its year (melt_year_columns' pattern)
@@ -228,7 +235,10 @@ def prepare_abcd_data(
     year-spine completion → interpolate + LOCF + zero-fill →
     emission factors (with per-(sector, unit) mean imputation) →
     drop dead series → asset ids
-    (R/prepare_abcd_stress_test_input.R:339-426). The module
+    (R/prepare_abcd_stress_test_input.R:339-426) → keep the series
+    whose first-year production is positive over
+    :data:`FIRST_YEAR_KEYS` (P9, the reference driver's gate,
+    run_prepare_abcd_stress_test_input.R:107-111). The module
     docstring gives the plan.
 
     Rows that cannot reach the output are dropped at ingest: years
@@ -252,9 +262,7 @@ def prepare_abcd_data(
         _ingest(activities_wide, years).withColumn("__emis", F.lit(False))
         .unionByName(emissions.withColumn("__emis", F.lit(True)))
         .filter(F.col("ald_sector").isin(*sectors))
-        # IS NOT NULL, not dropna: the EF-mean join infers it on its
-        # keys, and with the same filter on both reads of `rows` the
-        # EF branch reuses the main branch's shuffle
+        # a NULL key or location matches nothing downstream
         .filter(" AND ".join(
             f"{c} IS NOT NULL" for c in KEYS + ["ald_location", "activity_unit"]
         ))
@@ -341,9 +349,7 @@ def prepare_abcd_data(
         dense = dense.withColumn(col, F.coalesce(F.col(col), F.lit(0.0)))
 
     # emission factor = emissions / production; 0-production rows get
-    # NULL (R Inf/NaN re-expressed, SURVEY.md §7.3.3), then missing
-    # factors are mean-imputed per (sector, business_unit)
-    # (:130-169) via a tiny broadcast lookup.
+    # NULL (R Inf/NaN re-expressed, SURVEY.md §7.3.3)
     with_ef = dense.withColumn(
         "plan_emission_factor", safe_div("plan_emissions", "plan_tech_prod")
     ).withColumn(
@@ -352,56 +358,44 @@ def prepare_abcd_data(
             "/", F.coalesce("emissions_unit", F.lit("tCO2")), "ald_production_unit"
         ),
     )
-    avg_ef = with_ef.groupBy("ald_sector", "ald_business_unit").agg(
-        (
-            _exact_sum("plan_emission_factor") / F.count("plan_emission_factor")
-        ).alias("__avg_ef")
-    )
-    with_ef = (
-        with_ef.join(F.broadcast(avg_ef), ["ald_sector", "ald_business_unit"], "left")
-        .withColumn(
-            "plan_emission_factor",
-            F.coalesce("plan_emission_factor", "__avg_ef"),
-        )
-    )
 
-    # drop series whose production never exceeds zero (A9 + J4,
-    # :216-237), then number the assets (W4, :309-320): one id per
-    # series, not per year-row, within company over the pinned
-    # natural-key order (SURVEY.md §7.3.2)
-    total = _exact_sum("plan_tech_prod", Window.partitionBy(*series_keys))
-    rank = F.dense_rank().over(
-        Window.partitionBy("company_id").orderBy(*series_keys[1:])
+    # within a company: mark the series whose production never
+    # exceeds zero (A9 + J4, :216-237), number the live ones (W4,
+    # :309-320: one id per series over the pinned natural-key order,
+    # SURVEY.md §7.3.2) and take their first-year production (P9)
+    alive = _exact_sum("plan_tech_prod", Window.partitionBy(*series_keys)) > 0
+    first_year = (
+        Window.partitionBy(*FIRST_YEAR_KEYS, "__alive")
+        .orderBy("year")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    alive = with_ef.withColumn("__total", total).filter(F.col("__total") > 0)
-    return alive.select(
+    marked = with_ef.withColumn("__alive", alive).select(
+        "*",
+        F.dense_rank()
+        .over(Window.partitionBy("company_id", "__alive").orderBy(*series_keys[1:]))
+        .alias("__rank"),
+        F.first("plan_tech_prod").over(first_year).alias("__first"),
+    )
+    # missing factors are mean-imputed per (sector, business_unit)
+    # over every series (:130-169); the gates filter after it
+    by_unit = Window.partitionBy("ald_sector", "ald_business_unit")
+    mean_ef = _exact_sum("plan_emission_factor", by_unit) / F.count(
+        "plan_emission_factor"
+    ).over(by_unit)
+    imputed = marked.withColumn(
+        "plan_emission_factor", F.coalesce("plan_emission_factor", mean_ef)
+    )
+    return imputed.filter(F.col("__alive") & (F.col("__first") > 0)).select(
         "company_id",
         "company_name",
         "ald_sector",
         "ald_business_unit",
         "country_iso2",
-        F.concat_ws("_", "company_id", rank).alias("asset_id"),
+        F.concat_ws("_", "company_id", "__rank").alias("asset_id"),
         F.lit("Global").alias("scenario_geography"),
         "year",
         "ald_production_unit",
         "emissions_factor_unit",
         "plan_tech_prod",
         "plan_emission_factor",
-    )
-
-
-def first_year_positive(df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    """Post-hoc gate: keep groups whose first-year production is
-    positive (P9, run_prepare_abcd_stress_test_input.R:107-111)."""
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("year")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return (
-        df.withColumn("__first", F.first("plan_tech_prod").over(w))
-        .filter(F.col("__first") > 0)
-        .drop("__first")
     )

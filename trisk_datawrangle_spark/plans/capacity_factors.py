@@ -8,8 +8,12 @@ capacity_factor = generation / capacity with explicit zero/NaN
 policy (F14, SURVEY.md §7.3.3) → dense spine + interior interpolation
 (T1+W8) → technology clone-recodes (U2) → bounds assert (Q4).
 
-Scale: the pivot is pinned to the two known indicator values (no
-distinct job); everything shuffles once on the series keys.
+Scale: the rows shuffle once, on the series keys, while still one
+row per wide row. The year aggregation, the pivot and the spine are
+``groupBy``s and the interpolation a window, all keyed by a superset
+of the series keys; the melt and the clone are ``Generate``s, which
+keep that partitioning; so nothing exchanges again. The pivot is
+pinned to the two known indicator values (no distinct job).
 """
 
 from __future__ import annotations
@@ -63,7 +67,7 @@ def prepare_capacity_factors(
         recode(F.col(id_cols[2]), TECH_RECODE).alias("ald_business_unit"),
         F.col(indicator_col).alias("indicator"),
         *[c for c in raw.columns if c.isdigit()],
-    )
+    ).repartition(*SERIES_KEYS)
     # A6: aggregate duplicate keys across every wide year column in
     # one grouped pass, then melt once (projection, no shuffle)
     year_cols = [c for c in renamed.columns if c.isdigit()]

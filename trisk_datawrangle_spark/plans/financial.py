@@ -10,10 +10,11 @@ indicators plus ``*_rawdata_ratio`` provenance columns
 (README.md:179-186).
 
 Plan: each input is shuffled once, on ``company_id`` (the ownership
-edges on their subsidiary id; eikon twice, as the missing-company
-probe reads a pruned copy), and nothing is shuffled on it again: the
-medians, the parent match and the final per-(company, sector) rollup
-are keyed by a superset of ``company_id``. Two steps need other
+edges on their subsidiary id), and nothing is shuffled on it again:
+the medians, the parent match and the final per-(company, sector)
+rollup are keyed by a superset of ``company_id``. The firm rows and
+the companies eikon lacks come out of one left join of the pairs
+onto the medians, so eikon is read once. Two steps need other
 companies' rows, and both are broadcast: the company-grain firm
 table, for the parent lookup, and the three imputation layers, one
 ``rollup`` aggregate gathered into a one-row map whose keys
@@ -48,7 +49,9 @@ def company_indicator_medians(
     multi-sector companies contribute to every sector's pool). A
     company's rows are the same in each of its sectors, so the
     medians are taken per (company, region) and the sectors joined
-    on after, both keyed by ``company_id``.
+    on after, both keyed by ``company_id``. Every pair of
+    ``companies`` is kept: ``__pooled`` is true on the rows eikon has
+    medians for, and NULL on one row of NULLs for a pair it lacks.
     Implausible net profit margins are nulled before aggregation
     (:464-474, F12 ``between`` gate).
     """
@@ -63,9 +66,12 @@ def company_indicator_medians(
     medians = gated.groupBy("company_id", "region").agg(
         *[median(i).alias(i) for i in indicators]
     )
-    return medians.join(
-        companies.select("company_id", "ald_sector").distinct(), "company_id"
-    ).select("company_id", "ald_sector", "region", *indicators)
+    return (
+        companies.select("company_id", "ald_sector")
+        .distinct()
+        .join(medians.withColumn("__pooled", F.lit(True)), "company_id", "left")
+        .select("company_id", "ald_sector", "region", *indicators, "__pooled")
+    )
 
 
 def layered_averages(
@@ -186,10 +192,12 @@ def prepare_financial_data(
     )
     firm = company_indicator_medians(eikon, pairs, npm_range, indicators)
 
-    # production companies with no financial record → closest parent
-    missing = pairs.join(firm.select("company_id"), "company_id", "left_anti")
+    # production companies with no financial record (J4, :227-232)
+    # → closest parent (J9). Every firm row takes the tree join: a
+    # read of the missing pairs alone would prune eikon to company_id
+    # and scan and shuffle it again.
     parents = closest_parent(
-        missing,
+        firm,
         ownership_tree.select(
             F.col("subsidiary_company_id"),
             F.col("parent_company_id"),
@@ -198,30 +206,41 @@ def prepare_financial_data(
         child_key="company_id",
         edge_child_key="subsidiary_company_id",
         tie_cols=["parent_company_id"],
-        # one keep-one window PER (company, sector) pair — keyed by
-        # company alone, a multi-sector company kept an arbitrary
-        # single sector and the others vanished from the output
-        group_cols=["company_id", "ald_sector"],
+        # one keep-one window PER firm row — keyed by company alone, a
+        # multi-sector company kept an arbitrary single sector and the
+        # others vanished from the output
+        group_cols=["company_id", "ald_sector", "region"],
     )
-    # a missing pair takes its parent's firm rows of the same sector;
-    # with none it keeps one row of NULL indicators, outside the
-    # pool, which the cascade averages fill with provenance 0 (the
-    # reference reaches the same rows through its bind_cols
-    # fallback, :319-322)
-    inherited = parents.join(
-        F.broadcast(
-            firm.select(
-                F.col("company_id").alias("parent_company_id"),
-                "ald_sector",
-                "region",
-                *indicators,
-                F.lit(True).alias("__pooled"),
-            )
-        ),
-        ["parent_company_id", "ald_sector"],
+    # a missing pair takes its parent's pooled firm rows of the same
+    # sector; with none it keeps its one row of NULL indicators,
+    # outside the pool, which the cascade averages fill with
+    # provenance 0 (the reference reaches the same rows through its
+    # bind_cols fallback, :319-322). Both reads of the parent rows
+    # take the parent's pool flag, so they share one broadcast.
+    values = ["region", *indicators]
+    own, parent = F.col("__pooled"), F.col("__parent___pooled")
+    parent_rows = F.broadcast(
+        firm.select(
+            F.col("company_id").alias("__parent"),
+            F.col("ald_sector").alias("__parent_sector"),
+            *[F.col(c).alias(f"__parent_{c}") for c in [*values, "__pooled"]],
+        )
+    )
+    rows = parents.join(
+        parent_rows,
+        own.isNull()
+        & (F.col("parent_company_id") == F.col("__parent"))
+        & (F.col("ald_sector") == F.col("__parent_sector")),
         "left",
-    ).select("company_id", "ald_sector", "region", *indicators, "__pooled")
-    rows = firm.withColumn("__pooled", F.lit(True)).unionByName(inherited)
+    ).select(
+        "company_id",
+        "ald_sector",
+        *[
+            F.when(own, F.col(c)).when(parent, F.col(f"__parent_{c}")).alias(c)
+            for c in values
+        ],
+        F.coalesce(own, parent).alias("__pooled"),
+    )
 
     layers = layered_averages(
         rows.filter(F.col("__pooled")), min_sample_size, indicators

@@ -16,9 +16,10 @@ carbon:  melt 5-year steps → per-group dense spine → interior
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.functions.scalars import UNIT, recode
@@ -28,10 +29,13 @@ from trisk_datawrangle_spark.operators.interpolate import (
     na_approx,
 )
 from trisk_datawrangle_spark.operators.reshape import melt_year_columns
-from trisk_datawrangle_spark.operators.setops import union_by_name
+from trisk_datawrangle_spark.operators.setops import clone_recode, union_by_name
 from trisk_datawrangle_spark.operators.spine import complete_spine
 
 PRICE_KEYS = ["scenario", "scenario_geography", "sector", "unit"]
+
+#: the year in a wide year column's name (melt_year_columns' default)
+_YEAR = re.compile(r"(\d{4})")
 
 
 def melt_price_table(raw: DataFrame, id_cols: Sequence[str]) -> DataFrame:
@@ -92,18 +96,21 @@ def add_global_mean_rows(
 ) -> DataFrame:
     """A3+U1 (R/prepare_price_data_long.R:78-92): the 'Global'
     geography is the mean over regional rows per (scenario, sector,
-    unit[, technology], year), appended to the regional data. One
-    extra aggregate over the same shuffle keys minus geography."""
+    unit[, technology], year), appended to the regional data; its
+    other columns are NULL. One pass: the mean is a window over the
+    group, and the group's first row is cloned into the Global row
+    (U2), so the input is not read a second time for a union."""
     group = ["scenario", "sector", "unit", *extra_keys, "year"]
-    global_rows = (
+    w = Window.partitionBy(*group)
+    # the mean first, in the order rows arrive, as a grouped avg sums
+    regional = (
         df.filter(F.col("scenario_geography") != "Global")
-        .groupBy(*group)
-        .agg(F.avg("price").alias("price"))
-        .withColumn("scenario_geography", F.lit("Global"))
+        .withColumn("__mean", F.avg("price").over(w))
+        .withColumn("__n", F.row_number().over(w.orderBy("scenario_geography")))
     )
-    return union_by_name(
-        df.filter(F.col("scenario_geography") != "Global"), global_rows
-    )
+    global_row = {c: F.lit(None) for c in df.columns if c not in group}
+    global_row.update(scenario_geography="Global", price=F.col("__mean"))
+    return clone_recode(regional, F.col("__n") == 1, global_row).select(*df.columns)
 
 
 def prepare_price_data_long(
@@ -119,9 +126,11 @@ def prepare_price_data_long(
 ) -> DataFrame:
     """Full price chain. ``horizon_end`` past the data triggers the
     T4/W9 extension: dense spine to the horizon, interior
-    interpolation, LOCF for flat gaps, then per-group OLS for the
-    far extension (R/prepare_price_data_long.R:661-733 — the
-    reference's per-row loop becomes two aggregate shuffles)."""
+    interpolation, per-group OLS for the far extension, then LOCF for
+    what is left (R/prepare_price_data_long.R:661-733 — the
+    reference's per-row loop becomes one window). The rows shuffle
+    once, on (scenario, sector, unit), after the melt and the unit
+    conversions; nothing after that exchanges again."""
     long = melt_price_table(raw, id_cols)
     if first_year is not None:
         long = long.filter(F.col("year") >= first_year)  # P3 :33
@@ -133,14 +142,23 @@ def prepare_price_data_long(
     tech_keys = ["technology"] if "technology" in long.columns else []
     if tech_keys:
         long = convert_mwh_units(long)
+    # the stage's one shuffle: the global mean, the spine, the
+    # interpolation, the fit and the fill are all keyed by a superset
+    long = long.repartition("scenario", "sector", "unit")
     long = add_global_mean_rows(long, extra_keys=tech_keys)
     keys = [c for c in PRICE_KEYS if c in long.columns] + tech_keys
     if horizon_end is not None:
-        # lo comes from the data lazily (half-specified fixed bounds);
-        # an eager min-year collect here replayed the whole upstream
-        # chain as an extra job and crashed on empty input
+        # every raw row melts to one row per year column, so the data's
+        # first year is the first year column kept: known without a job
+        years = [
+            int(m.group(1)) for c in raw.columns if (m := _YEAR.search(c))
+        ]
+        lo = min(
+            (y for y in years if first_year is None or y >= first_year),
+            default=None,
+        )
         dense = complete_spine(
-            long, keys, "year", bounds="fixed", hi=horizon_end
+            long, keys, "year", bounds="fixed", lo=lo, hi=horizon_end
         )
     else:
         dense = complete_spine(long, keys, "year", bounds="group")
@@ -238,8 +256,6 @@ def prepare_lcoe_adjusted_prices(
     lcoe = data.filter(
         (F.col("sector") == "Power") & (F.col("indicator") == "LCOE")
     )
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy(*keys)
         .orderBy("year")

@@ -13,17 +13,24 @@ tagging.
 Everything is one lazy DAG per source; the per-source frames are
 unioned by name (U1) so Catalyst sees the whole pipeline (the
 reference materializes CSV between every stage).
+
+Plan: each source is shuffled once, on (scenario, scenario_geography,
+sector). Every later step is keyed by a superset of those columns, so
+none of them exchanges again: the year spine is a ``groupBy`` and an
+``inline`` (``operators/spine.py``), the interpolation, market shares,
+cross-source dedup and sector-completeness test are windows. Only the
+lookup's required technologies per sector, a tiny aggregate, are
+broadcast onto the rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.operators.interpolate import interpolate_yearly
-from trisk_datawrangle_spark.operators.quality import incomplete_groups
 
 #: Interpolation groups (run_prepare_Scenarios_AnalysisInput.R:18-27).
 INTERPOLATION_GROUPS = (
@@ -35,6 +42,10 @@ INTERPOLATION_GROUPS = (
     "indicator",
     "units",
 )
+
+#: The stage's one shuffle: every later aggregate and window is keyed
+#: by a superset of these (``sector`` is renamed ``ald_sector``).
+PARTITION_KEYS = ("scenario", "scenario_geography", "sector")
 
 #: Green (build-out) technologies: their fair share scales by the
 #: sector market-share percentage; declining techs by their own
@@ -102,17 +113,25 @@ def remove_incomplete_sectors(
     """Q8 (R/helpers.R:110-154): within each (scenario, geography),
     drop sectors missing any technology required by the lookup
     (ald_sector → ald_business_unit). The reference loops per
-    (scenario, geography) with split+map_dfr; here it is one
-    broadcast-join + anti-join over all groups at once."""
-    bad = incomplete_groups(
-        df,
-        ["scenario", "scenario_geography", "ald_sector"],
-        sector_tech_lookup,
-        lookup_group_col="ald_sector",
-        lookup_member_col="ald_business_unit",
+    (scenario, geography) with split+map_dfr; here each sector's
+    required set is broadcast onto its rows and compared with the
+    set a window collects over the (scenario, geography, sector)
+    group. A group with a NULL key is kept: key equality never
+    singles it out, as in an anti-join on the group keys."""
+    required = sector_tech_lookup.groupBy("ald_sector").agg(
+        F.collect_set("ald_business_unit").alias("__required")
     )
-    return df.join(
-        bad, ["scenario", "scenario_geography", "ald_sector"], "left_anti"
+    group = ["scenario", "scenario_geography", "ald_sector"]
+    present = F.collect_set("ald_business_unit").over(Window.partitionBy(*group))
+    complete = F.size(F.array_except("__required", present)) == 0
+    keep = F.col("__required").isNull() | complete
+    for c in group:
+        keep = keep | F.col(c).isNull()
+    return (
+        df.join(F.broadcast(required), "ald_sector", "left")
+        .withColumn("__keep", keep)
+        .filter(F.col("__keep"))
+        .select(*df.columns)
     )
 
 
@@ -149,7 +168,10 @@ def prepare_scenarios_analysis_input(
     prepared = []
     for rank, (_, raw) in enumerate(sources.items()):
         interp = interpolate_yearly(
-            raw, list(INTERPOLATION_GROUPS), "year", "value"
+            raw.repartition(*PARTITION_KEYS),
+            list(INTERPOLATION_GROUPS),
+            "year",
+            "value",
         )
         interp = interp.filter(F.col("year") >= start_year)
         shares = add_market_share_columns(interp)
@@ -165,8 +187,6 @@ def prepare_scenarios_analysis_input(
     # same series-year, the EARLIER entry in `sources` wins (plain
     # dropDuplicates would keep whichever row a partitioning
     # encountered first — fair_share_perc silently varied run-to-run)
-    from pyspark.sql import Window
-
     dedup_keys = [
         "scenario",
         "scenario_geography",

@@ -23,6 +23,8 @@ fact-sized shuffle is the financial join on company_id.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,20 +33,28 @@ def align_to_common_scenarios(
     scenarios: DataFrame, prices: DataFrame, capacity_factors: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Consistency pruning (J2/J4, run_workflow.R:36-75): keep only
-    (scenario, scenario_geography) pairs present in every table."""
+    (scenario, scenario_geography) pairs present in every table. The
+    pairs are found once: the three tables' pairs, each tagged with
+    its table's bit, are unioned and grouped, and a pair whose bits
+    add up to all three is common. The tables are small dimensions
+    that are broadcast whole later on, so the grouping runs in one
+    task, without a shuffle; its few dozen rows are broadcast to the
+    three semi-joins."""
     key = ["scenario", "scenario_geography"]
+    tables = (scenarios, prices, capacity_factors)
+    tagged = reduce(
+        DataFrame.unionByName,
+        [t.select(*key, F.lit(1 << i).alias("__in")) for i, t in enumerate(tables)],
+    )
     common = (
-        scenarios.select(*key)
-        .distinct()
-        .join(prices.select(*key).distinct(), key, "inner")
-        .join(capacity_factors.select(*key).distinct(), key, "inner")
+        tagged.coalesce(1)
+        .groupBy(*key)
+        .agg(F.bit_or("__in").alias("__in"))
+        .filter(F.col("__in") == (1 << len(tables)) - 1)
+        .select(*key)
     )
     b = F.broadcast(common)
-    return (
-        scenarios.join(b, key, "left_semi"),
-        prices.join(b, key, "left_semi"),
-        capacity_factors.join(b, key, "left_semi"),
-    )
+    return tuple(t.join(b, key, "left_semi") for t in tables)
 
 
 def assemble_assets_data(abcd: DataFrame, financial: DataFrame) -> DataFrame:

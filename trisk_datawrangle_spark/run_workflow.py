@@ -108,8 +108,7 @@ def _abcd(activities, emissions, start_year, time_horizon):
     out = plans.prepare_abcd_data(
         activities, emissions, start_year=start_year, time_horizon=time_horizon
     )
-    keys = ["company_id", "ald_business_unit", "ald_production_unit"]
-    return {"abcd_stress_test_input": plans.first_year_positive(out, keys)}
+    return {"abcd_stress_test_input": out}
 
 
 def _financial(eikon, tree, abcd, **_):

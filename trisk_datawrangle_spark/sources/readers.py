@@ -11,6 +11,7 @@ pushdown then reach the scan for free (check ``PushedFilters`` /
 from __future__ import annotations
 
 import json
+import time
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -330,6 +331,16 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(path)
 
 
+def _await_running_tasks(spark: SparkSession) -> None:
+    """Wait, for at most 10 s, until no executor runs a task."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline and any(
+        e.numRunningTasks() for e in tracker.getExecutorInfos()
+    ):
+        time.sleep(0.02)
+
+
 def write_output(
     df: DataFrame,
     path: str,
@@ -412,6 +423,9 @@ def write_output(
         finally:
             stream.close()
     except BaseException:
+        # a failed job's killed tasks may still be writing into the
+        # staging directory: let them end before deleting it
+        _await_running_tasks(spark)
         fs.delete(staged, True)
         raise
     swap_in(spark, path)
