@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.test_run_workflow import staged_dirs  # noqa: F401  (fixture)
+from tests.test_sink import jobs_of
 from trisk_datawrangle_spark.sources.readers import load_tables
 
 
@@ -413,19 +414,18 @@ def _exchanges(df) -> tuple[list[str], int]:
 #: inputs (``tests/test_run_workflow.staged_dirs``): its shuffles'
 #: partitionings and the most broadcasts it may plan. The
 #: scenario-side stages shuffle their rows once, on the stage's common
-#: key prefix (scenarios also aggregates the tiny sector lookup before
-#: broadcasting it); abcd once on company_id and once for the
-#: emission-factor mean window.
-#: financial shuffles the pairs and eikon on company_id, then the
-#: layer rollup and its one-row gather; its broadcasts are the
+#: key prefix; abcd once on company_id and once for the
+#: emission-factor mean window. financial shuffles the pairs and
+#: eikon on company_id, then the layer rollup; its broadcasts are the
 #: medians, the ownership edges, the parent rows and the layers.
-#: trisk_v2's shuffles are the price dedup and the carbon mean; its
-#: broadcasts the common (scenario, geography) pairs and the three
-#: dimension tables.
+#: scenarios_data shuffles nothing: its broadcasts are the common
+#: (scenario, geography) pairs and the three dimension tables. A tiny
+#: dimension aggregated before its broadcast (scenarios' required
+#: technologies per sector, financial's one-row layer gather,
+#: scenarios_data's price dedup and carbon mean) is aggregated in one
+#: task, after a ``coalesce(1)``, so it plans no exchange of its own.
 STAGE_EXCHANGES = {
-    "Scenarios_AnalysisInput": (
-        ["ald_sector", "scenario, scenario_geography, sector"], 1
-    ),
+    "Scenarios_AnalysisInput": (["scenario, scenario_geography, sector"], 1),
     "prewrangled_capacity_factors": (
         ["scenario, scenario_geography, ald_business_unit"], 0
     ),
@@ -438,7 +438,6 @@ STAGE_EXCHANGES = {
     ),
     "prewrangled_financial_data_stress_test": (
         [
-            "SinglePartition",
             "ald_sector, region, spark_grouping_id",
             "company_id",
             "company_id",
@@ -446,10 +445,7 @@ STAGE_EXCHANGES = {
         4,
     ),
     "assets_data": (["asset_id"], 1),
-    "scenarios_data": (
-        ["scenario, ald_sector, year, price", "scenario, scenario_geography, year"],
-        4,
-    ),
+    "scenarios_data": ([], 4),
 }
 
 
@@ -461,20 +457,29 @@ def test_abcd_and_financial_shuffle_once_and_leak_nothing(
     shuffles its rows on company_id and once more for its
     emission-factor mean, each scenario-side stage once on its common
     key prefix — so a second pass over a stage's rows or an operator
-    that drops the partitioning shows as a new exchange. No stage
-    leaves a cached relation or a persisted RDD behind (compared
-    before and after: the test session is shared)."""
+    that drops the partitioning shows as a new exchange. No read of a
+    raw input or a written table runs a job: each schema is pinned
+    from a footer or a manifest. No stage leaves a cached relation or
+    a persisted RDD behind (compared before and after: the test
+    session is shared)."""
+    from trisk_datawrangle_spark import run_workflow
     from trisk_datawrangle_spark.run_workflow import ALL_STAGES, run_stage
     from trisk_datawrangle_spark.sources import readers
 
-    written = {}
-    write = readers.write_output
+    written, read_jobs = {}, []
+    write, read = readers.write_output, run_workflow._read
 
     def keep(df, path, **kwargs):
         written[path.rsplit("/", 1)[-1].removesuffix(".parquet")] = df
         return write(df, path, **kwargs)
 
+    def counted(*args):
+        df, jobs = jobs_of(spark, read, *args)
+        read_jobs.extend(jobs)
+        return df
+
     monkeypatch.setattr(readers, "write_output", keep)
+    monkeypatch.setattr(run_workflow, "_read", counted)
     cache = spark._jsparkSession.sharedState().cacheManager()
 
     def persisted() -> set[int]:
@@ -487,6 +492,7 @@ def test_abcd_and_financial_shuffle_once_and_leak_nothing(
         run_stage(spark, stage, inp, str(tmp_path), start_year=2022, time_horizon=3)
     assert cache.numCachedEntries() <= cached
     assert persisted() <= rdds, persisted() - rdds
+    assert read_jobs == []
 
     assert written.keys() == STAGE_EXCHANGES.keys()
     for table, df in written.items():

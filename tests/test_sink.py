@@ -2,13 +2,20 @@
 published whole, after its gates pass, with a manifest that carries
 its read schema; a failed write or gate leaves the previous table and
 no staging directory; an interrupted publish is repaired on the next
-write."""
+write. Its reader ``readers.read_table`` pins a raw input's schema
+from its parquet footers, without a Spark job."""
 
 from __future__ import annotations
 
+import datetime
 import os
+import re
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from trisk_datawrangle_spark.operators.quality import DataQualityError
@@ -116,3 +123,103 @@ def test_trash_without_table_is_promoted(spark, tmp_path):
         write_output(spark.range(1), path, gates={"any": F.lit(True)})
     assert _rows(spark, path) == [(i,) for i in range(5)]
     assert _siblings(path) == []
+
+
+def jobs_of(spark, fn, *args):
+    """``fn(*args)`` and the ids of the Spark jobs it ran, found under
+    a job group of its own; the caller's job group is restored."""
+    sc = spark.sparkContext
+    group, before = f"jobs_of-{uuid.uuid4()}", sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", before)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _pyarrow_file(spark, path):
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", None]}), path)
+
+
+def _spark_parts(spark, path):
+    spark.range(12).selectExpr("id", "cast(id AS string) s").repartition(3).write.parquet(path)
+
+
+def _pyarrow_parts(spark, path):
+    # the layout tests/test_determinism._reverse_and_split writes
+    os.makedirs(path)
+    for i in range(3):
+        pq.write_table(
+            pa.table({"k": [i], "v": [i / 2]}), os.path.join(path, f"part-{i}.parquet")
+        )
+
+
+def _hive_parts(spark, path):
+    spark.range(6).selectExpr("id", "id % 2 AS year").write.partitionBy("year").parquet(path)
+
+
+def _tzless_timestamp(spark, path):
+    ts = pa.array([datetime.datetime(2020, 1, 1), None], pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts}), path)
+
+
+@pytest.mark.parametrize(
+    "write",
+    [_pyarrow_file, _spark_parts, _pyarrow_parts, _hive_parts, _tzless_timestamp],
+)
+def test_footer_schema_is_inferred_schema_without_a_job(spark, tmp_path, write):
+    path = str(tmp_path / "in.parquet")
+    write(spark, path)
+    df, jobs = jobs_of(spark, read_table, spark, path)
+    assert jobs == []
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(df.collect(), key=str) == sorted(spark.read.parquet(path).collect(), key=str)
+
+
+def test_footer_schema_follows_session_parquet_settings(spark, tmp_path):
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": [b"x", None]}), path)
+    assert read_table(spark, path).schema["b"].dataType.simpleString() == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        df, jobs = jobs_of(spark, read_table, spark, path)
+        assert jobs == []
+        assert df.schema == spark.read.parquet(path).schema
+        assert df.schema["b"].dataType.simpleString() == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+
+
+def _disagreeing_parts(path):
+    os.makedirs(path)
+    pq.write_table(pa.table({"a": [1]}), os.path.join(path, "p0.parquet"))
+    pq.write_table(pa.table({"a": [1.5]}), os.path.join(path, "p1.parquet"))
+
+
+def _partition_column_in_data(path):
+    # the files hold ``year`` as a string, discovery types it int
+    os.makedirs(os.path.join(path, "year=2020"))
+    pq.write_table(
+        pa.table({"a": [1], "year": ["2020"]}),
+        os.path.join(path, "year=2020", "p0.parquet"),
+    )
+
+
+@pytest.mark.parametrize("write", [_disagreeing_parts, _partition_column_in_data])
+def test_undecided_footers_fall_back_to_inference(spark, tmp_path, write):
+    path = str(tmp_path / "in.parquet")
+    write(path)
+    df, jobs = jobs_of(spark, read_table, spark, path)
+    assert jobs  # the inference job decided
+    assert df.schema == spark.read.parquet(path).schema
+
+
+def test_unreadable_table_fails_as_spark_fails(spark, tmp_path):
+    missing = str(tmp_path / "missing.parquet")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_table(spark, missing)
+    junk = tmp_path / "junk.parquet"
+    junk.write_text("not a parquet file")
+    with pytest.raises(Exception, match=re.escape(str(junk))):
+        read_table(spark, str(junk))

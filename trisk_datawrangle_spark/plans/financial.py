@@ -18,7 +18,8 @@ onto the medians, so eikon is read once. Two steps need other
 companies' rows, and both are broadcast: the company-grain firm
 table, for the parent lookup, and the three imputation layers, one
 ``rollup`` aggregate gathered into a one-row map whose keys
-``grouping_id()`` tells apart. Nothing is cached.
+``grouping_id()`` tells apart. The gather runs in one task, so it
+adds no shuffle to the rollup's. Nothing is cached.
 """
 
 from __future__ import annotations
@@ -86,7 +87,10 @@ def layered_averages(
     (``grouping_id()``, sector, region) to the layer's medians, where
     the id is 0 for a (sector, region) layer, 1 for a sector and 3 for
     the global row, so a NULL region cannot pass for a sector. Small
-    enough to broadcast at any input scale."""
+    enough to broadcast at any input scale. The rollup's input is
+    company-grain, so it shuffles; its few dozen rows are then
+    gathered in one task (``coalesce(1)``), which plans no
+    ``SinglePartition`` shuffle: the broadcast's job computes it."""
     rolled = firm_level.rollup("ald_sector", "region").agg(
         F.grouping_id().alias("layer"),
         F.count(F.lit(1)).alias("__n"),
@@ -99,7 +103,7 @@ def layered_averages(
         _layer_key(F.col("layer"), F.col("ald_sector"), F.col("region")),
         F.struct(*indicators),
     )
-    return rolled.agg(
+    return rolled.coalesce(1).agg(
         F.map_from_entries(F.collect_list(F.when(kept, entry))).alias("__layers")
     )
 

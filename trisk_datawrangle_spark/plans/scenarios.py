@@ -19,8 +19,8 @@ sector). Every later step is keyed by a superset of those columns, so
 none of them exchanges again: the year spine is a ``groupBy`` and an
 ``inline`` (``operators/spine.py``), the interpolation, market shares,
 cross-source dedup and sector-completeness test are windows. Only the
-lookup's required technologies per sector, a tiny aggregate, are
-broadcast onto the rows.
+lookup's required technologies per sector, a tiny aggregate taken in
+one task, are broadcast onto the rows.
 """
 
 from __future__ import annotations
@@ -117,8 +117,10 @@ def remove_incomplete_sectors(
     required set is broadcast onto its rows and compared with the
     set a window collects over the (scenario, geography, sector)
     group. A group with a NULL key is kept: key equality never
-    singles it out, as in an anti-join on the group keys."""
-    required = sector_tech_lookup.groupBy("ald_sector").agg(
+    singles it out, as in an anti-join on the group keys. The lookup
+    is tiny, so its required sets are aggregated in one task
+    (``coalesce(1)``) by the broadcast's job, not shuffled first."""
+    required = sector_tech_lookup.coalesce(1).groupBy("ald_sector").agg(
         F.collect_set("ald_business_unit").alias("__required")
     )
     group = ["scenario", "scenario_geography", "ald_sector"]

@@ -91,7 +91,10 @@ def assemble_scenarios_data(
     """scenarios_data (run_workflow.R:162-268): pathway × capacity
     factor × price on conformed keys; provider prefix from the
     scenario name (F8, :215-217). All right sides are broadcast
-    dimensions."""
+    dimensions; the price dedup and the carbon mean each run in one
+    task (``coalesce(1)``, as in :func:`align_to_common_scenarios`),
+    so the stage plans no shuffle: each broadcast's job computes its
+    side."""
     out = scenarios.join(
         F.broadcast(
             capacity_factors.select(
@@ -116,7 +119,7 @@ def assemble_scenarios_data(
     if "ald_business_unit" in p.columns:
         price_keys.append("ald_business_unit")
     price_keys.append("year")
-    p = p.select(*price_keys, "price").distinct()
+    p = p.select(*price_keys, "price").coalesce(1).distinct()
     out = out.join(F.broadcast(p), price_keys, "inner")
     if carbon is not None:
         # the carbon table is keyed by (model, scenario, geography,
@@ -125,13 +128,16 @@ def assemble_scenarios_data(
         # scenarios row out N×. Reduce to one row per join key (mean
         # across models/variables) and conform the NGFS geography
         # vocabulary ('World') to the scenario tables' 'Global' first.
+        # The mean is a double sum, so it depends on the order its
+        # rows arrive in, here one task's file order (ROADMAP item 2
+        # audits the double aggregations).
         conformed = carbon.withColumn(
             "scenario_geography",
             F.when(
                 F.col("scenario_geography") == "World", F.lit("Global")
             ).otherwise(F.col("scenario_geography")),
         )
-        reduced = conformed.groupBy(
+        reduced = conformed.coalesce(1).groupBy(
             "scenario", "scenario_geography", "year"
         ).agg(F.avg("carbon_tax").alias("carbon_tax"))
         out = out.join(

@@ -5,7 +5,10 @@ Contract from the reference: schemas are *pinned*, never inferred —
 (run_prepare_Scenarios_AnalysisInput.R:41-49). Here every reader takes
 an explicit schema; with parquet, column pruning and predicate
 pushdown then reach the scan for free (check ``PushedFilters`` /
-``ReadSchema`` in ``.explain``).
+``ReadSchema`` in ``.explain``). The workflow's parquet reads
+(:func:`read_table`) pin theirs too: a published table's from its
+``_manifest.json``, a raw input's from its parquet footers, read on
+the driver, so no read runs Spark's schema-inference job.
 """
 
 from __future__ import annotations
@@ -321,14 +324,85 @@ def read_manifest(spark: SparkSession, path: str) -> dict | None:
         stream.close()
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The data columns of the parquet table at ``path``, from the
+    footers of its data files, read on the driver.
+
+    Each footer goes through the converter Spark's inference job runs
+    (``ParquetFileFormat.readSchemaFromFooter`` with the session's
+    ``ParquetToSparkSchemaConverter``), so the session's parquet
+    settings (``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ``, ``nanosAsLong``) type it as inference
+    would. A directory's data files are every file below it whose name
+    does not start with ``_`` or ``.``, in ``k=v`` partition
+    directories too; partition columns are left to discovery.
+
+    None where only inference can decide: schema merging is on, the
+    path does not exist (or is a glob), there is no data file, a
+    footer does not read, the footers disagree, or a data column is
+    named like a partition column (inference types it as discovery
+    does, a pinned schema would not)."""
+    from py4j.protocol import Py4JJavaError
+
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    fs, root = _hadoop_path(spark, path)
+    if not fs.exists(root):
+        return None
+    files, partitions, dirs = [], set(), [fs.getFileStatus(root)]
+    while dirs:
+        st = dirs.pop()
+        if not st.isDirectory():
+            files.append(st)
+            continue
+        for child in fs.listStatus(st.getPath()):
+            name = child.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if child.isDirectory():
+                partitions.add(name.split("=", 1)[0].lower())
+            dirs.append(child)
+    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hadoop = jvm.org.apache.parquet.hadoop
+    converter = spark_parquet.ParquetToSparkSchemaConverter(state.conf())
+    conf = state.newHadoopConf()
+    skip = jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    schemas = set()
+    for st in files:
+        try:
+            meta = spark_parquet.ParquetFooterReader.readFooter(
+                hadoop.util.HadoopInputFile.fromStatus(st, conf), skip
+            )
+        except Py4JJavaError:
+            return None
+        footer = hadoop.Footer(st.getPath(), meta)
+        schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+        schemas.add(schema.json())
+    if len(schemas) != 1:
+        return None
+    schema = StructType.fromJson(json.loads(schemas.pop()))
+    if any(f.name.lower() in partitions for f in schema):
+        return None
+    return schema
+
+
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read of a table; one written by :func:`write_output`
-    is read with its manifest's schema, which spares the
-    schema-inference job."""
+    """Parquet read of a table with a pinned schema, so the read runs
+    no schema-inference job: a table written by :func:`write_output`
+    is read with its manifest's schema, any other with its footer
+    schema (:func:`_footer_schema`). Only where the footers cannot
+    decide does it fall back to ``spark.read.parquet``, whose
+    inference job also raises Spark's own errors: PATH_NOT_FOUND for
+    a missing path, or the unreadable file named."""
     manifest = read_manifest(spark, path)
-    if manifest is None:
+    if manifest is not None:
+        schema = StructType.fromJson(manifest["schema"])
+    else:
+        schema = _footer_schema(spark, path)
+    if schema is None:
         return spark.read.parquet(path)
-    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _await_running_tasks(spark: SparkSession) -> None:
